@@ -22,10 +22,10 @@ object ProfileBm25 {
       if (round == 0) docs.count() // warm scan
       time("ingest b0")(streaming.Bm25Index.ingestBatch(
         docs.filter(col("doc_id") % 2 === 0), idx, "doc_id", "text", batchId = 0L,
-        nShards = nSh))
+        nShards = Sizing.Fixed(nSh)))
       time("ingest b1")(streaming.Bm25Index.ingestBatch(
         docs.filter(col("doc_id") % 2 === 1), idx, "doc_id", "text", batchId = 1L,
-        nShards = nSh))
+        nShards = Sizing.Fixed(nSh)))
       time("purge")(streaming.Bm25Index.purge(s, idx,
         docs.select(col("doc_id")).filter(pmod(col("doc_id"), lit(9)) === 0), "doc_id"))
       val queries = Seq(

@@ -2036,7 +2036,7 @@ object SparkEntry {
         .filter(pmod(col("doc_id"), lit(7)) === 0)
         .select(col("doc_id"), col("lang"), col("text"))
       graft.streaming.Streaming.ingestBatch(batch, corpus, "doc_id", Seq("text"),
-        sidecarMaxBytes = Some(0L)): Unit
+        sidecarMaxBytes = 0L): Unit
       val tomb = batch.select(col("doc_id")).filter(pmod(col("doc_id"), lit(14)) === 0)
       graft.streaming.Streaming.purgeCorpus(s, corpus, tomb, "doc_id", Seq("text")): Unit
       s.read.parquet(corpus).select(col("doc_id"), col("lang"))
@@ -2057,7 +2057,7 @@ object SparkEntry {
         .filter(pmod(col("doc_id"), lit(5)) === 0)
         .select(col("doc_id"), col("lang"), col("text"))
       graft.streaming.Streaming.ingestBatch(batch, corpus, "doc_id", Seq("text"),
-        sidecarMaxBytes = Some(0L)): Unit
+        sidecarMaxBytes = 0L): Unit
       Tomb.requestPurge(corpus,
         batch.filter(pmod(col("doc_id"), lit(15)) === 0).select(col("doc_id")),
         "doc_id"): Unit
@@ -2096,10 +2096,10 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       streaming.Bm25Index.ingestBatch(
         docs.filter(pmod(col("doc_id"), lit(10)) === 0), idx, "doc_id", "text",
-        batchId = 0L, nShards = 8)
+        batchId = 0L, nShards = Sizing.Fixed(8))
       streaming.Bm25Index.ingestBatch(
         docs.filter(pmod(col("doc_id"), lit(10)) === 5), idx, "doc_id", "text",
-        batchId = 1L, nShards = 8)
+        batchId = 1L, nShards = Sizing.Fixed(8))
       streaming.Bm25Index.fsck(s, idx)
         .select(col("batch_id"),
           col("committed").cast("long").as("committed"),
@@ -2132,7 +2132,7 @@ object SparkEntry {
         .filter(pmod(col("doc_id"), lit(6)) === 0)
         .select(col("doc_id"), col("lang"), col("text"))
       graft.streaming.Streaming.ingestBatch(batch, corpus, "doc_id", Seq("text"),
-        sidecarMaxBytes = Some(0L)): Unit
+        sidecarMaxBytes = 0L): Unit
       // the index holds exactly the gated corpus; materialized because the
       // flush below rewrites the very files this frame reads
       val admitted = Checkpointing.materialize(s.read.parquet(corpus))

@@ -51,8 +51,9 @@ object Dedup {
     // scale-adaptive, not raw defaultParallelism: the explicit count is
     // still pinned (exempt from AQE coalescing, so the downstream kernels
     // keep their parallelism), but a KB-scale frame no longer shuffles
-    // into one near-empty partition per slot (Ops.kernelWidth rationale)
-    val target = graft.operators.Ops.kernelWidth(df.select(col(idCol), col(contentCol)))
+    // into one near-empty partition per slot (Sizing.VectorKernelBytes)
+    val target = graft.Sizing.kernelWidth(
+      df.select(col(idCol), col(contentCol)), graft.Sizing.VectorKernelBytes)
     df.select(col(idCol), col(contentCol))
       .withColumn("__digest", md5(to_json(struct(col(contentCol)))))
       .repartition(target, col("__digest"))

@@ -165,74 +165,28 @@ object Ops {
   }
 
   /** Parallelism guard for CPU-dense per-row kernels (MinHash signatures,
-    * cosine scans, tokenization): if the input plan has fewer partitions than
-    * the cluster has slots, round-robin repartition up to `defaultParallelism`
-    * so the compute actually fans out. At 100 TB the scan already carries
-    * thousands of file-split partitions and this is a no-op — the guard only
-    * fires for few-partition inputs (a single small file, a collapsed
-    * post-AQE stage), where the one extra shuffle of the narrow projected
-    * input is trivially cheaper than running the kernel on one core.
+    * cosine scans): if the input plan has fewer partitions than the
+    * kernel's width ([[graft.Sizing.kernelWidth]] at the vector-kernel byte
+    * target), round-robin repartition up to it so the compute fans out. At
+    * 100 TB the scan already carries thousands of file-split partitions and
+    * this is a no-op — the guard only fires for few-partition inputs (a
+    * single small file, a collapsed post-AQE stage), where the one extra
+    * shuffle of the narrow projected input is cheaper than running the
+    * kernel on one core.
     */
-  /** Scale-adaptive kernel width: how many partitions a CPU-dense kernel
-    * over `df` should fan out to. `defaultParallelism` capped by a
-    * per-partition input-byte floor (`spark.graft.spread.minPartitionBytes`,
-    * default 64 KiB) against the optimizer's size estimate for the plan.
-    * Rationale (optimization guide §2, r18 scaling data): the fan-out
-    * guard exists so a single-file input does not serialize a MinHash or
-    * cosine kernel on one core, but fanning a KB-scale frame to EVERY slot
-    * inverts — the r18 driver measured the 32-core suite losing to 8 cores
-    * on exactly the spread-fed queries, because 32 near-empty shuffle
-    * partitions cost more scheduling than the kernel saves. At 100 TB the
-    * estimate saturates the slot cap and this is exactly the old
-    * behavior; the floor only bites tiny frames. The floor is deliberately
-    * small (kernels here cost orders of magnitude more CPU per byte than a
-    * scan — a few hundred KB of text is real work), and conf-tunable per
-    * deployment. Estimates are file-size-based for scans and conservative
-    * (over-estimate → more partitions → the old behavior), which is the
-    * safe direction.
-    */
-  private[graft] def kernelWidth(df: DataFrame,
-      confKey: String = SpreadMinBytesKey,
-      defaultMinBytes: Long = SpreadMinBytesDefault): Int = {
-    val spark = df.sparkSession
-    val slots = spark.sparkContext.defaultParallelism
-    // default measured on the r19 rig: {1, 64K, 128K, 256K, 1M, 4M} byte
-    // floors over the 12 spread-fed queries at sf0.1/32 cores — 64 KiB won
-    // (17.7 s → 13.4 s, no query worse than the old raw-slots behavior)
-    val minBytes = spark.conf.get(confKey, defaultMinBytes.toString).toLong
-    if (minBytes <= 1L) slots
-    else {
-      val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (est <= 0) slots
-      else ((est + minBytes - 1) / minBytes).min(BigInt(slots)).max(BigInt(1)).toInt
-    }
-  }
-
-  private[graft] val SpreadMinBytesKey = "spark.graft.spread.minPartitionBytes"
-  private[graft] val SpreadMinBytesDefault: Long = 64L << 10
-  private[graft] val SpreadTextMinBytesKey = "spark.graft.spread.text.minPartitionBytes"
-  private[graft] val SpreadTextMinBytesDefault: Long = 16L << 10
-
   def spread(df: DataFrame): DataFrame =
-    spreadWith(df, SpreadMinBytesKey, SpreadMinBytesDefault)
+    spreadWith(df, graft.Sizing.VectorKernelBytes)
 
-  /** [[spread]] with the TEXT-kernel byte floor: tokenize + n-gram/minhash
-    * explode kernels do roughly 4x the per-byte CPU of the vector kernels
-    * (a 5-gram shingle pass regex-splits and hashes every token window),
-    * so the byte floor that keeps a vector kernel's partitions busy
-    * over-serializes a text kernel. Measured on the r19 rig (sf0.1, 32
-    * cores): the 64 KiB floor cost doc_triangles/doc_pagerank ~1.7x (the
-    * 584 KB documents table collapsed their shingle kernel to ~9
-    * partitions) while 16 KiB restored them and kept the small-frame
-    * scheduling win everywhere else. Same 100 TB behavior: estimates
-    * saturate the slot cap either way.
+  /** [[spread]] at the text-kernel byte target
+    * ([[graft.Sizing.TextKernelBytes]]): tokenize and n-gram/minhash
+    * explode kernels do several times the per-byte CPU of a vector kernel.
     */
   def spreadText(df: DataFrame): DataFrame =
-    spreadWith(df, SpreadTextMinBytesKey, SpreadTextMinBytesDefault)
+    spreadWith(df, graft.Sizing.TextKernelBytes)
 
-  private def spreadWith(df: DataFrame, confKey: String, defaultMinBytes: Long): DataFrame = {
+  private def spreadWith(df: DataFrame, bytesPerPartition: Long): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical
-    val target = kernelWidth(df, confKey, defaultMinBytes)
+    val target = graft.Sizing.kernelWidth(df, bytesPerPartition)
     // a plan that already shuffles gets its parallelism from the shuffle
     // (spark.sql.shuffle.partitions / an explicit repartition / AQE); only
     // narrow scan-shaped plans need the guard. This matters because the

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Sizing
 import graft.operators.{Retrieval, TextAnalysis}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -56,53 +57,31 @@ object Bm25Index {
 
   val DefaultShards = 64
 
-  /** Sentinel for [[ingestBatch]]/[[build]]: derive the shard modulus from
-    * the ingested frame's size instead of a caller constant. One shard per
-    * `spark.graft.bm25.shardTargetBytes` (default 16 GiB) of the
-    * optimizer's input estimate, clamped to [1, 16384]: a 100 TB corpus
-    * lands in the thousands of shards (the directory-pruning granularity a
-    * query's term set wants), a test corpus lands at 1 — the same rule at
-    * every scale, not a per-query constant. Only the FIRST batch derives
-    * (the modulus is an index constant; later batches ingest under the
-    * meta), so AutoShards fits one-shot corpus-sized ingests — a stream
-    * whose first micro-batch is not representative of the final index
-    * should size explicitly.
+  /** Derive the shard modulus from the ingested frame's size instead of a
+    * caller constant: one shard per [[graft.Sizing.Bm25ShardBytes]] of the
+    * optimizer's input estimate, clamped to [1, [[graft.Sizing.MaxShards]]].
+    * Only the FIRST batch derives (the modulus is an index constant; later
+    * batches ingest under the meta), so auto sharding fits one-shot
+    * corpus-sized ingests — a stream whose first micro-batch is not
+    * representative of the final index should size explicitly.
     */
-  val AutoShards = 0
+  val AutoShards: Sizing.Count = Sizing.Auto
 
-  /** Derive the per-shard WRITE fan-out from the batch estimate: shard
-    * count is the index's pruning granularity (a layout constant), but the
+  private[graft] def deriveShards(estimateBytes: BigInt): Int =
+    Sizing.count(estimateBytes, Sizing.Bm25ShardBytes, Sizing.MaxShards)
+
+  /** Writers per shard under [[graft.Sizing.Auto]] `subSplits`: shard count
+    * is the index's pruning granularity (a layout constant), but the
     * postings sort+write's parallelism is `mod * subSplits` — at a small
     * derived mod (a test corpus lands at 1 shard) a fixed subSplits = 1
     * collapses the whole tokenize+sort+write onto ONE task (the
-    * `repartition(__tshard)` hash of a constant). Auto mode sizes the
-    * fan-out like the text-kernel spread floor (the postings pass IS a
-    * tokenize kernel): ceil(min(slots, est/16 KiB) / mod) writers per
-    * shard. At 100 TB mod alone exceeds the slot count and this derives 1
-    * — exactly the old one-file-per-shard layout.
+    * `repartition(__tshard)` hash of a constant). The postings pass IS a
+    * tokenize kernel, so the fan-out is the text-kernel width split over
+    * the shards. At 100 TB mod alone exceeds the slot count and this
+    * derives 1 — the one-file-per-shard layout.
     */
-  val AutoSplits = 0
-
-  private def deriveShards(docs: DataFrame): Int = {
-    val target = docs.sparkSession.conf.get(
-      "spark.graft.bm25.shardTargetBytes", (16L << 30).toString).toLong
-    val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (target <= 0 || est <= 0) DefaultShards
-    else ((est + target - 1) / target).min(BigInt(16384)).max(BigInt(1)).toInt
-  }
-
-  private def deriveSplits(docs: DataFrame, mod: Int): Int = {
-    val spark = docs.sparkSession
-    val slots = spark.sparkContext.defaultParallelism
-    val floor = spark.conf.get(
-      graft.operators.Ops.SpreadTextMinBytesKey,
-      graft.operators.Ops.SpreadTextMinBytesDefault.toString).toLong
-    val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val width =
-      if (est <= 0 || floor <= 1) slots
-      else ((est + floor - 1) / floor).min(BigInt(slots)).max(BigInt(1)).toInt
-    math.max(1, (width + mod - 1) / mod)
-  }
+  private[graft] def deriveSplits(textWidth: Int, mod: Int): Int =
+    Sizing.count(textWidth, mod, textWidth)
 
   private val Magic = 0x42493235 // "BI25"
 
@@ -170,7 +149,7 @@ object Bm25Index {
       .groupBy(_.getPath.getParent.getName.split("=", 2)(1).toInt)
       .toSeq.flatMap { case (shard, fl) =>
         val bytes = fl.map(_.getLen).sum
-        Seq(lit(shard), lit(math.max(1L, (bytes + tierBytes - 1) / tierBytes)))
+        Seq(lit(shard), lit(Sizing.count(bytes, tierBytes, Int.MaxValue).toLong))
       }: _*)
     transform(spark.read.option("basePath", pDir.toString)
         .schema(PostingsSchema)
@@ -264,9 +243,11 @@ object Bm25Index {
 
   /** Ingest one batch of `(idCol, textCol)` documents. A committed
     * batchId skips (marker); a crash-torn or redelivered append is
-    * absorbed read-side (see class doc). `subSplits` bounds the
-    * files-per-shard of one append: micro-batches use 1; a one-shot
-    * [[build]] spreads each shard over several writers.
+    * absorbed read-side (see class doc). `nShards` is the modulus a NEW
+    * index is created with ([[AutoShards]] derives it); an existing index
+    * keeps its meta's. `subSplits` bounds the files-per-shard of one
+    * append: by default derived from the batch size ([[deriveSplits]]); a
+    * one-shot [[build]] spreads each shard over several writers.
     *
     * CONTRACT: batches must PARTITION the corpus. Re-ingesting a document
     * under a DIFFERENT batchId is not a redelivery — its rows differ in
@@ -276,25 +257,23 @@ object Bm25Index {
     * batch committed, bitwise-duplicate rows when it tore).
     */
   def ingestBatch(docs: DataFrame, indexDir: String, idCol: String, textCol: String,
-      batchId: Long, nShards: Int = DefaultShards, subSplits: Int = AutoSplits): Unit = {
-    require((nShards >= 1 || nShards == AutoShards) &&
-      (subSplits >= 1 || subSplits == AutoSplits),
-      "nShards must be positive (or AutoShards) and subSplits positive (or AutoSplits)")
+      batchId: Long, nShards: Sizing.Count = Sizing.Fixed(DefaultShards),
+      subSplits: Sizing.Count = Sizing.Auto): Unit = {
     val spark = docs.sparkSession
     val (fs, dir) = fileSystem(spark, indexDir)
     // the modulus is an index constant: the first batch fixes it (deriving
-    // it from the batch size under AutoShards), later batches must ingest
-    // under it (a parameter mismatch fails fast rather than silently
-    // splitting terms across incompatible shards; AutoShards always
-    // accepts the meta)
+    // it from the batch size under Auto), later batches must ingest under
+    // it (an explicit mismatch fails fast rather than silently splitting
+    // terms across incompatible shards; Auto always accepts the meta)
     val mod = readMeta(fs, dir) match {
       case Some(m) =>
-        if (m != nShards && nShards != DefaultShards && nShards != AutoShards)
-          throw new graft.GraftDataError(
-            s"BM25 index at $indexDir is sharded mod $m; cannot ingest mod $nShards")
-        m
+        nShards match {
+          case Sizing.Fixed(n) if n != m => throw new graft.GraftDataError(
+            s"BM25 index at $indexDir is sharded mod $m; cannot ingest mod $n")
+          case _ => m
+        }
       case None =>
-        val n = if (nShards == AutoShards) deriveShards(docs) else nShards
+        val n = nShards.orElse(deriveShards(Sizing.estimate(docs)))
         fs.mkdirs(dir)
         writeMeta(fs, dir, n)
         n
@@ -332,7 +311,8 @@ object Bm25Index {
       // partitionBy fans out one file per input partition per shard); the
       // salt mixes all bits so subSplits never collapses (see
       // KeyTableSidecar.clusterByShard)
-      val effSplits = if (subSplits == AutoSplits) deriveSplits(docs, mod) else subSplits
+      val effSplits = subSplits.orElse(
+        deriveSplits(Sizing.kernelWidth(docs, Sizing.TextKernelBytes), mod))
       val clustered =
         if (effSplits == 1) postings.repartition(col("__tshard"))
         else postings.repartition(col("__tshard"),
@@ -370,13 +350,14 @@ object Bm25Index {
     * batch refuses a build rather than double-counting the overlap.
     */
   def build(docs: DataFrame, indexDir: String, idCol: String, textCol: String,
-      nShards: Int = DefaultShards): Unit = {
+      nShards: Sizing.Count = Sizing.Fixed(DefaultShards)): Unit = {
     val (fs, dir) = fileSystem(docs.sparkSession, indexDir)
     if (committedMarkers(fs, dir).nonEmpty)
       throw new graft.GraftDataError(
         s"build() is one-shot: the index at $indexDir already has committed " +
           "batches — continue with ingestBatch/stream instead")
-    ingestBatch(docs, indexDir, idCol, textCol, batchId = -1L, nShards, subSplits = 8)
+    ingestBatch(docs, indexDir, idCol, textCol, batchId = -1L, nShards,
+      subSplits = Sizing.Fixed(8))
   }
 
   /** The stream form; `checkpointDir` keeps batchIds stable across
@@ -388,7 +369,7 @@ object Bm25Index {
     * documents. A [[build]]'s reserved -1 marker never collides.
     */
   def stream(docs: DataFrame, indexDir: String, idCol: String, textCol: String,
-      nShards: Int = DefaultShards,
+      nShards: Sizing.Count = Sizing.Fixed(DefaultShards),
       checkpointDir: Option[String] = None): StreamingQuery = {
     val spark = docs.sparkSession
     val (fs, dir) = fileSystem(spark, indexDir)

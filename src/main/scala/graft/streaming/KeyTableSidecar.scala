@@ -16,8 +16,9 @@ final case class KeyTableMeta(nShards: Int, keyCount: Long, filesStamp: String)
 /** The DRIVER-MEMORY-UNBOUNDED sidecar for continuous dedup ingestion: a
   * hash-sharded parquet table of 64-bit probe keys, persisted inside the
   * corpus directory, replacing the single-byte-array bloom
-  * ([[BloomSidecar]]) once a useful-FPR bloom would outgrow
-  * `spark.graft.sidecar.maxBytes`.
+  * ([[BloomSidecar]]) once a useful-FPR bloom would outgrow the gate's
+  * byte budget ([[KeyTableSidecar.DefaultMaxBytes]] unless the caller
+  * passes one).
   *
   * Why a table: the bloom is a PLAN LITERAL — it ships with every task
   * binary and lives whole in the driver, so its size budget is megabytes.
@@ -57,48 +58,22 @@ object KeyTableSidecar {
     */
   val ContentName = "_content_table"
 
-  /** Session conf: byte budget above which ingestion gates switch from the
-    * bloom sidecar to this table form. The bloom is a plan literal, so the
+  /** Default byte budget above which ingestion gates switch from the bloom
+    * sidecar to this table form. The bloom is a plan literal, so the
     * budget bounds driver + per-task-binary memory.
     */
-  val MaxBytesKey = "spark.graft.sidecar.maxBytes"
   val DefaultMaxBytes: Long = 64L * 1024 * 1024
 
-  /** Sentinel: derive a NEW table's shard modulus from its key count
-    * instead of a constant. The modulus is a probe-compat layout constant
-    * once written (the meta carries it), but its VALUE should track the
-    * key bytes it shards: a fixed 64 makes a KB-scale gate pay 64 shard
-    * dirs per append (profiled at ~1.1 s of single-threaded FS commits per
-    * micro-batch on the r19 rig) while a 100 TB corpus wants thousands.
-    * Saturation rebuilds re-derive, so a growing corpus re-shards
-    * amortized-O(log n) times — the same rule at every scale.
+  /** The shard modulus of a NEW table under [[graft.Sizing.Auto]]: the
+    * modulus is a probe-compat layout constant once written (the meta
+    * carries it), but its VALUE tracks the key bytes it shards — ~9 bytes
+    * per persisted 64-bit key (parquet framing included), one shard per
+    * [[graft.Sizing.KeyTableShardBytes]]. Saturation rebuilds re-derive,
+    * so a growing corpus re-shards amortized-O(log n) times.
     */
-  val AutoShards = 0
-  val ShardTargetBytesKey = "spark.graft.sidecar.shardTargetBytes"
-  val DefaultShardTargetBytes: Long = 64L << 20
-
-  /** ~9 bytes per persisted 64-bit key (parquet framing included) against
-    * the shard byte target, clamped to [1, 16384].
-    */
-  def deriveShards(spark: SparkSession, keyCount: Long): Int = {
-    val target = spark.conf.get(
-      ShardTargetBytesKey, DefaultShardTargetBytes.toString).toLong
-    if (target <= 0 || keyCount <= 0) 1
-    else math.min(16384L, math.max(1L, (keyCount * 9L + target - 1) / target)).toInt
-  }
-
-  def maxBytes(spark: SparkSession): Long =
-    spark.conf.getOption(MaxBytesKey).map { v =>
-      val n =
-        try v.toLong
-        catch {
-          case _: NumberFormatException => throw new graft.GraftConfigError(
-            s"$MaxBytesKey must be a byte count, got '$v'")
-        }
-      if (n <= 0) throw new graft.GraftConfigError(
-        s"$MaxBytesKey must be positive, got $n")
-      n
-    }.getOrElse(DefaultMaxBytes)
+  def deriveShards(keyCount: Long): Int =
+    graft.Sizing.count(BigInt(keyCount) * 9, graft.Sizing.KeyTableShardBytes,
+      graft.Sizing.MaxShards)
 
   /** Estimated serialized size of a bloom sized for `keys` items at the
     * aggregate's default FPR (~3% ⇒ ~7.3 bits/key) — the mode-switch
@@ -338,7 +313,7 @@ object KeyTableSidecar {
       .groupBy(_.getPath.getParent.getName.split("=", 2)(1).toInt)
       .map { case (shard, files) =>
         val bytes = files.map(_.getLen).sum
-        shard -> math.max(1L, (bytes + tierBytes - 1) / tierBytes)
+        shard -> graft.Sizing.count(bytes, tierBytes, Int.MaxValue).toLong
       }
     val splitsLookup = map(splitsByShard.toSeq.flatMap { case (shard, n) =>
       Seq(lit(shard), lit(n)) }: _*)

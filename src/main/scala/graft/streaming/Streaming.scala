@@ -434,8 +434,8 @@ object Streaming {
     * negative would admit a duplicate; a false positive only costs the
     * confirm join).
     *
-    * TWO sidecar forms under a byte budget (`sidecarMaxBytes` /
-    * `spark.graft.sidecar.maxBytes`), exactly as in [[ingestNearDupBatch]]:
+    * TWO sidecar forms under a byte budget (`sidecarMaxBytes`), exactly
+    * as in [[ingestNearDupBatch]]:
     * past the budget the content-key bloom (a plan literal, one key per
     * corpus row — driver-unshippable at extreme corpus sizes) becomes the
     * persisted sharded [[KeyTableSidecar]] probed by broadcasting the
@@ -457,7 +457,7 @@ object Streaming {
       corpusDir: String,
       tableName: String,
       bloomName: String,
-      nShards: Int,
+      nShards: graft.Sizing.Count,
       budget: Long,
       minExpectedKeys: Long,
       keysOver: DataFrame => DataFrame,
@@ -469,13 +469,11 @@ object Streaming {
         math.max(minExpectedKeys, 2 * keyCount)) > budget
 
     /** The modulus a NEW table is created with: data-derived under
-      * [[KeyTableSidecar.AutoShards]] (the default), else the explicit
-      * constant. Existing tables keep their meta's modulus.
+      * [[graft.Sizing.Auto]] (the default), else the explicit constant.
+      * Existing tables keep their meta's modulus.
       */
     def newModulus(keyCount: Long): Int =
-      if (nShards == KeyTableSidecar.AutoShards)
-        KeyTableSidecar.deriveShards(spark, keyCount)
-      else nShards
+      nShards.orElse(KeyTableSidecar.deriveShards(keyCount))
 
     /** Rebuild the table sidecar from the corpus (one corpus scan),
       * retiring any bloom sidecar; meta swaps in LAST so a crash
@@ -544,18 +542,17 @@ object Streaming {
       expectedCorpusItems: Long = 1000000L,
       maxSmallFiles: Int = 8,
       minFileBytes: Long = 32L * 1024 * 1024,
-      nShards: Int = KeyTableSidecar.AutoShards,
-      sidecarMaxBytes: Option[Long] = None): IngestStats = {
+      nShards: graft.Sizing.Count = graft.Sizing.Auto,
+      sidecarMaxBytes: Long = KeyTableSidecar.DefaultMaxBytes): IngestStats = {
     val spark = batch.sparkSession
     val target = new org.apache.hadoop.fs.Path(corpusDir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val Dedup = graft.operators.Dedup
     val bloomKey = Dedup.contentBloomKey(contentCols)
-    val budget = sidecarMaxBytes.getOrElse(KeyTableSidecar.maxBytes(spark))
     val TableName = KeyTableSidecar.ContentName
     val gate = SidecarGate(spark, fs, target, corpusDir,
       tableName = TableName, bloomName = BloomSidecar.ContentName,
-      nShards = nShards, budget = budget, minExpectedKeys = expectedCorpusItems,
+      nShards = nShards, budget = sidecarMaxBytes, minExpectedKeys = expectedCorpusItems,
       keysOver = df => df.select(bloomKey.as("__k")),
       corpusKeyCount = _.count(),
       buildBloomBytes = (corpus, expected) => corpus
@@ -829,7 +826,7 @@ object Streaming {
     * under-covers the corpus) are identical to the exact gate's.
     *
     * TWO sidecar forms, chosen by a byte budget (`sidecarMaxBytes`,
-    * defaulting to session conf `spark.graft.sidecar.maxBytes`, 64 MB):
+    * default [[KeyTableSidecar.DefaultMaxBytes]], 64 MB):
     * the bloom is a plan literal — it lives whole in the driver and ships
     * with every task binary, so past the budget (corpusRows × bands keys at
     * a useful FPR) the gate uses the [[KeyTableSidecar]] instead: a
@@ -855,14 +852,13 @@ object Streaming {
       expectedCorpusBandKeys: Long = 1000000L,
       maxSmallFiles: Int = 8,
       minFileBytes: Long = 32L * 1024 * 1024,
-      nShards: Int = KeyTableSidecar.AutoShards,
-      sidecarMaxBytes: Option[Long] = None): IngestStats = {
+      nShards: graft.Sizing.Count = graft.Sizing.Auto,
+      sidecarMaxBytes: Long = KeyTableSidecar.DefaultMaxBytes): IngestStats = {
     val spark = batch.sparkSession
     val target = new org.apache.hadoop.fs.Path(corpusDir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val Dedup = graft.operators.Dedup
     val probeKeys = Dedup.bandProbeKeys(col(textCol), n, numHashes, bands, seed)
-    val budget = sidecarMaxBytes.getOrElse(KeyTableSidecar.maxBytes(spark))
     def bloomOver(df: DataFrame, expected: Long): Array[Byte] =
       df.select(explode(probeKeys).as("__k"))
         .agg(graft.functions.SketchFunctions.bloomFilterAgg(col("__k"), expected))
@@ -871,7 +867,7 @@ object Streaming {
       df.select(explode(probeKeys).as("__k"))
     val gate = SidecarGate(spark, fs, target, corpusDir,
       tableName = KeyTableSidecar.BandName, bloomName = BloomSidecar.BandName,
-      nShards = nShards, budget = budget, minExpectedKeys = expectedCorpusBandKeys,
+      nShards = nShards, budget = sidecarMaxBytes, minExpectedKeys = expectedCorpusBandKeys,
       keysOver = keysOver,
       corpusKeyCount = _.count() * bands,
       buildBloomBytes = (corpus, expected) => bloomOver(corpus, expected))

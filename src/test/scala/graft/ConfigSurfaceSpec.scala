@@ -451,20 +451,6 @@ class ConfigSurfaceSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$root/out_ok").count() == 2)
   }
 
-  test("sidecar byte-budget misconfigurations are typed errors") {
-    import graft.streaming.KeyTableSidecar
-    val key = KeyTableSidecar.MaxBytesKey
-    try {
-      spark.conf.set(key, "not-a-number")
-      intercept[graft.GraftConfigError] { KeyTableSidecar.maxBytes(spark) }
-      spark.conf.set(key, "-5")
-      intercept[graft.GraftConfigError] { KeyTableSidecar.maxBytes(spark) }
-      spark.conf.set(key, "1048576")
-      assert(KeyTableSidecar.maxBytes(spark) == 1048576L)
-    } finally spark.conf.unset(key)
-    assert(KeyTableSidecar.maxBytes(spark) == KeyTableSidecar.DefaultMaxBytes)
-  }
-
   test("drift misconfigurations are typed parse-time errors") {
     def base(body: String) =
       s"""{"source": {"type": "parquet", "path": "/tmp/x"}, "drift": $body}"""

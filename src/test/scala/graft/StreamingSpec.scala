@@ -485,7 +485,7 @@ class StreamingSpec extends SparkTestBase {
     val corpus = java.nio.file.Files.createTempDirectory("graft-ingest-ct").toString + "/corpus"
     val target = new org.apache.hadoop.fs.Path(corpus)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tiny = Some(0L) // every bloom is over budget -> content-key table form
+    val tiny = 0L // every bloom is over budget -> content-key table form
     val first = Seq((1L, "seen one"), (2L, "seen two")).toDF("doc_id", "text")
     val s1 = Streaming.ingestBatch(first, corpus, "doc_id", Seq("text"),
       sidecarMaxBytes = tiny)
@@ -516,7 +516,7 @@ class StreamingSpec extends SparkTestBase {
   test("purgeCorpus forgets tombstoned docs and keeps the table gate live across the purge") {
     import graft.streaming.{BloomSidecar, KeyTableSidecar}
     val corpus = java.nio.file.Files.createTempDirectory("graft-gdpr").toString + "/corpus"
-    val tiny = Some(0L) // content-key table form from batch one
+    val tiny = 0L // content-key table form from batch one
     Streaming.ingestBatch(
       Seq((1L, "erase me"), (2L, "keep me"), (3L, "shared text")).toDF("doc_id", "text"),
       corpus, "doc_id", Seq("text"), sidecarMaxBytes = tiny): Unit
@@ -571,7 +571,7 @@ class StreamingSpec extends SparkTestBase {
     val corpus = java.nio.file.Files.createTempDirectory("graft-ingest-ndt").toString + "/corpus"
     val target = new org.apache.hadoop.fs.Path(corpus)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tiny = Some(0L) // every bloom is over budget -> table form from batch one
+    val tiny = 0L // every bloom is over budget -> table form from batch one
     val first = Seq((1L, words("a", 40)), (2L, words("b", 40))).toDF("doc_id", "text")
     val s1 = Streaming.ingestNearDupBatch(first, corpus, "doc_id", "text",
       sidecarMaxBytes = tiny)
@@ -799,7 +799,7 @@ class StreamingSpec extends SparkTestBase {
     // first, saturates on the third admitted pair
     def ingest(docs: Seq[(Long, String)], budget: Long) =
       Streaming.ingestNearDupBatch(docs.toDF("doc_id", "text"), corpus, "doc_id", "text",
-        expectedCorpusBandKeys = 64L, sidecarMaxBytes = Some(budget))
+        expectedCorpusBandKeys = 64L, sidecarMaxBytes = budget)
     val big = 64L * 1024 * 1024
     ingest(Seq((1L, words("a", 40)), (2L, words("b", 40))), big)
     assert(BloomSidecar.read(fs, target, BloomSidecar.BandName).isDefined, "bloom form first")
@@ -1223,10 +1223,17 @@ class StreamingSpec extends SparkTestBase {
       "redelivered rows must dedupe read-side, not double tf/df")
     // one-shot build, same answer; modulus is fixed at creation
     val idx2 = root + "/idx2"
-    Bm25Index.build(docs, idx2, "doc_id", "text", nShards = 8)
+    Bm25Index.build(docs, idx2, "doc_id", "text", nShards = Sizing.Fixed(8))
     assert(rows(Bm25Index.topK(spark, idx2, queries, k = 10)) == adHoc)
     intercept[graft.GraftDataError] {
-      Bm25Index.ingestBatch(docs, idx2, "doc_id", "text", batchId = 9L, nShards = 16)
+      Bm25Index.ingestBatch(docs, idx2, "doc_id", "text", batchId = 9L,
+        nShards = Sizing.Fixed(16))
+    }
+    // an explicit modulus equal to the default is no less explicit: 64
+    // against the meta's 8 must fail too, not silently ingest mod 8
+    intercept[graft.GraftDataError] {
+      Bm25Index.ingestBatch(docs, idx2, "doc_id", "text", batchId = 9L,
+        nShards = Sizing.Fixed(Bm25Index.DefaultShards))
     }
     // no index / no matching terms degrade typed or empty, never NPE
     intercept[graft.GraftDataError] { Bm25Index.topK(spark, root + "/nope", queries, 5) }
@@ -1261,24 +1268,33 @@ class StreamingSpec extends SparkTestBase {
     val shardDirs = fs.listStatus(new org.apache.hadoop.fs.Path(idx, "postings"))
       .filter(_.getPath.getName.startsWith("__tshard=")).length
     assert(shardDirs == 1, s"KB-scale frame must derive 1 shard, got $shardDirs")
-    // a smaller bytes-per-shard target derives more shards — same scores
-    val idx2 = root + "/auto2"
-    spark.conf.set("spark.graft.bm25.shardTargetBytes", "64")
-    try {
-      Bm25Index.ingestBatch(docs, idx2, "doc_id", "text",
-        batchId = 0L, nShards = Bm25Index.AutoShards)
-      val shards2 = fs.listStatus(new org.apache.hadoop.fs.Path(idx2, "postings"))
-        .filter(_.getPath.getName.startsWith("__tshard=")).length
-      assert(shards2 > 1, s"64-byte target over a KB frame must derive >1 shard, got $shards2")
-      assert(rows(Bm25Index.topK(spark, idx2, queries, k = 10)) == adHoc,
-        "shard count never touches scores")
-      // an EXPLICIT mismatched modulus still fails fast against the meta
-      val mismatched = if (shards2 == 7) 9 else 7
-      intercept[graft.GraftDataError] {
-        Bm25Index.ingestBatch(docs, idx2, "doc_id", "text", batchId = 9L,
-          nShards = mismatched)
-      }
-    } finally spark.conf.unset("spark.graft.bm25.shardTargetBytes")
+    // shard count never touches scores; an explicit mismatch fails fast
+    val idx2 = root + "/fixed7"
+    Bm25Index.ingestBatch(docs, idx2, "doc_id", "text", batchId = 0L,
+      nShards = Sizing.Fixed(7))
+    val shards2 = fs.listStatus(new org.apache.hadoop.fs.Path(idx2, "postings"))
+      .filter(_.getPath.getName.startsWith("__tshard=")).length
+    assert(shards2 > 1, s"7 shards over 5 docs must touch >1 shard dir, got $shards2")
+    assert(rows(Bm25Index.topK(spark, idx2, queries, k = 10)) == adHoc,
+      "shard count never touches scores")
+    intercept[graft.GraftDataError] {
+      Bm25Index.ingestBatch(docs, idx2, "doc_id", "text", batchId = 9L,
+        nShards = Sizing.Fixed(9))
+    }
+    // an EMPTY first Auto batch (0-byte estimate) sizes by the same rule
+    // (1 shard); the real batch after it ingests under that meta and the
+    // index still scores bitwise like the ad-hoc form
+    val idx3 = root + "/emptyfirst"
+    assert(Sizing.estimate(docs.limit(0)) == 0)
+    Bm25Index.ingestBatch(docs.limit(0), idx3, "doc_id", "text", batchId = 0L,
+      nShards = Bm25Index.AutoShards)
+    Bm25Index.ingestBatch(docs, idx3, "doc_id", "text", batchId = 1L,
+      nShards = Bm25Index.AutoShards)
+    val shards3 = fs.listStatus(new org.apache.hadoop.fs.Path(idx3, "postings"))
+      .filter(_.getPath.getName.startsWith("__tshard=")).length
+    assert(shards3 == 1, s"a 0-byte first batch must derive 1 shard, got $shards3")
+    assert(rows(Bm25Index.topK(spark, idx3, queries, k = 10)) == adHoc,
+      "an empty first batch must not skew the index")
   }
 
   test("Bm25Index.compact folds stats to O(1) dirs and merges postings tiers, results unchanged") {
@@ -1288,7 +1304,7 @@ class StreamingSpec extends SparkTestBase {
     val docs = (0L until 24L).map(i => (i, s"tok${i % 5} tok${i % 7} common word"))
     docs.grouped(2).zipWithIndex.foreach { case (g, b) =>
       Bm25Index.ingestBatch(g.toDF("doc_id", "text"), idx, "doc_id", "text",
-        batchId = b.toLong, nShards = 4)
+        batchId = b.toLong, nShards = Sizing.Fixed(4))
     }
     val queries = Seq((0L, "tok1 common"), (1L, "tok3 word")).toDF("query_id", "qtext")
     def rows() = Bm25Index.topK(spark, idx, queries, k = 24).collect()
@@ -1330,7 +1346,7 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.hadoop.fs.Path
     val docs = Seq((1L, "spark join"), (2L, "window order")).toDF("doc_id", "text")
     val idx = java.nio.file.Files.createTempDirectory("graft-bm25nodl").toString + "/idx"
-    Bm25Index.ingestBatch(docs, idx, "doc_id", "text", batchId = 0L, nShards = 4)
+    Bm25Index.ingestBatch(docs, idx, "doc_id", "text", batchId = 0L, nShards = Sizing.Fixed(4))
     val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(new Path(idx, "_doclens"), true))
     val e = intercept[graft.GraftDataError] {
@@ -1341,7 +1357,7 @@ class StreamingSpec extends SparkTestBase {
     // vouch for the uncovered ones — the pre-sidecar batch's docs would
     // silently escape the purge while its caller retires the request
     val more = Seq((3L, "quick brown fox"), (4L, "lazy dog sleeps")).toDF("doc_id", "text")
-    Bm25Index.ingestBatch(more, idx, "doc_id", "text", batchId = 1L, nShards = 4)
+    Bm25Index.ingestBatch(more, idx, "doc_id", "text", batchId = 1L, nShards = Sizing.Fixed(4))
     val e2 = intercept[graft.GraftDataError] {
       Bm25Index.purge(spark, idx, Seq(1L).toDF("doc_id"), "doc_id")
     }
@@ -1350,9 +1366,9 @@ class StreamingSpec extends SparkTestBase {
     // NOT trip the coverage check: rebuild covered, append an empty batch,
     // purge proceeds
     val idx2 = java.nio.file.Files.createTempDirectory("graft-bm25cov").toString + "/idx"
-    Bm25Index.ingestBatch(docs, idx2, "doc_id", "text", batchId = 0L, nShards = 4)
+    Bm25Index.ingestBatch(docs, idx2, "doc_id", "text", batchId = 0L, nShards = Sizing.Fixed(4))
     Bm25Index.ingestBatch(docs.filter($"doc_id" < 0L), idx2, "doc_id", "text",
-      batchId = 1L, nShards = 4)
+      batchId = 1L, nShards = Sizing.Fixed(4))
     assert(Bm25Index.purge(spark, idx2, Seq(1L).toDF("doc_id"), "doc_id") == 1L)
   }
 
@@ -1366,9 +1382,9 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.hadoop.fs.Path
     val docs = Seq((1L, "spark join"), (2L, "window order")).toDF("doc_id", "text")
     val idx = java.nio.file.Files.createTempDirectory("graft-bm25fsck").toString + "/idx"
-    Bm25Index.ingestBatch(docs, idx, "doc_id", "text", batchId = 0L, nShards = 4)
+    Bm25Index.ingestBatch(docs, idx, "doc_id", "text", batchId = 0L, nShards = Sizing.Fixed(4))
     Bm25Index.ingestBatch(docs.filter($"doc_id" < 0L), idx, "doc_id", "text",
-      batchId = 1L, nShards = 4) // committed empty batch
+      batchId = 1L, nShards = Sizing.Fixed(4)) // committed empty batch
     def report() = Bm25Index.fsck(spark, idx).collect()
       .map(r => r.getLong(0) -> ((r.getBoolean(1), r.getBoolean(2), r.getBoolean(3),
         r.getBoolean(4), r.getLong(5), r.getBoolean(6)))).toMap
@@ -1402,9 +1418,9 @@ class StreamingSpec extends SparkTestBase {
       .map(r => r.getLong(0) -> r.getBoolean(6)).toMap
     // batch 0: normal docs; batch 1: all docs tokenless (no postings ever)
     Bm25Index.ingestBatch(Seq((1L, "spark join"), (2L, "fox")).toDF("doc_id", "text"),
-      idx, "doc_id", "text", batchId = 0L, nShards = 4)
+      idx, "doc_id", "text", batchId = 0L, nShards = Sizing.Fixed(4))
     Bm25Index.ingestBatch(Seq((3L, ""), (4L, "   ")).toDF("doc_id", "text"),
-      idx, "doc_id", "text", batchId = 1L, nShards = 4)
+      idx, "doc_id", "text", batchId = 1L, nShards = Sizing.Fixed(4))
     assert(okOf() == Map(0L -> true, 1L -> true),
       "a committed all-tokenless batch is healthy with zero postings rows")
     // purge ALL of batch 0 and vacuum: its postings vanish physically,
@@ -1415,7 +1431,7 @@ class StreamingSpec extends SparkTestBase {
       "a fully purged-and-vacuumed batch is healthy, not torn")
     // REAL damage: a third batch with live docs whose postings are lost
     Bm25Index.ingestBatch(Seq((9L, "window order")).toDF("doc_id", "text"),
-      idx, "doc_id", "text", batchId = 2L, nShards = 4)
+      idx, "doc_id", "text", batchId = 2L, nShards = Sizing.Fixed(4))
     val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // batches 0/1 hold no postings rows anymore (vacuumed / tokenless), so
     // deleting the postings tree is exactly "batch 2's postings lost"
@@ -1426,7 +1442,7 @@ class StreamingSpec extends SparkTestBase {
     // the documented remedy: drop the marker, redeliver the SAME batch
     assert(fs.delete(new Path(idx, "_batches/b2"), false))
     Bm25Index.ingestBatch(Seq((9L, "window order")).toDF("doc_id", "text"),
-      idx, "doc_id", "text", batchId = 2L, nShards = 4)
+      idx, "doc_id", "text", batchId = 2L, nShards = Sizing.Fixed(4))
     assert(okOf()(2L) == true, "marker-drop + redelivery must heal the batch")
   }
 
@@ -1444,9 +1460,9 @@ class StreamingSpec extends SparkTestBase {
       .sortBy(t => (t._1, t._3, t._2)).toSeq
     val idx = java.nio.file.Files.createTempDirectory("graft-bm25prg").toString + "/idx"
     Bm25Index.ingestBatch(docs.filter($"doc_id" <= 3), idx, "doc_id", "text",
-      batchId = 0L, nShards = 8)
+      batchId = 0L, nShards = Sizing.Fixed(8))
     Bm25Index.ingestBatch(docs.filter($"doc_id" >= 4), idx, "doc_id", "text",
-      batchId = 1L, nShards = 8)
+      batchId = 1L, nShards = Sizing.Fixed(8))
     // purge docs 1 and 3 (id 99 is absent -> skipped): the logical delete
     // must make every score BITWISE the ad-hoc BM25 over the corpus that
     // never held them — df, n_docs and avgdl all corrected
@@ -1496,7 +1512,7 @@ class StreamingSpec extends SparkTestBase {
     // garbage parquet — any postings read would throw
     val idx2 = java.nio.file.Files.createTempDirectory("graft-bm25blind").toString + "/idx"
     Bm25Index.ingestBatch(docs.filter($"doc_id" <= 2), idx2, "doc_id", "text",
-      batchId = 0L, nShards = 4)
+      batchId = 0L, nShards = Sizing.Fixed(4))
     val someShard = new java.io.File(s"$idx2/postings").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("__tshard=")).head
     java.nio.file.Files.write(
@@ -1514,31 +1530,33 @@ class StreamingSpec extends SparkTestBase {
     // build commits under the reserved -1: stream ids never collide, and
     // ingestBatch(0) is a NEW batch, not a skipped redelivery of the build
     val idx = root + "/idx"
-    Bm25Index.build(docs, idx, "doc_id", "text", nShards = 4)
+    Bm25Index.build(docs, idx, "doc_id", "text", nShards = Sizing.Fixed(4))
     Bm25Index.ingestBatch(Seq((3L, "gamma delta")).toDF("doc_id", "text"),
-      idx, "doc_id", "text", batchId = 0L)
+      idx, "doc_id", "text", batchId = 0L, nShards = Sizing.Fixed(4))
     val q = Seq((0L, "gamma")).toDF("query_id", "qtext")
     assert(Bm25Index.topK(spark, idx, q, 10).count() == 2L,
       "the post-build batch 0 must ingest, not skip against the build marker")
     // one-shot: a second build refuses instead of double-counting
-    intercept[graft.GraftDataError] { Bm25Index.build(docs, idx, "doc_id", "text", 4) }
+    intercept[graft.GraftDataError] {
+      Bm25Index.build(docs, idx, "doc_id", "text", Sizing.Fixed(4))
+    }
     // no checkpoint + committed stream batches -> batchIds restart at 0
     // and the marker skip would swallow micro-batches: refuse
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
     val streamDf = mem.toDF().toDF("doc_id", "text")
     intercept[graft.GraftDataError] {
-      Bm25Index.stream(streamDf, idx, "doc_id", "text", nShards = 4)
+      Bm25Index.stream(streamDf, idx, "doc_id", "text", nShards = Sizing.Fixed(4))
     }
     // fresh checkpoint against committed stream markers: same trap, refused
     intercept[graft.GraftDataError] {
-      Bm25Index.stream(streamDf, idx, "doc_id", "text", nShards = 4,
+      Bm25Index.stream(streamDf, idx, "doc_id", "text", nShards = Sizing.Fixed(4),
         checkpointDir = Some(root + "/cp-fresh"))
     }
     // a build-only index is safe to stream onto (reserved -1 never collides)
     val idx2 = root + "/idx2"
-    Bm25Index.build(docs, idx2, "doc_id", "text", nShards = 4)
-    val sq = Bm25Index.stream(streamDf, idx2, "doc_id", "text", nShards = 4,
+    Bm25Index.build(docs, idx2, "doc_id", "text", nShards = Sizing.Fixed(4))
+    val sq = Bm25Index.stream(streamDf, idx2, "doc_id", "text", nShards = Sizing.Fixed(4),
       checkpointDir = Some(root + "/cp2"))
     try {
       mem.addData((3L, "gamma delta"))
@@ -1546,7 +1564,7 @@ class StreamingSpec extends SparkTestBase {
       assert(Bm25Index.topK(spark, idx2, q, 10).count() == 2L)
     } finally sq.stop()
     // resuming the SAME checkpoint is the supported restart path
-    val sq2 = Bm25Index.stream(streamDf, idx2, "doc_id", "text", nShards = 4,
+    val sq2 = Bm25Index.stream(streamDf, idx2, "doc_id", "text", nShards = Sizing.Fixed(4),
       checkpointDir = Some(root + "/cp2"))
     try {
       mem.addData((4L, "epsilon zeta"))
@@ -1651,7 +1669,7 @@ class StreamingSpec extends SparkTestBase {
   test("purgeCorpus of EVERY doc leaves a live, readable, empty table gate") {
     import graft.streaming.KeyTableSidecar
     val corpus = java.nio.file.Files.createTempDirectory("graft-gdpr-all").toString + "/corpus"
-    val tiny = Some(0L) // content-key table form from batch one
+    val tiny = 0L // content-key table form from batch one
     Streaming.ingestBatch(
       Seq((1L, "one"), (2L, "two"), (3L, "three")).toDF("doc_id", "text"),
       corpus, "doc_id", Seq("text"), sidecarMaxBytes = tiny): Unit
@@ -2331,7 +2349,7 @@ class StreamingSpec extends SparkTestBase {
   private def tombCorpus(prefix: String, docs: (Long, String)*): String = {
     val corpus = java.nio.file.Files.createTempDirectory(prefix).toString + "/corpus"
     Streaming.ingestBatch(docs.toDF("doc_id", "text"), corpus, "doc_id", Seq("text"),
-      sidecarMaxBytes = Some(0L)): Unit
+      sidecarMaxBytes = 0L): Unit
     corpus
   }
 
@@ -2420,7 +2438,7 @@ class StreamingSpec extends SparkTestBase {
     val idx = java.nio.file.Files.createTempDirectory("graft-tomb5idx").toString + "/idx"
     Bm25Index.ingestBatch(Seq((1L, "erase alpha"), (2L, "keep beta"),
       (3L, "erase gamma")).toDF("doc_id", "text"), idx, "doc_id", "text",
-      batchId = 0L, nShards = 4)
+      batchId = 0L, nShards = Sizing.Fixed(4))
     TombstoneLog.requestPurge(corpus, Seq(1L).toDF("doc_id"), "doc_id"): Unit
     TombstoneLog.requestPurge(corpus, Seq(3L).toDF("doc_id"), "doc_id"): Unit
     // a FAILING downstream purge keeps the log: the re-flush redoes both

@@ -166,7 +166,7 @@ class StressScaleSpec extends SparkTestBase {
     // corpus-shaped.
     import graft.streaming.Streaming
     val corpus = java.nio.file.Files.createTempDirectory("graft-ktstress").toString + "/corpus"
-    val tiny = Some(0L)
+    val tiny = 0L
     val base = spark.range(30000L)
       .select($"id".as("doc_id"),
         concat_ws(" ", (1 to 30).map(j => concat(lit(s"a"), $"id", lit(s"w$j"))): _*).as("text"))
