@@ -4,12 +4,14 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -63,9 +65,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * All ordering flows through one comparator ([[GraftScan.cmp]], code-point
   * string collation), so record evaluation, zone-map pruning, and metadata
   * aggregates can never disagree. Registered as `graft-parquet` via
-  * META-INF/services. Executors read with a fresh Hadoop `Configuration`
-  * (local/posix filesystems); a cluster deploy would broadcast the driver
-  * conf.
+  * META-INF/services. Executors read and write with Hadoop's default
+  * `Configuration`, parsed once per JVM ([[HadoopConf]]; local/posix
+  * filesystems); a cluster deploy would broadcast the driver conf.
   */
 class GraftParquetSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-parquet"
@@ -115,6 +117,13 @@ class GraftParquetSource extends TableProvider with DataSourceRegister {
           if (members.isEmpty) new StructType()
           else SparkSession.active.read
             .parquet(members.map(_.getPath.toString).min).schema
+        // a target holding only hidden entries — a concurrent first
+        // writer's `_write_*` staging dir, say — is still empty: infer it
+        // like a missing one instead of failing Spark's inference
+        case _ if fs.listStatus(p).forall { st =>
+            val n = st.getPath.getName
+            n.startsWith("_") || n.startsWith(".")
+          } => new StructType()
         case _ => SparkSession.active.read.parquet(path).schema
       }
     }
@@ -405,7 +414,8 @@ final case class GraftScan(
     files.sortBy(_.getPath.toString).flatMap { st =>
       val f = st.getPath
       val len = st.getLen
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+        HadoopReadOptions.builder(conf).build())
       val starts =
         try reader.getFooter.getBlocks.asScala.map(_.getStartingPos).toSeq
         finally reader.close()
@@ -782,11 +792,12 @@ final class GraftPartitionReader(
     file: String, start: Long, end: Long, required: StructType, filters: Array[Filter])
     extends PartitionReader[InternalRow] {
 
-  private val conf = new Configuration()
-  private val filePath = new Path(file)
+  // a copy: the projection below is set on it as PARQUET_READ_SCHEMA
+  private val conf = HadoopConf.copy()
+  private val input = HadoopInputFile.fromPath(new Path(file), conf)
 
   private val fileSchema: MessageType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(filePath, conf))
+    val r = ParquetFileReader.open(input, HadoopReadOptions.builder(conf).build())
     try r.getFooter.getFileMetaData.getSchema finally r.close()
   }
 
@@ -800,8 +811,13 @@ final class GraftPartitionReader(
     readCols.map(c => fileSchema.getType(fileSchema.getFieldIndex(c))): _*)
 
   private val reader: ParquetReader[Group] = {
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    val builder = ParquetReader.builder(new GroupReadSupport(), filePath).withConf(conf)
+    conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
+    // the InputFile constructor takes our conf as given — the (readSupport,
+    // path) builder parses a fresh default conf of its own before withConf
+    // replaces it
+    val builder = new ParquetReader.Builder[Group](input, new HadoopParquetConfiguration(conf)) {
+      override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
+    }
       // only the row groups whose midpoints land in this partition's range
       .withFileRange(start, end)
     val preds = filters.flatMap(GraftScan.toParquetPredicate(_, fileSchema))

@@ -2,7 +2,6 @@ package graft.sources.v2
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -814,7 +813,7 @@ final case class GraftBatchWrite(path: String, queryId: String, schema: StructTy
 
   private def withFs[T](body: (FileSystem, Path) => T): T = {
     val table = new Path(path)
-    body(table.getFileSystem(new Configuration()), table)
+    body(table.getFileSystem(HadoopConf.shared), table)
   }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
@@ -880,8 +879,8 @@ final class GraftDataWriter(
   private val stats = new ZoneMap.Collector(schema)
 
   private val writer: ParquetWriter[Group] = {
-    val conf = new Configuration()
-    ExampleParquetWriter.builder(staged).withConf(conf).withType(msgType).build()
+    // a copy: the builder may set keys on the conf it is handed
+    ExampleParquetWriter.builder(staged).withConf(HadoopConf.copy()).withType(msgType).build()
   }
 
   override def write(row: InternalRow): Unit = {
@@ -914,7 +913,7 @@ final class GraftDataWriter(
 
   override def abort(): Unit = {
     writer.close()
-    val fs = staged.getFileSystem(new Configuration())
+    val fs = staged.getFileSystem(HadoopConf.shared)
     if (fs.exists(staged)) fs.delete(staged, false)
   }
 

@@ -3,8 +3,9 @@ package graft.streaming
 import graft.Sizing
 import graft.operators.{Retrieval, TextAnalysis}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Persisted, incrementally-maintained BM25 inverted index — the
@@ -199,19 +200,21 @@ object Bm25Index {
   }
 
   /** The tombstone sidecar: one `(doc_id, dl)` row per logically-deleted
-    * doc (complete dirs only), distinct. PERMANENT — it is both the
-    * query-time mask and the corpus-constants correction record, which is
-    * what makes a purge a single atomic dir write (no paired stats row,
-    * no retire step, no crash window). It retains only the opaque id and
-    * a length — no content — and stays ids-sized.
+    * doc (complete dirs only). PERMANENT — it is both the query-time mask
+    * and the corpus-constants correction record, which is what makes a
+    * purge a single atomic dir write (no paired stats row, no retire step,
+    * no crash window). It retains only the opaque id and a length — no
+    * content — and stays ids-sized. Fold crash residue may repeat a row:
+    * consumers use it as the build side of a semi/anti join, where that
+    * cannot change the output, or de-duplicate on the driver after an
+    * ids-sized collect.
     */
   private def readDeleted(spark: SparkSession, fs: FileSystem, dir: Path): DataFrame = {
     val dirs = completeDirs(fs, deletedDir(dir)).map(_.toString)
     if (dirs.isEmpty)
       spark.range(0).select(col("id").as("doc_id"), col("id").as("dl"))
     else
-      spark.read.schema("doc_id BIGINT, dl BIGINT")
-        .parquet(dirs: _*).distinct()
+      spark.read.schema("doc_id BIGINT, dl BIGINT").parquet(dirs: _*)
   }
 
   private def fileSystem(spark: SparkSession, indexDir: String): (FileSystem, Path) = {
@@ -516,7 +519,8 @@ object Bm25Index {
     // the batches-sized stats read — compliance is worth a second
     // sidecar pass.
     // ONE collect carries both coverage sets (tagged union of the two
-    // batches-sized sidecar projections — was two sequential driver jobs)
+    // batches-sized sidecar projections — was two sequential driver jobs);
+    // the stats leg is batches-sized as read, so it dedups on the driver
     val statsDf = readStampedStats(spark, fs, dir, "purging").getOrElse(
       // doclens exists but stats does not: a differently-torn index —
       // name THAT shape, not the pre-stamp one (the old shared message
@@ -526,8 +530,8 @@ object Bm25Index {
           "sidecar — purge cannot prove batch coverage; rebuild the index " +
           "before purging"))
     val coverage = lens.select(col("__b"), lit(true).as("__lens")).distinct()
-      .unionByName(statsDf.distinct().filter(col("n_docs") > 0L)
-        .select(col("__b"), lit(false).as("__lens")).distinct())
+      .unionByName(statsDf.filter(col("n_docs") > 0L)
+        .select(col("__b"), lit(false).as("__lens")))
       .collect()
     val coveredB = coverage.filter(_.getBoolean(1)).map(_.getLong(0)).toSet
     val needB = coverage.filterNot(_.getBoolean(1)).map(_.getLong(0)).toSet
@@ -538,21 +542,23 @@ object Bm25Index {
           s"stats-recorded batch(es) ${uncovered.toSeq.sorted.mkString(", ")} — " +
           "purge cannot size those docs' tombstones; rebuild the index " +
           "before purging")
-    val del = ids.select(col(idCol).cast("long").as("doc_id")).na.drop().distinct()
+    // no distinct on either side: both only feed the build side of a
+    // semi/anti join, where duplicates cannot change the output
+    val del = ids.select(col(idCol).cast("long").as("doc_id")).na.drop()
       .join(broadcast(readDeleted(spark, fs, dir).select(col("doc_id"))),
         Seq("doc_id"), "left_anti")
     // one doc-length-sidecar pass — docs-count-sized, two columns, never
     // the corpus-scale postings: each present purged doc's (id, dl), once
-    // (distinct absorbs redelivery residue; one dl per doc by the
-    // batches-partition-the-corpus contract). The tombstone set is
+    // (the driver-side distinct absorbs redelivery residue; one dl per doc
+    // by the batches-partition-the-corpus contract). The tombstone set is
     // ids-sized (bounded by the purge request, which already broadcasts),
     // so ONE collect carries the count AND the rows — the old
     // materialize + count + write chain was three driver jobs for a
     // KB-scale frame; the write below is a LocalRelation spill, job two.
     val tombstoneSel = lens
       .join(broadcast(del), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("dl")).distinct()
-    val tombRows = tombstoneSel.collect()
+      .select(col("doc_id"), col("dl"))
+    val tombRows = tombstoneSel.collect().distinct
     val nPurged = tombRows.length.toLong
     if (nPurged == 0L) return 0L
     val name = s"d${System.currentTimeMillis()}-${
@@ -582,11 +588,12 @@ object Bm25Index {
     val (fs, dir) = fileSystem(spark, indexDir)
     // the tombstone sidecar is ids-sized and the rewrite broadcasts it —
     // ONE collect carries the count and the mask rows (was a materialize
-    // plus a count: two driver jobs per vacuum)
-    val deletedSel = readDeleted(spark, fs, dir).select(col("doc_id"))
-    val deletedRows = deletedSel.collect()
+    // plus a count: two driver jobs per vacuum); the driver-side distinct
+    // keeps the count exact under fold residue
+    val deletedSel = readDeleted(spark, fs, dir)
+    val deletedRows = deletedSel.collect().distinct
     val deleted = spark.createDataFrame(
-      java.util.Arrays.asList(deletedRows: _*), deletedSel.schema)
+      java.util.Arrays.asList(deletedRows: _*), deletedSel.schema).select(col("doc_id"))
     val n = deletedRows.length.toLong
     // the high-water marker makes vacuum INCREMENTAL against the permanent
     // sidecar: only tombstones beyond the last vacuumed count trigger a
@@ -648,59 +655,49 @@ object Bm25Index {
     val statsAgg = statsDfOpt.get.distinct()
       .agg(coalesce(sum(col("n_docs")), lit(0L)).as("__nd"),
         coalesce(sum(col("total_dl")), lit(0L)).as("__tdl"))
-    // purge tombstones: mask the postings AND correct the corpus constants
-    // from the same (doc_id, dl) rows — exact long sums, so the scores are
-    // bitwise those of an index never holding the purged docs
-    val tombstones =
-      if (completeDirs(fs, deletedDir(dir)).nonEmpty)
-        Some(readDeleted(spark, fs, dir))
-      else None
-    val qterms = queries.select(
-        col("query_id"),
+    // ONE driver action for everything planning needs AND scoring reuses:
+    // the corpus constants (a 1-row aggregate), the (query_id, term, shard)
+    // rows and the (doc_id, dl) purge tombstones ride a single tagged-union
+    // collect. Queries are SMALL by the same contract as bm25TopK and the
+    // tombstones are ids-sized (vacuum collects them too), so scoring reads
+    // both back as local relations instead of evaluating the tokenizer and
+    // the tombstone read a second time. The term list drives planning-time
+    // pruning: the shard set prunes whole directories, the IN list pushes
+    // to parquet.
+    val cLeg = statsAgg.select(lit(0).as("__src"), col("__nd"), col("__tdl"))
+    val tLeg = queries.select(lit(1).as("__src"), col("query_id"),
         explode(TextAnalysis.tokens(col("qtext"))).as("term"))
-      .distinct()
-    // ONE driver action for ALL the planning-time scalars: the corpus
-    // constants, the tombstone correction (both 1-row aggregates — they
-    // cross-join) AND the query term/shard list (queries are SMALL by the
-    // same contract as bm25TopK; the term list drives planning-time
-    // pruning — the shard set prunes whole directories, the IN list
-    // pushes to parquet). The three legs ride a single tagged-union
-    // collect; they were two sequential driver round-trips per retrieval.
-    val constants = tombstones.fold(
-      statsAgg.select(col("__nd"), col("__tdl"),
-        lit(0L).as("__dc"), lit(0L).as("__ddl")))(t => statsAgg.crossJoin(
-      t.agg(count(lit(1)).as("__dc"), coalesce(sum(col("dl")), lit(0L)).as("__ddl"))))
-    val cLeg = constants.select(lit(0).as("__src"),
-      lit(null).cast("string").as("term"), lit(null).cast("int").as("s"),
-      col("__nd"), col("__tdl"), col("__dc"), col("__ddl"))
-    val tLeg = qterms.select(col("term"),
-        pmod(xxhash64(col("term")), lit(mod.toLong)).cast("int").as("s"))
-      .distinct()
-      .select(lit(1).as("__src"), col("term"), col("s"),
-        lit(null).cast("long").as("__nd"), lit(null).cast("long").as("__tdl"),
-        lit(null).cast("long").as("__dc"), lit(null).cast("long").as("__ddl"))
-    val planningRows = cLeg.unionByName(tLeg).collect()
-    // by NAME, not ordinal: the aggregate columns are explicitly aliased,
-    // and a future column reorder in either 1-row aggregate must not
-    // silently swap the tombstone correction into the corpus constants
-    val cRow = planningRows.find(_.getInt(0) == 0).getOrElse(
+      .withColumn("s", pmod(xxhash64(col("term")), lit(mod.toLong)).cast("int"))
+    val dLeg = readDeleted(spark, fs, dir)
+      .select(lit(2).as("__src"), col("doc_id"), col("dl"))
+    val legs = cLeg.unionByName(tLeg, allowMissingColumns = true)
+      .unionByName(dLeg, allowMissingColumns = true)
+      .collect().groupBy(_.getAs[Int]("__src"))
+    // by NAME, not ordinal: the union appends each leg's columns, and a
+    // future reorder must not silently swap a correction into a constant
+    val cRow = legs.get(0).flatMap(_.headOption).getOrElse(
       throw new graft.GraftDataError(
         s"BM25 index at $indexDir: the constants aggregate returned no row"))
-    val (delCount, delDl) =
-      if (tombstones.isDefined)
-        (cRow.getAs[Long]("__dc"), cRow.getAs[Long]("__ddl"))
-      else (0L, 0L)
+    // purge tombstones mask the postings AND correct the corpus constants
+    // from the same rows — exact long sums over the DISTINCT (doc_id, dl)
+    // pairs (fold residue may repeat one; each tombstone counts once), so
+    // the scores are bitwise those of an index never holding the purged docs
+    val tombstones = legs.getOrElse(2, Array.empty)
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("dl"))).distinct
     // <= 0, not == 0: a purge can tombstone docs from the documented
     // postings-landed/stats-pending crash window, driving the corrected
     // count below zero until the batch redelivers — degrade empty, never
     // feed a negative nDocs/avgdl into the scoring formula
-    val nDocs = cRow.getAs[Long]("__nd") - delCount
+    val nDocs = cRow.getAs[Long]("__nd") - tombstones.length
     if (nDocs <= 0L) return emptyResult
-    val avgdl = (cRow.getAs[Long]("__tdl") - delDl).toDouble / nDocs
-    val termShards = planningRows.filter(_.getInt(0) == 1)
-    val terms = termShards.map(_.getAs[String]("term")).sorted.toIndexedSeq
+    val avgdl = (cRow.getAs[Long]("__tdl") - tombstones.map(_._2).sum).toDouble / nDocs
+    val termRows = legs.getOrElse(1, Array.empty)
+    val terms = termRows.map(_.getAs[String]("term")).distinct.sorted.toIndexedSeq
     if (terms.isEmpty) return emptyResult
-    val shards = termShards.map(_.getAs[Int]("s")).distinct.sorted.toIndexedSeq
+    val shards = termRows.map(_.getAs[Int]("s")).distinct.sorted.toIndexedSeq
+    val qterms = spark.createDataFrame(java.util.Arrays.asList(termRows
+      .map(r => Row(r.getAs[Any]("query_id"), r.getAs[String]("term"))).distinct: _*),
+      StructType(Seq(queries.schema("query_id"), StructField("term", StringType))))
 
     // explicit schema: a fully-purged index may have zero shard dirs, and
     // inference over an empty partitioned dir throws (KeyTableSidecar
@@ -711,8 +708,11 @@ object Bm25Index {
     // purged docs mask out via the ids-sized broadcast anti-join — read-
     // side compliance the moment a purge lands, ahead of the vacuum; the
     // no-tombstone plan is untouched
-    val masked = tombstones.fold(sliced)(t =>
-      sliced.join(broadcast(t.select(col("doc_id"))), Seq("doc_id"), "left_anti"))
+    val masked =
+      if (tombstones.isEmpty) sliced
+      else sliced.join(broadcast(spark.createDataFrame(
+        java.util.Arrays.asList(tombstones.map(t => Row(t._1)): _*),
+        StructType(Seq(StructField("doc_id", LongType))))), Seq("doc_id"), "left_anti")
     val postings = masked
       // redelivery/crash-residue rows are bitwise duplicates (same __b):
       // a slice-sized distinct restores unique (doc, term) postings

@@ -715,12 +715,15 @@ object Streaming {
     * their metas stamp the corpus files, the rewrite changes the stamp,
     * the next batch rebuilds in one scan.
     *
-    * Scale shape: one corpus-sized read feeding both the survivor rewrite
-    * and the two key aggregations (the leaving-key set is
-    * removed-minus-survivor-held, with the survivor side pruned to the
-    * removed keys by a broadcast semi-join), then metadata-sized swaps.
-    * Corpus-sized, so batch tombstones — GDPR queues flush on a cadence,
-    * not per request: [[TombstoneLog]] provides exactly that queue
+    * Scale shape: an id-only probe, then the corpus-sized survivor
+    * rewrite; under a content-key TABLE sidecar only, one more
+    * corpus-sized read feeds the two key aggregations (the leaving-key set
+    * is removed-minus-survivor-held, with the survivor side pruned to the
+    * removed keys by a broadcast semi-join) — a bloom-mode or ungated
+    * corpus has no key set to maintain and skips that derivation
+    * entirely. Then metadata-sized swaps. Corpus-sized, so batch
+    * tombstones — GDPR queues flush on a cadence, not per request:
+    * [[TombstoneLog]] provides exactly that queue
     * (KB-scale request appends, read-side compliance via anti-join, one
     * flush here per N requests).
     */
@@ -735,7 +738,10 @@ object Streaming {
     CorpusCompaction.recover(fs, target)
     val Dedup = graft.operators.Dedup
     val key = Dedup.contentBloomKey(contentCols)
-    val ids = tombstones.select(col(idCol)).na.drop().distinct()
+    // no distinct: the probe and the rewrite use ids as the build side of a
+    // semi/anti join, where duplicates cannot change the result; the one
+    // consumer where they would (the flagging left join below) dedups there
+    val ids = tombstones.select(col(idCol)).na.drop()
       .transform(Checkpointing.materialize)
     val corpus = spark.read.parquet(corpusDir)
     // No-op probe AND the rowsRemoved stat in ONE id-column-only scan: the
@@ -745,28 +751,36 @@ object Streaming {
     // projection it paid before (ADVICE r18).
     val rowsRemoved = corpus.join(broadcast(ids), Seq(idCol), "left_semi").count()
     if (rowsRemoved == 0L) return CorpusPurgeStats(0L, 0L, bloomRetired = false)
-    // ONE content-sized pass feeds BOTH the removed-key set and the
-    // survivor-held check (previously two corpus-scale scans, each paying
-    // the content read + key hash): every row is flagged removed/survivor
-    // by an ids-sized broadcast, projected to its content key, and the
+    val TableName = KeyTableSidecar.ContentName
+    // The leaving-key set exists only for a content-key TABLE sidecar (its
+    // meta is read before the rewrite, which never touches sidecar dirs): a
+    // bloom cannot delete and an ungated corpus keeps no key set, so
+    // neither pays the derivation. There, ONE content-sized pass feeds BOTH
+    // the removed-key set and the survivor-held check (previously two
+    // corpus-scale scans, each paying the content read + key hash): every
+    // row is flagged removed/survivor by an ids-sized broadcast (distinct
+    // here: a duplicated id on the build side of this LEFT join would
+    // duplicate its corpus row), projected to its content key, and the
     // (key, flag) projection — ~9 bytes/row against the content bytes a
     // second scan would re-read — persists for the two derivations. The
     // total key-hash work is unchanged (the old stillHeld pass hashed every
     // survivor anyway); the saving is one full content read of the corpus.
     // Persisted (not materialized): call-scoped, unpersisted in finally
-    // after `leaving` is safely materialized, BEFORE the rewrite retires
-    // the files the cached plan's lineage points at.
-    val flagged = corpus
-      .join(broadcast(ids.withColumn("__t", lit(true))), Seq(idCol), "left")
-      .select(key.as("__k"), col("__t").isNotNull.as("__r"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val leaving = try {
-      val removedKeys = flagged.filter(col("__r")).select(col("__k")).distinct()
-      val stillHeld = flagged.filter(!col("__r")).select(col("__k"))
-        .join(broadcast(removedKeys), Seq("__k"), "left_semi").distinct()
-      removedKeys.join(stillHeld, Seq("__k"), "left_anti")
-        .transform(Checkpointing.materialize)
-    } finally flagged.unpersist(false)
+    // after the leaving keys are safely materialized, BEFORE the rewrite
+    // retires the files the cached plan's lineage points at.
+    val keyPurge = KeyTableSidecar.readMeta(fs, target, TableName).map { meta =>
+      val flagged = corpus
+        .join(broadcast(ids.distinct().withColumn("__t", lit(true))), Seq(idCol), "left")
+        .select(key.as("__k"), col("__t").isNotNull.as("__r"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val removedKeys = flagged.filter(col("__r")).select(col("__k")).distinct()
+        val stillHeld = flagged.filter(!col("__r")).select(col("__k"))
+          .join(broadcast(removedKeys), Seq("__k"), "left_semi").distinct()
+        meta -> removedKeys.join(stillHeld, Seq("__k"), "left_anti")
+          .transform(Checkpointing.materialize)
+      } finally flagged.unpersist(false)
+    }
     // broadcast, like every other consumer of the ids frame: tombstones
     // are ids-sized by the TombstoneLog contract, and without the hint the
     // planner's estimate for the materialized frame let the rewrite plan a
@@ -774,17 +788,14 @@ object Streaming {
     // single largest job of the composed flush (guide §3.1)
     CorpusCompaction.rewrite(spark, fs, target)(
       _.join(broadcast(ids), Seq(idCol), "left_anti")): Unit
-    val TableName = KeyTableSidecar.ContentName
-    val keysDeleted = KeyTableSidecar.readMeta(fs, target, TableName) match {
-      case Some(meta) =>
-        val n = KeyTableSidecar.purgeKeys(spark, fs, target, leaving,
-          meta.nShards, TableName)
-        // fresh stamp LAST: only now is the purged table the live gate
-        KeyTableSidecar.writeMeta(fs, target,
-          KeyTableMeta(meta.nShards, math.max(0L, meta.keyCount - n),
-            BloomSidecar.filesStamp(fs, target)), TableName)
-        n
-      case None => 0L
+    val keysDeleted = keyPurge.fold(0L) { case (meta, leaving) =>
+      val n = KeyTableSidecar.purgeKeys(spark, fs, target, leaving,
+        meta.nShards, TableName)
+      // fresh stamp LAST: only now is the purged table the live gate
+      KeyTableSidecar.writeMeta(fs, target,
+        KeyTableMeta(meta.nShards, math.max(0L, meta.keyCount - n),
+          BloomSidecar.filesStamp(fs, target)), TableName)
+      n
     }
     val bloomPath = BloomSidecar.path(target, BloomSidecar.ContentName)
     val bloomRetired = fs.exists(bloomPath)

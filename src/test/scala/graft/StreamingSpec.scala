@@ -563,6 +563,21 @@ class StreamingSpec extends SparkTestBase {
       s"bloom mode degrades to one rebuild scan then re-admits: $r1")
     assert(spark.read.parquet(corpus2).select("doc_id").as[Long].collect().toSet ==
       Set(2L, 3L))
+
+    // ungated corpus (plain parquet, no sidecar): only rows leave, no key
+    // derivation runs, and a repeated tombstone id removes its row once
+    val corpus3 = java.nio.file.Files.createTempDirectory("graft-gdpr-p").toString + "/corpus"
+    Seq((1L, "erase me"), (2L, "keep me"), (3L, "erase me")).toDF("doc_id", "text")
+      .write.parquet(corpus3)
+    val stats3 = Streaming.purgeCorpus(spark, corpus3,
+      Seq(1L, 3L, 3L).toDF("doc_id"), "doc_id", Seq("text"))
+    assert(stats3 == Streaming.CorpusPurgeStats(2L, 0L, bloomRetired = false), s"$stats3")
+    assert(spark.read.parquet(corpus3).select("doc_id").as[Long].collect().toSet == Set(2L))
+    val target3 = new org.apache.hadoop.fs.Path(corpus3)
+    val fs3 = target3.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(KeyTableSidecar.readMeta(fs3, target3, KeyTableSidecar.ContentName).isEmpty &&
+      BloomSidecar.read(fs3, target3, BloomSidecar.ContentName).isEmpty,
+      "a purge must not create a gate sidecar")
   }
 
   test("ingestNearDupBatch table sidecar: same gate past the bloom's byte budget, replay-idempotent") {
@@ -1522,6 +1537,30 @@ class StreamingSpec extends SparkTestBase {
       "purge must be postings-blind")
   }
 
+  test("Bm25Index.topK with tombstones: one planning collect, within its job budget, bitwise") {
+    import graft.streaming.Bm25Index
+    import graft.operators.Retrieval
+    val docs = Seq(
+      (1L, "spark spark spark join"), (2L, "spark join join window"),
+      (3L, "window order order order"), (4L, "spark"),
+      (5L, "the quick brown fox")).toDF("doc_id", "text")
+    val queries = Seq((0L, "spark join"), (1L, "order fox"), (2L, "spark spark"))
+      .toDF("query_id", "qtext")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .sortBy(t => (t._1, t._3, t._2)).toSeq
+    val idx = java.nio.file.Files.createTempDirectory("graft-bm25jobs").toString + "/idx"
+    Bm25Index.ingestBatch(docs, idx, "doc_id", "text", batchId = 0L, nShards = Sizing.Fixed(4))
+    assert(Bm25Index.purge(spark, idx, Seq(1L, 3L).toDF("doc_id"), "doc_id") == 2L)
+    val (got, jobs) = org.apache.spark.JobCounter.count(spark.sparkContext)(
+      rows(Bm25Index.topK(spark, idx, queries, k = 10)))
+    assert(got == rows(Retrieval.bm25TopK(
+      docs.filter(!$"doc_id".isin(1L, 3L)), "doc_id", "text", queries, k = 10)))
+    // the query terms and the tombstones are read ONCE, in the planning
+    // collect, and scoring reads them back as local relations
+    assert(jobs <= 13, s"topK with tombstones ran $jobs jobs")
+  }
+
   test("Bm25Index build/stream refuse the marker collisions that would drop batches") {
     import graft.streaming.Bm25Index
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -2384,6 +2423,32 @@ class StreamingSpec extends SparkTestBase {
     TombstoneLog.flushPurge(spark, corpus, "doc_id", Seq("text"), tornGraceMs = 0L): Unit
     assert(!tornDir.exists(), "aged torn dir sweeps once past the grace")
     assert(TombstoneLog.pending(spark, corpus, "doc_id").count() == 0L)
+  }
+
+  test("tombstone log: flushPurge with the index purge on an ungated corpus stays within its job budget") {
+    import graft.streaming.{Bm25Index, TombstoneLog}
+    val root = java.nio.file.Files.createTempDirectory("graft-tombjobs").toString
+    val (corpus, idx) = (s"$root/corpus", s"$root/idx")
+    val docs = Seq((1L, "spark join window"), (2L, "spark spark order"),
+      (3L, "hash table scan"), (4L, "window agg order"), (5L, "join hash spark"))
+      .toDF("doc_id", "text")
+    // plain parquet appends: no gate sidecar over the corpus
+    docs.write.parquet(corpus)
+    Bm25Index.ingestBatch(docs, idx, "doc_id", "text", batchId = 0L, nShards = Sizing.Fixed(4))
+    TombstoneLog.requestPurge(corpus, Seq(2L, 4L).toDF("doc_id"), "doc_id"): Unit
+    TombstoneLog.requestPurge(corpus, Seq(4L).toDF("doc_id"), "doc_id"): Unit
+    var indexPurged = -1L
+    val (flushed, jobs) = org.apache.spark.JobCounter.count(spark.sparkContext)(
+      TombstoneLog.flushPurge(spark, corpus, "doc_id", Seq("text"),
+        alsoPurge = ids => indexPurged = Bm25Index.purge(spark, idx, ids, "doc_id")))
+    assert(flushed == Some((Streaming.CorpusPurgeStats(2L, 0L, bloomRetired = false), 2)),
+      s"$flushed")
+    assert(indexPurged == 2L)
+    assert(spark.read.parquet(corpus).select("doc_id").as[Long].collect().toSet ==
+      Set(1L, 3L, 5L))
+    // no key derivation on an ungated corpus, no shuffle that cannot change
+    // the index purge's result
+    assert(jobs <= 20, s"flushPurge ran $jobs jobs")
   }
 
   test("tombstone log: request landing mid-flush survives the retire and stays pending") {

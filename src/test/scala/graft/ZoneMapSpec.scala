@@ -1778,6 +1778,17 @@ class ZoneMapSpec extends SparkTestBase {
       s"got $health")
   }
 
+  test("a first append beside another first writer's staging dir infers the empty schema") {
+    // the window the 8-writer race hits: a concurrent first writer has
+    // created its hidden staging dir, nothing is committed yet
+    val dir = freshTable("graft-zm-firststage")
+    fsOf(dir).mkdirs(new Path(dir, "_write_concurrent"))
+    Seq((1L, "a")).toDF("id", "name")
+      .coalesce(1).write.format("graft-parquet").mode("append").save(dir)
+    assert(spark.read.format("graft-parquet").load(dir).as[(Long, String)]
+      .collect().toSeq == Seq((1L, "a")))
+  }
+
   test("a heal the reader cannot perform degrades to current membership, not a failed read") {
     import graft.sources.v2.GraftParquetWrite
     val dir = freshTable("graft-zm-healro")
