@@ -1,7 +1,8 @@
 package graft.sources.v2
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** OPTIMIZE for graft-parquet tables: bin-pack small committed files toward
   * `targetBytes`, crash-anywhere-safely, and fold the per-commit `_zonemap`
@@ -113,7 +114,7 @@ object GraftTableOptimize {
     //    repack must not adopt one file's pre-evolution shape) and shapes
     //    into the declared layout
     val bytes = small.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+    val nOut = outputFiles(bytes, targetBytes)
     val tail = readUnderCurrentEpoch(spark, fs, table, small.map(_.getPath.toString))
     import org.apache.spark.sql.functions.col
     val shaped = zOrderBy match {
@@ -190,28 +191,28 @@ object GraftTableOptimize {
     * survives a rewrite.
     */
   private def readUnderCurrentEpoch(spark: SparkSession, fs: FileSystem, table: Path,
-      paths: Seq[String]): org.apache.spark.sql.DataFrame =
+      paths: Seq[String]): DataFrame =
     readUnderEpoch(spark, GraftParquetWrite.latestSchemaAt(fs, table, None), paths)
 
   /** Same, with the epoch already resolved — multi-read callers pay the
     * `_log` schema lookup once, not per read.
     */
-  private def readUnderEpoch(spark: SparkSession,
-      epoch: Option[org.apache.spark.sql.types.StructType],
-      paths: Seq[String]): org.apache.spark.sql.DataFrame = {
+  private def readUnderEpoch(spark: SparkSession, epoch: Option[StructType],
+      paths: Seq[String]): DataFrame = {
     val r = spark.read
     epoch.fold(r)(r.schema).parquet(paths.toIndexedSeq: _*)
   }
 
-  /** Shared swap-staging step of OPTIMIZE and DELETE: write `df` through
-    * the connector into the staging mini-table (zone-map stats ride along
-    * like any write), move the packed files up under `part-<id>-<i>`
-    * names, drop the scaffolding, and return (finalName, stats) for the
-    * caller's manifest. One implementation, so the swap protocol can never
-    * diverge between the two maintenance ops.
+  /** Staging step of every swap (OPTIMIZE's, and the row-level [[swap]]
+    * DELETE, UPDATE and MERGE share): write `df` through the connector into
+    * the staging mini-table (zone-map stats ride along like any write), move
+    * the packed files up under `part-<id>-<i>` names, drop the scaffolding,
+    * and return (finalName, stats) for the caller's manifest. One
+    * implementation, so the swap protocol can never diverge between
+    * maintenance ops.
     */
   private def stageRewrite(fs: FileSystem, staging: Path, id: String,
-      df: org.apache.spark.sql.DataFrame): Seq[(String, Option[ZoneMap.FileStats])] = {
+      df: DataFrame): Seq[(String, Option[ZoneMap.FileStats])] = {
     val packedDir = new Path(staging, "packed")
     df.write.format("graft-parquet").mode("append").save(packedDir.toString)
     val packedStats = ZoneMap.load(fs, packedDir)
@@ -230,14 +231,19 @@ object GraftTableOptimize {
   private def addLines(moved: Seq[(String, Option[ZoneMap.FileStats])]): Seq[String] =
     moved.map { case (n, s) => s.map(st => s"$n\t${ZoneMap.encode(st)}").getOrElse(n) }
 
+  /** Output files of a maintenance rewrite of `bytes`: one per
+    * `targetBytes`, through the one sizing rule, uncapped.
+    */
+  private[graft] def outputFiles(bytes: Long, targetBytes: Long): Int =
+    graft.Sizing.count(BigInt(bytes), targetBytes, Int.MaxValue)
+
   /** Shape a maintenance rewrite for the staged write: coalesce to `nOut`
     * files, or — with `clusterBy` — range-repartition plus an intra-file
     * sort so every rewritten file keeps a tight zone on the cluster key
     * (the layout contract deletes/updates/merges must not quietly erode).
-    * One implementation for all three row-level ops.
+    * One implementation, inside the row-level [[swap]].
     */
-  private def shapeForWrite(df: org.apache.spark.sql.DataFrame, nOut: Int,
-      clusterBy: Seq[String]): org.apache.spark.sql.DataFrame =
+  private def shapeForWrite(df: DataFrame, nOut: Int, clusterBy: Seq[String]): DataFrame =
     if (clusterBy.isEmpty) {
       // coalesce can never INCREASE partition count: a low-partition input
       // (one post-aggregate source, one giant candidate file) must
@@ -250,29 +256,117 @@ object GraftTableOptimize {
       df.repartitionByRange(nOut, keys: _*).sortWithinPartitions(keys: _*)
     }
 
+  /** A row-level op's table as [[resolve]] found it, plus the caller's write options. */
+  private final case class RowLevel(spark: SparkSession, path: String, fs: FileSystem,
+      table: Path, members: Seq[FileStatus], epoch: Option[StructType],
+      schema: Option[StructType], targetBytes: Long, purge: Boolean, retainLog: Int,
+      clusterBy: Seq[String])
+
+  /** The shared prologue of DELETE, UPDATE and MERGE: crash recovery; when
+    * this call purges, convergence of an interrupted purge FIRST, whatever
+    * this call's predicate finds (the marker proves a prior purge passed its
+    * swap); the members; and the schema epoch, resolved ONCE for
+    * validation, pruning and every read (each `latestSchemaAt` is a paid
+    * `_log` listing on an object store). `schema` is the epoch, else the
+    * first member's footer; None only on an empty table that never had one.
+    */
+  private def resolve(spark: SparkSession, path: String, targetBytes: Long, purge: Boolean,
+      retainLog: Int, clusterBy: Seq[String]): RowLevel = {
+    val table = new Path(path)
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(table), s"no table at $path")
+    GraftParquetWrite.recover(fs, table)
+    if (purge && fs.exists(purgePendingMarker(table))) purgeFinalize(spark, fs, path, table)
+    val members = GraftParquetWrite.listDataFiles(fs, table)
+    val epoch = GraftParquetWrite.latestSchemaAt(fs, table, None)
+    val schema = epoch.orElse(members.headOption.map(st =>
+      spark.read.parquet(st.getPath.toString).schema))
+    RowLevel(spark, path, fs, table, members, epoch, schema, targetBytes, purge, retainLog,
+      clusterBy)
+  }
+
+  /** Validate a condition and its assignments against the schema BEFORE
+    * any destructive step, on a zero-row frame (no IO): zone pruning can
+    * legitimately empty the scan set, and skipping analysis there would let
+    * a misspelled column — in the predicate or an assignment — slide
+    * straight into purgeFinalize's irreversible history collapse while
+    * reporting a successful no-op. DELETE validates as an UPDATE with no
+    * assignments.
+    */
+  private def validateWhere(t: RowLevel, condition: Column, set: Seq[(String, Column)]): Unit =
+    t.schema.foreach { sch =>
+      set.foreach { case (name, _) =>
+        require(sch.fieldNames.contains(name),
+          s"updateWhere assignment targets unknown column '$name' " +
+            s"(schema: ${sch.fieldNames.mkString(", ")})")
+      }
+      val probe = t.spark.createDataFrame(java.util.Collections.emptyList[Row](), sch)
+      applyAssignments(probe.filter(condition), sch, condition, set)
+        .queryExecution.analyzed: Unit
+    }
+
+  /** The one swap of DELETE, UPDATE and MERGE — the crash-safe manifest
+    * roll-forward OPTIMIZE commits, with `replacement` standing in for the
+    * `retired` files:
+    *
+    *  1. a maintenance-unique staging dir; with `purge`, the purge-pending
+    *     marker lands BEFORE the commit point, so every crash window after
+    *     rows start disappearing re-runs into purgeFinalize;
+    *  2. a replacement that may hold NULLs (`mayAddNulls`: UPDATE's
+    *     assignments, MERGE's source — never DELETE's subset of the rows)
+    *     first publishes the nullability-widened epoch
+    *     ([[publishWideningEpoch]]);
+    *  3. `bytes` sizes the output to ~targetBytes files, and `clusterBy`
+    *     keeps the table's layout through the rewrite ([[shapeForWrite]]):
+    *     a non-range delete (user_id IN ...) on an event_id-clustered table
+    *     intersects MANY disjoint slabs, and a bare coalesce would merge them
+    *     into wide-zone files, silently degrading range pruning on the
+    *     cluster key until the next OPTIMIZE;
+    *  4. stage, commit (adds + one removal line per retired file), fold the
+    *     sidecars; then `purge`'s compliance finalization, or the retention
+    *     fold of the log.
+    *
+    * Returns the member count after the swap.
+    */
+  private def swap(t: RowLevel, kind: String, retired: Seq[FileStatus], bytes: Long,
+      replacement: DataFrame, mayAddNulls: Boolean): Int = {
+    val id = maintenanceId(kind)
+    val staging = GraftParquetWrite.stagingDir(t.table, id)
+    t.fs.mkdirs(staging)
+    if (t.purge) t.fs.create(purgePendingMarker(t.table), true).close()
+    if (mayAddNulls)
+      publishWideningEpoch(t.fs, t.table, staging, t.schema.getOrElse(replacement.schema),
+        replacement.schema)
+    val moved = stageRewrite(t.fs, staging, id,
+      shapeForWrite(replacement, outputFiles(bytes, t.targetBytes), t.clusterBy))
+    GraftParquetWrite.commitLines(t.fs, t.table, staging,
+      addLines(moved) ++ retired.map(st => s"~${st.getPath.getName}"))
+    foldSidecars(t.fs, t.table): Unit
+    if (t.purge) purgeFinalize(t.spark, t.fs, t.path, t.table)
+    else foldLog(t.fs, t.table, t.retainLog): Unit
+    GraftParquetWrite.listDataFiles(t.fs, t.table).length
+  }
+
   /** Pruned candidate discovery shared by DELETE and UPDATE: the
     * condition's pushable conjuncts test the zone map driver-side (files
     * the statistics refute are never opened), then ONE pushed-down scan
     * over the survivors counts condition-TRUE rows per file — the
     * candidate set and the exact matched-row count in a single pass.
     */
-  private def discoverMatches(spark: SparkSession, fs: FileSystem, table: Path,
-      members: Seq[org.apache.hadoop.fs.FileStatus],
-      epoch: Option[org.apache.spark.sql.types.StructType],
-      schema: org.apache.spark.sql.types.StructType,
-      condition: org.apache.spark.sql.Column): Map[String, Long] = {
+  private def discoverMatches(t: RowLevel, schema: StructType,
+      condition: Column): Map[String, Long] = {
     import org.apache.spark.sql.functions.{count, input_file_name, lit}
     val pushable = pushableConjuncts(condition)
     val scanSet =
-      if (pushable.isEmpty) members
+      if (pushable.isEmpty) t.members
       else {
-        val zm = ZoneMap.load(fs, table)
-        if (zm.isEmpty) members
-        else members.filter(st =>
+        val zm = ZoneMap.load(t.fs, t.table)
+        if (zm.isEmpty) t.members
+        else t.members.filter(st =>
           zm.get(st.getPath.getName).forall(ZoneMap.mayMatchAll(pushable, _, schema)))
       }
     if (scanSet.isEmpty) Map.empty
-    else readUnderEpoch(spark, epoch, scanSet.map(_.getPath.toString))
+    else readUnderEpoch(t.spark, t.epoch, scanSet.map(_.getPath.toString))
       .filter(condition)
       .groupBy(input_file_name().as("f")).agg(count(lit(1)).as("n"))
       .collect().map { r =>
@@ -281,13 +375,33 @@ object GraftTableOptimize {
       }.toMap
   }
 
+  /** DELETE's and UPDATE's common body: pruned discovery, then — when
+    * anything matched — the [[swap]] of every candidate file for `replace`
+    * applied to its rows, read under the epoch. A call matching nothing
+    * touches no history (an interrupted purge already converged in
+    * [[resolve]]). Returns (files rewritten, rows matched, files after).
+    */
+  private def rewriteWhere(t: RowLevel, kind: String, condition: Column, mayAddNulls: Boolean)
+      (replace: (DataFrame, StructType) => DataFrame): (Int, Long, Int) = t.schema match {
+    case Some(schema) if t.members.nonEmpty =>
+      val trueByFile = discoverMatches(t, schema, condition)
+      val cands = t.members.filter(st => trueByFile.contains(st.getPath.getName))
+      if (cands.isEmpty) (0, 0L, t.members.length)
+      else {
+        val rows = readUnderEpoch(t.spark, t.epoch, cands.map(_.getPath.toString))
+        (cands.length, trueByFile.values.sum, swap(t, kind, cands, cands.map(_.getLen).sum,
+          replace(rows, schema), mayAddNulls))
+      }
+    case _ => (0, 0L, 0)
+  }
+
   final case class DeleteReport(
       filesScanned: Int, filesRewritten: Int, rowsDeleted: Long,
       filesAfter: Int, purged: Boolean)
 
   /** DELETE WHERE on a graft-parquet table — the row-level
-    * right-to-be-forgotten primitive, expressed as the same crash-safe
-    * swap OPTIMIZE uses (never a table rebuild):
+    * right-to-be-forgotten primitive, expressed as the crash-safe [[swap]]
+    * UPDATE and MERGE share (never a table rebuild):
     *
     *  1. candidate discovery is PRUNED TWICE, then distributed: the
     *     condition's pushable conjuncts test the zone map driver-side
@@ -297,10 +411,9 @@ object GraftTableOptimize {
     *     survivors (condition pushed into row-group skipping) counts the
     *     TRUE rows per file (`input_file_name`) — exact `rowsDeleted`,
     *     independent of sidecar health, no second pass;
-    *  2. survivors of the candidate files rewrite through the shared
-    *     [[stageRewrite]] step; the swap manifest retires every candidate
-    *     — SQL semantics: a row deletes only where the condition is TRUE
-    *     (NULL keeps the row);
+    *  2. survivors of the candidate files replace them in the swap
+    *     manifest — SQL semantics: a row deletes only where the condition
+    *     is TRUE (NULL keeps the row);
     *  3. `purge = true` (the compliance default) then folds the log to one
     *     snapshot and runs a zero-grace [[vacuum]]: the deleted bytes are
     *     GONE — including copies inside files EARLIER maintenance retired
@@ -325,68 +438,17 @@ object GraftTableOptimize {
     * data files), never a directory inference refuses.
     */
   def deleteWhere(spark: SparkSession, path: String,
-      condition: org.apache.spark.sql.Column,
+      condition: Column,
       targetBytes: Long = 128L * 1024 * 1024,
       purge: Boolean = true, retainLog: Int = 8,
       clusterBy: Seq[String] = Nil): DeleteReport = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val table = new Path(path)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(table), s"no table at $path")
-    GraftParquetWrite.recover(fs, table)
-    // converge an interrupted purge FIRST, whatever this call's predicate
-    // finds: the marker proves a prior purge passed its swap
-    if (purge && fs.exists(purgePendingMarker(table))) purgeFinalize(spark, fs, path, table)
-    val members = GraftParquetWrite.listDataFiles(fs, table)
-    // the schema epoch, resolved ONCE for validation, pruning, and both
-    // reads (each latestSchemaAt is a paid _log listing on an object store)
-    val epoch = GraftParquetWrite.latestSchemaAt(fs, table, None)
-    // validate the condition against the schema BEFORE any destructive
-    // step, on a zero-row frame (no IO): zone pruning can legitimately
-    // empty the scan set, and skipping analysis there would let a
-    // misspelled column slide straight into purgeFinalize's irreversible
-    // history collapse while reporting a successful 0-row purge
-    epoch.orElse(members.headOption.map(st =>
-      spark.read.parquet(st.getPath.toString).schema)).foreach { sch =>
-      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), sch)
-        .filter(condition).queryExecution.analyzed: Unit
+    val t = resolve(spark, path, targetBytes, purge, retainLog, clusterBy)
+    validateWhere(t, condition, Nil)
+    val (rewritten, rowsDeleted, after) = rewriteWhere(t, "del", condition, mayAddNulls = false) {
+      (rows, _) => rows.filter(not(coalesce(condition, lit(false))))
     }
-    if (members.isEmpty) return DeleteReport(0, 0, 0L, 0, purge)
-    val schema = epoch.getOrElse(spark.read.parquet(members.head.getPath.toString).schema)
-    // 1. pruned discovery ([[discoverMatches]]): zone pre-prune on the
-    //    pushable conjuncts, then ONE pushed-down scan counting TRUE rows
-    //    per file — candidates and the exact deleted-row count in one pass
-    val trueByFile = discoverMatches(spark, fs, table, members, epoch, schema, condition)
-    val cands = members.filter(st => trueByFile.contains(st.getPath.getName))
-    // matched nothing: report the no-op without touching history — the
-    // interrupted-purge case was already converged via the marker above
-    if (cands.isEmpty) return DeleteReport(members.length, 0, 0L, members.length, purge)
-    val rowsDeleted = trueByFile.values.sum
-
-    val delId = maintenanceId("del")
-    val staging = GraftParquetWrite.stagingDir(table, delId)
-    fs.mkdirs(staging)
-    // the marker lands BEFORE the commit point of the swap: every crash
-    // window after rows start disappearing re-runs into purgeFinalize
-    if (purge) fs.create(purgePendingMarker(table), true).close()
-    // 2. survivors (condition not TRUE — false or NULL) rewrite through
-    //    the shared staging step, exactly like OPTIMIZE. `clusterBy`
-    //    preserves the table's layout contract through the delete: a
-    //    non-range delete (user_id IN ...) on an event_id-clustered table
-    //    intersects MANY disjoint slabs, and a bare coalesce would merge
-    //    them into wide-zone files — silently degrading range pruning on
-    //    the cluster key until the next OPTIMIZE ([[shapeForWrite]]).
-    val nOut = math.max(1, math.ceil(cands.map(_.getLen).sum.toDouble / targetBytes).toInt)
-    val kept = readUnderEpoch(spark, epoch, cands.map(_.getPath.toString))
-      .filter(not(coalesce(condition, lit(false))))
-    val moved = stageRewrite(fs, staging, delId, shapeForWrite(kept, nOut, clusterBy))
-    val lines = addLines(moved) ++ cands.map(st => s"~${st.getPath.getName}")
-    // 3. commit point + roll-forward; then retention policy
-    GraftParquetWrite.commitLines(fs, table, staging, lines)
-    foldSidecars(fs, table): Unit
-    if (purge) purgeFinalize(spark, fs, path, table) else foldLog(fs, table, retainLog): Unit
-    val after = GraftParquetWrite.listDataFiles(fs, table).length
-    DeleteReport(members.length, cands.length, rowsDeleted, after, purge)
+    DeleteReport(t.members.length, rewritten, rowsDeleted, after, purge)
   }
 
   /** The purge-pending marker: written before a purging op's destructive
@@ -421,7 +483,9 @@ object GraftTableOptimize {
     * pass through untouched). Discovery is zone-pre-pruned on the
     * condition's pushable conjuncts and counted by ONE pushed-down scan,
     * so on a clustered 100 TB table a range update rewrites only the
-    * intersecting slabs — never a table rebuild.
+    * intersecting slabs — never a table rebuild. An assignment may
+    * introduce NULLs (e.g. set(col -> lit(null))) into a column the epoch
+    * declares non-nullable, so the swap widens the epoch first.
     *
     * `purge = true` is the redaction form (scrubbing PII in place must
     * also forget the PRE-UPDATE values every retained snapshot still
@@ -434,62 +498,20 @@ object GraftTableOptimize {
     * Single-writer maintenance window, like OPTIMIZE.
     */
   def updateWhere(spark: SparkSession, path: String,
-      condition: org.apache.spark.sql.Column,
-      set: Seq[(String, org.apache.spark.sql.Column)],
+      condition: Column,
+      set: Seq[(String, Column)],
       targetBytes: Long = 128L * 1024 * 1024,
       purge: Boolean = false, retainLog: Int = 8,
       clusterBy: Seq[String] = Nil): UpdateReport = {
     require(set.nonEmpty, "updateWhere needs at least one column assignment")
-    val table = new Path(path)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(table), s"no table at $path")
-    GraftParquetWrite.recover(fs, table)
-    if (purge && fs.exists(purgePendingMarker(table))) purgeFinalize(spark, fs, path, table)
-    val members = GraftParquetWrite.listDataFiles(fs, table)
-    val epoch = GraftParquetWrite.latestSchemaAt(fs, table, None)
-    // validate condition AND assignments against the schema BEFORE any
-    // destructive step, on a zero-row frame (no IO): a misspelled column —
-    // in the predicate or an assignment — must die here, not after the swap
-    epoch.orElse(members.headOption.map(st =>
-      spark.read.parquet(st.getPath.toString).schema)).foreach { sch =>
-      val probe = spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), sch)
-      set.foreach { case (name, _) =>
-        require(sch.fieldNames.contains(name),
-          s"updateWhere assignment targets unknown column '$name' " +
-            s"(schema: ${sch.fieldNames.mkString(", ")})")
-      }
-      applyAssignments(probe.filter(condition), sch, condition, set)
-        .queryExecution.analyzed: Unit
-    }
-    if (members.isEmpty) return UpdateReport(0, 0, 0L, 0, purge)
-    val schema = epoch.getOrElse(spark.read.parquet(members.head.getPath.toString).schema)
-    val trueByFile = discoverMatches(spark, fs, table, members, epoch, schema, condition)
-    val cands = members.filter(st => trueByFile.contains(st.getPath.getName))
-    if (cands.isEmpty) return UpdateReport(members.length, 0, 0L, members.length, purge)
-    val rowsUpdated = trueByFile.values.sum
-
-    val updId = maintenanceId("upd")
-    val staging = GraftParquetWrite.stagingDir(table, updId)
-    fs.mkdirs(staging)
-    if (purge) fs.create(purgePendingMarker(table), true).close()
+    val t = resolve(spark, path, targetBytes, purge, retainLog, clusterBy)
+    validateWhere(t, condition, set)
     // every candidate row rewrites; matched rows carry the assignments
     // (gated TRUE-only via when), the rest pass through byte-identical
-    val nOut = math.max(1, math.ceil(cands.map(_.getLen).sum.toDouble / targetBytes).toInt)
-    val rewritten = applyAssignments(
-      readUnderEpoch(spark, epoch, cands.map(_.getPath.toString)), schema, condition, set)
-    // an assignment may introduce NULLs (e.g. set(col -> lit(null))) into
-    // a column the epoch declares non-nullable: widen the epoch BEFORE the
-    // swap, or Spark would compile `IS NULL` checks away over rows that
-    // hold nulls (the pre-publication closes the crash windows too)
-    publishWideningEpoch(fs, table, staging, schema, rewritten.schema)
-    val moved = stageRewrite(fs, staging, updId, shapeForWrite(rewritten, nOut, clusterBy))
-    val lines = addLines(moved) ++ cands.map(st => s"~${st.getPath.getName}")
-    GraftParquetWrite.commitLines(fs, table, staging, lines)
-    foldSidecars(fs, table): Unit
-    if (purge) purgeFinalize(spark, fs, path, table) else foldLog(fs, table, retainLog): Unit
-    val after = GraftParquetWrite.listDataFiles(fs, table).length
-    UpdateReport(members.length, cands.length, rowsUpdated, after, purge)
+    val (rewritten, rowsUpdated, after) = rewriteWhere(t, "upd", condition, mayAddNulls = true) {
+      (rows, schema) => applyAssignments(rows, schema, condition, set)
+    }
+    UpdateReport(t.members.length, rewritten, rowsUpdated, after, purge)
   }
 
   /** Publish a nullability-widened epoch BEFORE a maintenance swap whose
@@ -505,9 +527,8 @@ object GraftTableOptimize {
     * by the op's id and nullability/type-monotone against the live epoch.
     */
   private def publishWideningEpoch(fs: FileSystem, table: Path, staging: Path,
-      epoch: org.apache.spark.sql.types.StructType,
-      written: org.apache.spark.sql.types.StructType): Unit = {
-    val widened = org.apache.spark.sql.types.StructType(
+      epoch: StructType, written: StructType): Unit = {
+    val widened = StructType(
       epoch.fields.zipWithIndex.map { case (ef, i) =>
         val introducesNull = i < written.fields.length &&
           written.fields(i).name == ef.name && written.fields(i).nullable
@@ -528,10 +549,8 @@ object GraftTableOptimize {
     * all other columns pass through. Shared by validation and the rewrite
     * so they can never diverge.
     */
-  private def applyAssignments(df: org.apache.spark.sql.DataFrame,
-      schema: org.apache.spark.sql.types.StructType,
-      condition: org.apache.spark.sql.Column,
-      set: Seq[(String, org.apache.spark.sql.Column)]): org.apache.spark.sql.DataFrame = {
+  private def applyAssignments(df: DataFrame, schema: StructType, condition: Column,
+      set: Seq[(String, Column)]): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     val byName = set.toMap
     val hit = coalesce(condition, lit(false))
@@ -549,42 +568,45 @@ object GraftTableOptimize {
 
   /** MERGE (upsert) a source frame into a graft-parquet table by key —
     * K2's keep-last upsert semantics at the table-format layer, expressed
-    * as the same discovery + swap: table rows whose key matches a source
-    * row are REPLACED by it, source rows matching nothing INSERT, table
-    * rows matching nothing are untouched (their files never rewrite).
+    * as a discovery plus the [[swap]] DELETE and UPDATE share: table rows
+    * whose key matches a source row are REPLACED by it, source rows
+    * matching nothing INSERT, table rows matching nothing are untouched
+    * (their files never rewrite).
     *
-    *  1. the source must be key-unique (two source rows for one key have
-    *     no deterministic winner — fail loudly, the caller picks) and
-    *     column-compatible with the table epoch;
-    *  2. discovery joins ONE pushed keys-only scan of the table against
-    *     the (broadcast) source keys: only files holding a matched key
-    *     become candidates — on a clustered table a key-local source
-    *     touches only its slabs. The same join counts matched table rows
-    *     exactly;
+    *  1. the source must be column-compatible with the table epoch and
+    *     key-unique (two source rows for one key have no deterministic
+    *     winner — fail loudly, the caller picks). ONE aggregate over the
+    *     persisted source's per-key counts checks both: their sum is the
+    *     source row count, and the largest count, with its key, is the
+    *     duplicate example;
+    *  2. discovery semi-joins ONE keys-only scan of the table against the
+    *     broadcast source keys and groups the matches BY KEY: each matched
+    *     key's table row count and set of files. The collect holds one row
+    *     per matched key, so it is bounded by the source. It yields the
+    *     candidates (only files holding a matched key — on a clustered table
+    *     a key-local source touches only its slabs), `rowsUpdated` (the
+    *     matched table rows) and, the source being key-unique,
+    *     `rowsInserted` (source rows minus matched keys) — exact even when
+    *     one key sits in several files;
     *  3. candidates rewrite with matched rows anti-joined away; the source
     *     (updates + inserts in one frame) lands as adds in the SAME swap
     *     manifest, so the upsert is one atomic commit point — a crash
-    *     anywhere replays to exactly-once.
+    *     anywhere replays to exactly-once. An empty table is the same path
+    *     with no candidates: a pure insert.
     *
     * History: replaced row versions stay readable AS-OF under the
     * retention contract (`retainLog`), like every maintenance swap.
     * Single-writer maintenance window.
     */
   def merge(spark: SparkSession, path: String,
-      source: org.apache.spark.sql.DataFrame, keys: Seq[String],
+      source: DataFrame, keys: Seq[String],
       targetBytes: Long = 128L * 1024 * 1024,
       retainLog: Int = 8, clusterBy: Seq[String] = Nil): MergeReport = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, input_file_name, lit}
+    import org.apache.spark.sql.functions.{broadcast, col, collect_set, count, input_file_name,
+      lit, max, max_by, struct, sum}
     require(keys.nonEmpty, "merge needs at least one key column")
-    val table = new Path(path)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(table), s"no table at $path")
-    GraftParquetWrite.recover(fs, table)
-    val members = GraftParquetWrite.listDataFiles(fs, table)
-    val epoch = GraftParquetWrite.latestSchemaAt(fs, table, None)
-    val schema = epoch.orElse(members.headOption.map(st =>
-      spark.read.parquet(st.getPath.toString).schema))
-      .getOrElse(source.schema)
+    val t = resolve(spark, path, targetBytes, purge = false, retainLog, clusterBy)
+    val schema = t.schema.getOrElse(source.schema)
     // column compatibility: same names and types (order-free — the source
     // is re-projected to epoch order), keys present in both
     val tShape = schema.fields.map(f => (f.name, f.dataType.catalogString)).toSet
@@ -596,77 +618,40 @@ object GraftTableOptimize {
     val src = source.select(schema.fieldNames.toSeq.map(col): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val srcCount = src.count()
+      // 1. the source row count and the duplicate-key check in one action
+      val perKey = src.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
+      val counts = perKey.agg(sum(col("n")), max(col("n")),
+        max_by(struct((keys :+ "n").map(col): _*), col("n"))).head()
+      val srcCount = if (counts.isNullAt(0)) 0L else counts.getLong(0)
       if (srcCount == 0)
-        return MergeReport(members.length, 0, 0L, 0L, members.length)
-      // key-unique or no deterministic winner exists
-      val dupKeys = src.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1).limit(1).collect()
-      require(dupKeys.isEmpty,
-        s"merge source holds duplicate keys (e.g. ${dupKeys.headOption.mkString}) — " +
+        return MergeReport(t.members.length, 0, 0L, 0L, t.members.length)
+      require(counts.getLong(1) == 1L,
+        s"merge source holds duplicate keys (e.g. ${counts.getStruct(2)}) — " +
           "keep-last needs an order only the caller can define; dedup the source first")
-      if (members.isEmpty) {
-        // empty table: pure insert through the ordinary swap staging
-        val mrgId = maintenanceId("mrg")
-        val staging = GraftParquetWrite.stagingDir(table, mrgId)
-        fs.mkdirs(staging)
-        // size the pure insert like every other write path — a large
-        // backfill into a fresh table must not serialize into one slab
-        val nOut = math.max(1,
-          math.ceil((srcCount * 64L).toDouble / targetBytes).toInt)
-        publishWideningEpoch(fs, table, staging, schema, src.schema)
-        val moved = stageRewrite(fs, staging, mrgId, shapeForWrite(src, nOut, clusterBy))
-        GraftParquetWrite.commitLines(fs, table, staging, addLines(moved))
-        return MergeReport(0, 0, 0L, srcCount,
-          GraftParquetWrite.listDataFiles(fs, table).length)
-      }
       val srcKeys = src.select(keys.map(col): _*)
-      // discovery: ONE keys-only scan of the table (columnar projection
-      // pushdown) joined against the broadcast source keys — matched rows
-      // per file = the candidate set AND the exact update count. On a
-      // clustered table the scan's runtime join filters prune slabs whose
-      // key zones miss the source entirely.
-      val matchedByFile: Map[String, Long] =
-        readUnderEpoch(spark, epoch, members.map(_.getPath.toString))
+      // 2. keyed discovery: per matched key, its table rows and files
+      val matched =
+        if (t.members.isEmpty) Array.empty[Row]
+        else readUnderEpoch(spark, t.epoch, t.members.map(_.getPath.toString))
           .select((keys.map(col) :+ input_file_name().as("__f")): _*)
           .join(broadcast(srcKeys), keys, "left_semi")
-          .groupBy(col("__f")).agg(count(lit(1)).as("n"))
-          .collect().map { r =>
-            val u = r.getString(0)
-            (u.substring(u.lastIndexOf('/') + 1), r.getLong(1))
-          }.toMap
-      val cands = members.filter(st => matchedByFile.contains(st.getPath.getName))
-      val rowsUpdated = matchedByFile.values.sum
-      // inserts = source rows matching NO table key. Matched DISTINCT table
-      // keys == matched source rows (the source is key-unique), computed
-      // with the small side broadcast — the candidate scan is the big side
-      val rowsInserted =
-        if (cands.isEmpty) srcCount
-        else srcCount - readUnderEpoch(spark, epoch, cands.map(_.getPath.toString))
-          .select(keys.map(col): _*)
-          .join(broadcast(srcKeys), keys, "left_semi")
-          .distinct().count()
-      val mrgId = maintenanceId("mrg")
-      val staging = GraftParquetWrite.stagingDir(table, mrgId)
-      fs.mkdirs(staging)
-      val bytes = cands.map(_.getLen).sum + math.max(1L, srcCount * 64L)
-      val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      val survivors =
+          .groupBy(keys.map(col): _*)
+          .agg(count(lit(1)).as("n"), collect_set(col("__f")).as("files"))
+          .select("n", "files").collect()
+      val candNames = matched.iterator.flatMap(_.getSeq[String](1))
+        .map(u => u.substring(u.lastIndexOf('/') + 1)).toSet
+      val cands = t.members.filter(st => candNames.contains(st.getPath.getName))
+      val rowsUpdated = matched.iterator.map(_.getLong(0)).sum
+      val rowsInserted = srcCount - matched.length
+      // 3. candidates minus their matched rows, plus the whole source
+      val replacement =
         if (cands.isEmpty) src
-        else readUnderEpoch(spark, epoch, cands.map(_.getPath.toString))
+        else readUnderEpoch(spark, t.epoch, cands.map(_.getPath.toString))
           .join(broadcast(srcKeys), keys, "left_anti")
           .unionByName(src)
-      val shaped = shapeForWrite(survivors, nOut, clusterBy)
-      // a nullable source column merged into a non-nullable epoch widens
-      // the epoch BEFORE the swap (see publishWideningEpoch)
-      publishWideningEpoch(fs, table, staging, schema, shaped.schema)
-      val moved = stageRewrite(fs, staging, mrgId, shaped)
-      val lines = addLines(moved) ++ cands.map(st => s"~${st.getPath.getName}")
-      GraftParquetWrite.commitLines(fs, table, staging, lines)
-      foldSidecars(fs, table): Unit
-      foldLog(fs, table, retainLog): Unit
-      MergeReport(members.length, cands.length, rowsUpdated, rowsInserted,
-        GraftParquetWrite.listDataFiles(fs, table).length)
+      val after = swap(t, "mrg", cands, cands.map(_.getLen).sum + srcCount * 64L, replacement,
+        mayAddNulls = true)
+      MergeReport(t.members.length, cands.length, rowsUpdated, rowsInserted, after)
     } finally src.unpersist(): Unit
   }
 

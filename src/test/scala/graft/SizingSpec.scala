@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.v2.GraftTableOptimize
 import graft.streaming.{Bm25Index, KeyTableSidecar}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,6 +32,8 @@ class SizingSpec extends AnyFunSuite {
   private def oldKeyTableShards(keyCount: Long): Int =
     if (keyCount <= 0) 1
     else math.min(16384L, math.max(1L, (keyCount * 9L + (64L << 20) - 1) / (64L << 20))).toInt
+  private def oldMaintenanceFiles(bytes: Long, targetBytes: Long): Int =
+    math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
 
   private def vectorWidth(est: BigInt, slots: Int) =
     Sizing.count(est, Sizing.VectorKernelBytes, slots)
@@ -49,6 +52,12 @@ class SizingSpec extends AnyFunSuite {
     }
     for (keys <- estimates.map(_.toLong))
       assert(KeyTableSidecar.deriveShards(keys) == oldKeyTableShards(keys), s"keys=$keys")
+    // table maintenance output files, at the default target and at 1 B
+    // per file (100 TB saturates Int there, as the old toInt did)
+    for (target <- Seq(128L << 20, 1L);
+         bytes <- estimates.map(_.toLong) ++ Seq(target - 1, target, target + 1) if bytes > 0)
+      assert(GraftTableOptimize.outputFiles(bytes, target) == oldMaintenanceFiles(bytes, target),
+        s"maintenance bytes=$bytes target=$target")
   }
 
   test("the table spans both clamps, so the pins above are not vacuous") {
@@ -58,6 +67,8 @@ class SizingSpec extends AnyFunSuite {
     assert(Bm25Index.deriveShards(BigInt(100L) << 40) == 6400)
     assert(Bm25Index.deriveSplits(textWidth(BigInt(GiB), 32), 3) == 11)
     assert(KeyTableSidecar.deriveShards(100L << 40) == Sizing.MaxShards)
+    assert(GraftTableOptimize.outputFiles((128L << 20) + 1, 128L << 20) == 2)
+    assert(GraftTableOptimize.outputFiles(100L << 40, 1L) == Int.MaxValue)
     // a smaller per-unit target derives more units from the same estimate
     assert(Sizing.count(BigInt(KiB), 64L, Sizing.MaxShards) == 16)
     assert(Sizing.count(BigInt(KiB), Sizing.Bm25ShardBytes, Sizing.MaxShards) == 1)
@@ -71,6 +82,7 @@ class SizingSpec extends AnyFunSuite {
     }
     assert(Bm25Index.deriveShards(BigInt(0)) == 1)
     assert(KeyTableSidecar.deriveShards(0L) == 1)
+    assert(GraftTableOptimize.outputFiles(0L, 128L << 20) == 1)
   }
 
   test("Auto defers to the derivation, Fixed ignores it, Fixed rejects non-positive") {

@@ -1450,6 +1450,68 @@ class ZoneMapSpec extends SparkTestBase {
       Seq((1L, "a"), (2L, "b")).toDF("id", "name"), Seq("id"))
     assert(pure.rowsInserted == 2L && pure.rowsUpdated == 0L)
     assert(spark.read.format("graft-parquet").load(fresh).count() == 2)
+    // one key held by TWO table files: both rows count as updated, both
+    // files are candidates, the insert count stays exact, one row remains
+    val split = freshTable("graft-zm-mergesplit")
+    Seq(Seq((7L, "a1"), (1L, "x")), Seq((7L, "a2"), (2L, "y")), Seq((100L, "z")))
+      .foreach(_.toDF("id", "name").coalesce(1)
+        .write.format("graft-parquet").mode("append").save(split))
+    val two = GraftTableOptimize.merge(spark, split,
+      Seq((7L, "new-7"), (300L, "ins-300")).toDF("id", "name"), Seq("id"))
+    assert(two.filesScanned == 3 && two.filesRewritten == 2 &&
+      two.rowsUpdated == 2L && two.rowsInserted == 1L, s"got $two")
+    val splitBack = spark.read.format("graft-parquet").load(split)
+    assert(splitBack.filter(col("id") === 7L).as[(Long, String)].collect().toSeq ==
+      Seq((7L, "new-7")))
+    assert(splitBack.select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 7L, 100L, 300L))
+  }
+
+  /** Four 25-row id slabs, written like the lifecycle workload's table. */
+  private def slabTable(prefix: String): String = {
+    val dir = freshTable(prefix)
+    (0 until 4).foreach { i =>
+      spark.range(i * 25L, (i + 1) * 25L)
+        .select(col("id"), concat(lit("old-"), col("id")).as("name"))
+        .coalesce(1).write.format("graft-parquet").mode("append").save(dir)
+    }
+    dir
+  }
+
+  test("merge with updates and inserts into a multi-file table stays within its job budget") {
+    import graft.sources.v2.GraftTableOptimize
+    val dir = slabTable("graft-zm-mergejobs")
+    // updates span two slabs, inserts are new keys
+    val src = spark.range(20L, 30L).select(col("id"), concat(lit("new-"), col("id")).as("name"))
+      .union(spark.range(200L, 205L).select(col("id"), concat(lit("ins-"), col("id")).as("name")))
+    val (rep, jobs) = org.apache.spark.JobCounter.count(spark.sparkContext)(
+      GraftTableOptimize.merge(spark, dir, src, Seq("id"), clusterBy = Seq("id")))
+    assert(rep.filesRewritten == 2 && rep.rowsUpdated == 10L && rep.rowsInserted == 5L, s"$rep")
+    assert(spark.read.format("graft-parquet").load(dir).count() == 105)
+    // the source count and the duplicate check are one action, and one
+    // keyed discovery yields candidates, updates and inserts
+    assert(jobs <= 12, s"merge ran $jobs jobs")
+  }
+
+  test("deleteWhere and updateWhere stay within their job budgets; a delete widens no epoch") {
+    import graft.sources.v2.GraftTableOptimize
+    val dir = slabTable("graft-zm-rowjobs")
+    val schemaRecords = GraftTableOptimize.fsck(spark, dir).schemaRecords
+    val (del, delJobs) = org.apache.spark.JobCounter.count(spark.sparkContext)(
+      GraftTableOptimize.deleteWhere(spark, dir, col("id") < 30L, purge = false,
+        clusterBy = Seq("id")))
+    assert(del.filesRewritten == 2 && del.rowsDeleted == 30L, s"$del")
+    assert(GraftTableOptimize.fsck(spark, dir).schemaRecords == schemaRecords,
+      "a delete only drops rows, so it must publish no schema record")
+    val (upd, updJobs) = org.apache.spark.JobCounter.count(spark.sparkContext)(
+      GraftTableOptimize.updateWhere(spark, dir, col("id") >= 70L,
+        Seq("name" -> concat(lit("upd-"), col("name"))), clusterBy = Seq("id")))
+    assert(upd.filesRewritten == 2 && upd.rowsUpdated == 30L, s"$upd")
+    assert(spark.read.format("graft-parquet").load(dir)
+      .filter(col("name").startsWith("upd-")).count() == 30)
+    // the swap MERGE shares must add no job to either
+    assert(delJobs <= 4, s"deleteWhere ran $delJobs jobs")
+    assert(updJobs <= 4, s"updateWhere ran $updJobs jobs")
   }
 
   test("retention fold keeps a base snapshot plus the newest records; seqs stay resolvable") {
