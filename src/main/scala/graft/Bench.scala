@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.ParquetRead
+
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, prints one JSON line with per-query wall seconds.
   *
@@ -30,7 +32,7 @@ object Bench {
     val spark = GraftSession.get("graft-bench")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      try ParquetRead(spark, s"$sfDir/$t.parquet").count()
       catch { case _: Throwable => () }
     }
     // a failed run returns the -1.0 sentinel, NOT its elapsed time — a broken

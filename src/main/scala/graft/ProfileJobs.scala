@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.ParquetRead
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -33,7 +35,7 @@ object ProfileJobs {
       "curation_pipeline_v4", "table_merge_upsert", "optimize_roundtrip",
       "time_travel_across_optimize", "hybrid_rrf", "dpp_join")
     Seq("documents", "embeddings", "events", "lineitem", "orders").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      try ParquetRead(spark, s"$sfDir/$t.parquet").count()
       catch { case scala.util.control.NonFatal(_) => () }
     }
     names.foreach { n =>

@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.ParquetRead
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import scala.collection.mutable
 
@@ -45,7 +47,7 @@ object ProfileJobs2 {
       }
     })
     val fn = SparkEntry.queries(name)
-    spark.read.parquet(s"$sfDir/documents.parquet").count()
+    ParquetRead(spark, s"$sfDir/documents.parquet").count()
     fn(spark, sfDir).count() // warm
     jobs.clear(); byId.clear()
     val t0 = System.nanoTime()

@@ -3,7 +3,7 @@ package graft
 import graft.functions.{Registry, VectorExpressions}
 import graft.operators.{Dedup, EntityResolution, Multimodal, Ops, Sampling, Similarity, TextAnalysis}
 import graft.sinks.Sinks
-import graft.sources.Sources
+import graft.sources.{ParquetRead, Sources}
 import graft.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -325,7 +325,7 @@ object SparkEntry {
       // files) planning metadata reads). Oracle: the same window on the
       // source table, flag stated TRUE.
       val out = scratchDir("graft_zonemap") + "/t"
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       val n = ev.count()
       val slabs = 8
@@ -361,7 +361,7 @@ object SparkEntry {
       // The flag pins that the planned scan really carries the pushed
       // metadata answer. Oracle: the same aggregates on the source table.
       val out = scratchDir("graft_metadata_agg") + "/t"
-      s.read.parquet(s"$dir/events.parquet")
+      ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.format("graft-parquet").mode("append").save(out)
       val agged = s.read.format("graft-parquet").load(out)
@@ -388,7 +388,7 @@ object SparkEntry {
       import s.implicits._
       val root = scratchDir("graft_dpp")
       val factDir = s"$root/fact"
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("value"))
       val n = ev.count()
       val slabs = 8
@@ -425,7 +425,7 @@ object SparkEntry {
         .coalesce(1).write.parquet(dimDir)
       val fact = s.read.format("graft-parquet").load(factDir)
       def hotJoin = {
-        val dimF = s.read.parquet(dimDir).filter(col("attr") === "hot")
+        val dimF = ParquetRead(s, dimDir).filter(col("attr") === "hot")
         fact.join(dimF, fact("event_id") === dimF("k"))
           .select(col("event_id"), col("user_id"), col("value"))
       }
@@ -461,7 +461,7 @@ object SparkEntry {
       // small-file tail, and this drives its most dangerous path —
       // deleting committed files via removal lines — under the oracle.
       val out = scratchDir("graft_optimize") + "/t"
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       val n = ev.count()
       val commits = 12
@@ -504,7 +504,7 @@ object SparkEntry {
       // absent. Oracle: the slices partition events, so the table is
       // exactly the source.
       val out = scratchDir("graft_stream_ingest") + "/t"
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("value"))
       def slice(r: Int) = ev.filter(pmod(col("event_id"), lit(3)) === r)
       val w0 = graft.streaming.TableIngest.ingestBatch(slice(0), out, 0L)
@@ -527,7 +527,7 @@ object SparkEntry {
       // moved past the snapshot (all three slices, a strictly higher seq)
       // so the oracle hash is proving time travel, not a stalled table.
       val out = scratchDir("graft_timetravel") + "/t"
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("value"))
       def slice(r: Int) = ev.filter(pmod(col("event_id"), lit(3)) === r)
       graft.streaming.TableIngest.ingestBatch(slice(0), out, 0L)
@@ -557,7 +557,7 @@ object SparkEntry {
       // sacrificial table proves the other half of the contract: history
       // retired past the horizon (fold-everything + vacuum) kills its
       // handle LOUDLY at plan time — never an empty or dangling read.
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       val n = ev.count()
       def build(out: String): Unit =
@@ -607,7 +607,7 @@ object SparkEntry {
       // Oracle: the evolved column equals event_type exactly on the evolved
       // slice and NULL on the pre-evolution slice.
       val out = scratchDir("graft_evolve") + "/t"
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
       ev.filter(pmod(col("event_id"), lit(2)) === 0)
         .drop("event_type")
@@ -641,7 +641,7 @@ object SparkEntry {
       // holds at every scale factor; the oracle recomputes it with
       // integer division.
       val out = scratchDir("graft_delete") + "/t"
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("value"))
       val commits = 12
       (0 until commits).foreach { r =>
@@ -679,7 +679,7 @@ object SparkEntry {
       // training-checkpoint workflow: the job stores one long in its
       // checkpoint table and re-materializes its corpus bit-for-bit later.
       val out = scratchDir("graft_replay") + "/t"
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("value"))
       def slice(r: Int) = ev.filter(pmod(col("event_id"), lit(3)) === r)
       val r0 = graft.streaming.TableIngest.ingestBatchRecorded(slice(0), out, 0L)
@@ -712,7 +712,7 @@ object SparkEntry {
       // reuse >= all-but-two, AS-OF resolving through the tiering; the
       // oracle hash pins the membership bit-exact.
       val out = scratchDir("graft_shardfold") + "/t"
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("value"))
       val commits = 12
       def slice(r: Int) = ev.filter(pmod(col("event_id"), lit(commits)) === r)
@@ -761,7 +761,7 @@ object SparkEntry {
       // NARROW schema. Oracle: DuckDB reproduces the float round-trip with
       // CAST(CAST(value AS REAL) AS DOUBLE) — identical IEEE rounding.
       val out = scratchDir("graft_widen") + "/t"
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("value"))
       // the int-range guard keeps the claim scale-free: an even id beyond
       // Int.MaxValue would wrap under the narrow-era cast, so both engines
@@ -802,7 +802,7 @@ object SparkEntry {
       // rewritten slabs' zones tight. The cutoff derives from the data so
       // the pruning claim holds at every scale factor.
       val out = scratchDir("graft_update") + "/t"
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("value"))
       val commits = 12
       (0 until commits).foreach { r =>
@@ -838,7 +838,7 @@ object SparkEntry {
       // pins filesRewritten < filesScanned plus the exact update/insert
       // split; untouched files never rewrite.
       val out = scratchDir("graft_merge") + "/t"
-      val od = s.read.parquet(s"$dir/orders.parquet")
+      val od = ParquetRead(s, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       val commits = 12
       (0 until commits).foreach { r =>
@@ -884,7 +884,7 @@ object SparkEntry {
       // certifies nothing missing; the oracle hash pins that the union is
       // exactly the source — no row lost to the race, none duplicated.
       val out = scratchDir("graft_concurrent") + "/t"
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = ParquetRead(s, s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("value"))
       val barrier = new java.util.concurrent.CyclicBarrier(2)
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -2039,7 +2039,7 @@ object SparkEntry {
         sidecarMaxBytes = 0L): Unit
       val tomb = batch.select(col("doc_id")).filter(pmod(col("doc_id"), lit(14)) === 0)
       graft.streaming.Streaming.purgeCorpus(s, corpus, tomb, "doc_id", Seq("text")): Unit
-      s.read.parquet(corpus).select(col("doc_id"), col("lang"))
+      ParquetRead(s, corpus).select(col("doc_id"), col("lang"))
     }),
 
     "gdpr_tombstone_log" -> ((s, dir) => {
@@ -2074,7 +2074,7 @@ object SparkEntry {
       val flushed = Tomb.flushPurge(s, corpus, "doc_id", Seq("text"))
       val retired = flushed.exists(_._2 == 2) && // both requests, one rewrite
         graft.streaming.TombstoneLog.pending(s, corpus, "doc_id").count() == 0L
-      val after = s.read.parquet(corpus).groupBy(col("lang"))
+      val after = ParquetRead(s, corpus).groupBy(col("lang"))
         .agg(count(lit(1)).as("n_after"))
       pre.join(after, Seq("lang"), "left")
         .select(col("lang"), col("n_compliant"),
@@ -2135,7 +2135,7 @@ object SparkEntry {
         sidecarMaxBytes = 0L): Unit
       // the index holds exactly the gated corpus; materialized because the
       // flush below rewrites the very files this frame reads
-      val admitted = Checkpointing.materialize(s.read.parquet(corpus))
+      val admitted = Checkpointing.materialize(ParquetRead(s, corpus))
       // data-derived shards, not a hand-tuned constant: shard count never
       // touches scores (bm25_index_topk exercises the 64 default), and the
       // bytes-per-shard rule sizes the test corpus and a 100 TB corpus by
@@ -2162,7 +2162,7 @@ object SparkEntry {
       // the rewritten corpus) ride a tagged union instead of two
       // sequential counts; the numbers are identical by construction
       val audit = admitted.filter(purgePred).select(lit(0).as("__side"))
-        .unionByName(s.read.parquet(corpus).filter(purgePred)
+        .unionByName(ParquetRead(s, corpus).filter(purgePred)
           .select(lit(1).as("__side")))
         .groupBy(col("__side")).count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -2173,7 +2173,7 @@ object SparkEntry {
         (0L, "spark join performance"),
         (1L, "window agg order"),
         (2L, "hash table scan")).toDF("query_id", "qtext")
-      val corpusSide = s.read.parquet(corpus).groupBy(col("lang"))
+      val corpusSide = ParquetRead(s, corpus).groupBy(col("lang"))
         .agg(count(lit(1)).as("n_compliant"))
         .select(lit("corpus").as("kind"), col("lang"), col("n_compliant"),
           lit(null).cast("long").as("query_id"), lit(null).cast("long").as("doc_id"),
@@ -2317,7 +2317,7 @@ object SparkEntry {
       Similarity.writeIvfIndex(assignments, out)
       val tomb = emb.select(col("vec_id")).filter(pmod(col("vec_id"), lit(13)) === 0)
       graft.streaming.IvfIngest.purge(s, out, tomb, "vec_id"): Unit
-      s.read.parquet(out).select(col("vec_id").cast("long").as("vec_id"),
+      ParquetRead(s, out).select(col("vec_id").cast("long").as("vec_id"),
         col("centroid_id").cast("long").as("centroid_id"))
     }),
 

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.ParquetRead
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -391,7 +393,7 @@ object Multimodal {
     */
   def mediaFromDocuments(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = ParquetRead(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "source", "lang")
       .as[(Long, String, String)]
     docs.map { case (docId, source, lang) =>

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{VectorExpressions, VectorKernels}
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -386,7 +387,7 @@ object Similarity {
       spark: SparkSession, indexDir: String, model: IvfModel,
       idCol: String, vecCol: String,
       query: Array[Float], k: Int, nprobe: Int): DataFrame =
-    ivfTopK(spark.read.parquet(indexDir), model, idCol, vecCol, query, k, nprobe)
+    ivfTopK(ParquetRead(spark, indexDir), model, idCol, vecCol, query, k, nprobe)
 
   /** IVF probe: rank centroids against the query on the driver (the codebook
     * is tiny), then brute-force only inside the `nprobe` nearest lists — an

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.operators.Ops
 import graft.sinks.Sinks
-import graft.sources.Sources
+import graft.sources.{ParquetRead, Sources}
 import graft.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
@@ -646,7 +646,7 @@ object PipelineConfig {
     val driftFn: Option[DataFrame => Unit] = driftSection.collect {
       case (failMode, false, refPath, bucketStr, maxTvd) => df =>
         import org.apache.spark.sql.functions.{coalesce, col, expr, lit, max, sum}
-        val reference = spark.read.parquet(refPath)
+        val reference = ParquetRead(spark, refPath)
         val agg = graft.operators.DataChecks
           .distributionDrift(reference, df, expr(bucketStr))
           .agg(coalesce(sum(col("count_b")), lit(0L)).as("n"),
@@ -664,7 +664,7 @@ object PipelineConfig {
         case (failMode, true, refPath, bucketStr, maxTvd) => df =>
           import org.apache.spark.sql.functions.expr
           val (instrumented, tvdThunk) = graft.operators.DataChecks
-            .observedDrift(df, spark.read.parquet(refPath), expr(bucketStr))
+            .observedDrift(df, ParquetRead(spark, refPath), expr(bucketStr))
           (instrumented,
             () => tvdThunk().foreach(driftVerdict(failMode, _, maxTvd, refPath)))
       }

@@ -2,6 +2,7 @@ package graft.sinks
 
 import graft.types._
 import graft.functions.Registry
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -385,7 +386,7 @@ object Sinks {
     df.write.mode(SaveMode.ErrorIfExists).parquet(runPath)
     () => {
       val latest = s"$baseDir/latest"
-      df.sparkSession.read.parquet(runPath).write.mode(SaveMode.Overwrite).parquet(latest)
+      ParquetRead(df.sparkSession, runPath).write.mode(SaveMode.Overwrite).parquet(latest)
     }
   }
 

@@ -28,7 +28,7 @@ object Sources {
 
   /** S1-analog primary scan: columnar, partitioned, pushdown-friendly. */
   final case class ParquetSource(path: String) extends Source {
-    def load(spark: SparkSession): DataFrame = spark.read.parquet(path)
+    def load(spark: SparkSession): DataFrame = ParquetRead(spark, path)
   }
 
   /** S3-analog chunked CSV scan with rename + lenient type maps applied
@@ -189,7 +189,7 @@ object Sources {
     // (it is runtime-settable); without it the NANOS column is unreadable.
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     catch { case _: Throwable => () }
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = ParquetRead(spark, s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // TIMESTAMP(NANOS) parquet, surfaced as an epoch-ns long. Integer

@@ -1,5 +1,7 @@
 package graft.sources.v2
 
+import graft.sources.ParquetRead
+
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
@@ -115,8 +117,7 @@ class GraftParquetSource extends TableProvider with DataSourceRegister {
         case Some(s) if GraftParquetWrite.logRecordFiles(fs, p).nonEmpty =>
           val members = GraftParquetWrite.listDataFiles(fs, p, Some(s))
           if (members.isEmpty) new StructType()
-          else SparkSession.active.read
-            .parquet(members.map(_.getPath.toString).min).schema
+          else ParquetRead(SparkSession.active, members.map(_.getPath.toString).min).schema
         // a target holding only hidden entries — a concurrent first
         // writer's `_write_*` staging dir, say — is still empty: infer it
         // like a missing one instead of failing Spark's inference
@@ -124,7 +125,7 @@ class GraftParquetSource extends TableProvider with DataSourceRegister {
             val n = st.getPath.getName
             n.startsWith("_") || n.startsWith(".")
           } => new StructType()
-        case _ => SparkSession.active.read.parquet(path).schema
+        case _ => ParquetRead(SparkSession.active, path).schema
       }
     }
     }

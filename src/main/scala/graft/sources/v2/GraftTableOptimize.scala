@@ -1,5 +1,7 @@
 package graft.sources.v2
 
+import graft.sources.ParquetRead
+
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -199,8 +201,8 @@ object GraftTableOptimize {
     */
   private def readUnderEpoch(spark: SparkSession, epoch: Option[StructType],
       paths: Seq[String]): DataFrame = {
-    val r = spark.read
-    epoch.fold(r)(r.schema).parquet(paths.toIndexedSeq: _*)
+    val ps = paths.toIndexedSeq
+    epoch.fold(ParquetRead(spark, ps: _*))(e => spark.read.schema(e).parquet(ps: _*))
   }
 
   /** Staging step of every swap (OPTIMIZE's, and the row-level [[swap]]
@@ -280,7 +282,7 @@ object GraftTableOptimize {
     val members = GraftParquetWrite.listDataFiles(fs, table)
     val epoch = GraftParquetWrite.latestSchemaAt(fs, table, None)
     val schema = epoch.orElse(members.headOption.map(st =>
-      spark.read.parquet(st.getPath.toString).schema))
+      ParquetRead(spark, st.getPath.toString).schema))
     RowLevel(spark, path, fs, table, members, epoch, schema, targetBytes, purge, retainLog,
       clusterBy)
   }
@@ -292,9 +294,15 @@ object GraftTableOptimize {
     * straight into purgeFinalize's irreversible history collapse while
     * reporting a successful no-op. DELETE validates as an UPDATE with no
     * assignments.
+    *
+    * Returns the assigned columns the rewrite can make NULL: those whose
+    * expression is nullable over the probe, which carries the epoch's
+    * nullability (a parquet read reports every column nullable, so the
+    * rewrite's own frame cannot tell).
     */
-  private def validateWhere(t: RowLevel, condition: Column, set: Seq[(String, Column)]): Unit =
-    t.schema.foreach { sch =>
+  private def validateWhere(t: RowLevel, condition: Column,
+      set: Seq[(String, Column)]): Set[String] =
+    t.schema.fold(Set.empty[String]) { sch =>
       set.foreach { case (name, _) =>
         require(sch.fieldNames.contains(name),
           s"updateWhere assignment targets unknown column '$name' " +
@@ -303,6 +311,8 @@ object GraftTableOptimize {
       val probe = t.spark.createDataFrame(java.util.Collections.emptyList[Row](), sch)
       applyAssignments(probe.filter(condition), sch, condition, set)
         .queryExecution.analyzed: Unit
+      probe.select(set.map { case (name, e) => e.cast(sch(name).dataType).as(name) }: _*)
+        .schema.filter(_.nullable).map(_.name).toSet
     }
 
   /** The one swap of DELETE, UPDATE and MERGE — the crash-safe manifest
@@ -312,10 +322,10 @@ object GraftTableOptimize {
     *  1. a maintenance-unique staging dir; with `purge`, the purge-pending
     *     marker lands BEFORE the commit point, so every crash window after
     *     rows start disappearing re-runs into purgeFinalize;
-    *  2. a replacement that may hold NULLs (`mayAddNulls`: UPDATE's
-    *     assignments, MERGE's source — never DELETE's subset of the rows)
-    *     first publishes the nullability-widened epoch
-    *     ([[publishWideningEpoch]]);
+    *  2. a replacement that may hold NULLs in the `nullable` columns
+    *     (UPDATE's nullable assignments, MERGE's nullable source columns —
+    *     never DELETE's subset of the rows) first publishes the
+    *     nullability-widened epoch ([[publishWideningEpoch]]);
     *  3. `bytes` sizes the output to ~targetBytes files, and `clusterBy`
     *     keeps the table's layout through the rewrite ([[shapeForWrite]]):
     *     a non-range delete (user_id IN ...) on an event_id-clustered table
@@ -329,14 +339,14 @@ object GraftTableOptimize {
     * Returns the member count after the swap.
     */
   private def swap(t: RowLevel, kind: String, retired: Seq[FileStatus], bytes: Long,
-      replacement: DataFrame, mayAddNulls: Boolean): Int = {
+      replacement: DataFrame, nullable: Set[String]): Int = {
     val id = maintenanceId(kind)
     val staging = GraftParquetWrite.stagingDir(t.table, id)
     t.fs.mkdirs(staging)
     if (t.purge) t.fs.create(purgePendingMarker(t.table), true).close()
-    if (mayAddNulls)
+    if (nullable.nonEmpty)
       publishWideningEpoch(t.fs, t.table, staging, t.schema.getOrElse(replacement.schema),
-        replacement.schema)
+        nullable)
     val moved = stageRewrite(t.fs, staging, id,
       shapeForWrite(replacement, outputFiles(bytes, t.targetBytes), t.clusterBy))
     GraftParquetWrite.commitLines(t.fs, t.table, staging,
@@ -381,7 +391,7 @@ object GraftTableOptimize {
     * touches no history (an interrupted purge already converged in
     * [[resolve]]). Returns (files rewritten, rows matched, files after).
     */
-  private def rewriteWhere(t: RowLevel, kind: String, condition: Column, mayAddNulls: Boolean)
+  private def rewriteWhere(t: RowLevel, kind: String, condition: Column, nullable: Set[String])
       (replace: (DataFrame, StructType) => DataFrame): (Int, Long, Int) = t.schema match {
     case Some(schema) if t.members.nonEmpty =>
       val trueByFile = discoverMatches(t, schema, condition)
@@ -390,7 +400,7 @@ object GraftTableOptimize {
       else {
         val rows = readUnderEpoch(t.spark, t.epoch, cands.map(_.getPath.toString))
         (cands.length, trueByFile.values.sum, swap(t, kind, cands, cands.map(_.getLen).sum,
-          replace(rows, schema), mayAddNulls))
+          replace(rows, schema), nullable))
       }
     case _ => (0, 0L, 0)
   }
@@ -444,8 +454,8 @@ object GraftTableOptimize {
       clusterBy: Seq[String] = Nil): DeleteReport = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val t = resolve(spark, path, targetBytes, purge, retainLog, clusterBy)
-    validateWhere(t, condition, Nil)
-    val (rewritten, rowsDeleted, after) = rewriteWhere(t, "del", condition, mayAddNulls = false) {
+    validateWhere(t, condition, Nil): Unit
+    val (rewritten, rowsDeleted, after) = rewriteWhere(t, "del", condition, Set.empty) {
       (rows, _) => rows.filter(not(coalesce(condition, lit(false))))
     }
     DeleteReport(t.members.length, rewritten, rowsDeleted, after, purge)
@@ -505,10 +515,10 @@ object GraftTableOptimize {
       clusterBy: Seq[String] = Nil): UpdateReport = {
     require(set.nonEmpty, "updateWhere needs at least one column assignment")
     val t = resolve(spark, path, targetBytes, purge, retainLog, clusterBy)
-    validateWhere(t, condition, set)
+    val nullable = validateWhere(t, condition, set)
     // every candidate row rewrites; matched rows carry the assignments
     // (gated TRUE-only via when), the rest pass through byte-identical
-    val (rewritten, rowsUpdated, after) = rewriteWhere(t, "upd", condition, mayAddNulls = true) {
+    val (rewritten, rowsUpdated, after) = rewriteWhere(t, "upd", condition, nullable) {
       (rows, schema) => applyAssignments(rows, schema, condition, set)
     }
     UpdateReport(t.members.length, rewritten, rowsUpdated, after, purge)
@@ -525,15 +535,15 @@ object GraftTableOptimize {
     * (race-free inside the op's exclusive maintenance window) through
     * [[GraftParquetWrite.appendSchemaRecord]], which keeps it idempotent
     * by the op's id and nullability/type-monotone against the live epoch.
+    * `nullable` comes from what the rewrite writes (UPDATE's assignments
+    * probed under the epoch, MERGE's source schema), never from the
+    * rewrite's frame: a parquet read reports every column nullable, and
+    * widening from it would widen every column on the first UPDATE.
     */
   private def publishWideningEpoch(fs: FileSystem, table: Path, staging: Path,
-      epoch: StructType, written: StructType): Unit = {
+      epoch: StructType, nullable: Set[String]): Unit = {
     val widened = StructType(
-      epoch.fields.zipWithIndex.map { case (ef, i) =>
-        val introducesNull = i < written.fields.length &&
-          written.fields(i).name == ef.name && written.fields(i).nullable
-        ef.copy(nullable = ef.nullable || introducesNull)
-      })
+      epoch.fields.map(ef => ef.copy(nullable = ef.nullable || nullable(ef.name))))
     if (!widened.fields.map(_.nullable).sameElements(epoch.fields.map(_.nullable))) {
       val recs = GraftParquetWrite.logRecordFiles(fs, table)
       val seq =
@@ -650,7 +660,7 @@ object GraftTableOptimize {
           .join(broadcast(srcKeys), keys, "left_anti")
           .unionByName(src)
       val after = swap(t, "mrg", cands, cands.map(_.getLen).sum + srcCount * 64L, replacement,
-        mayAddNulls = true)
+        source.schema.filter(_.nullable).map(_.name).toSet)
       MergeReport(t.members.length, cands.length, rowsUpdated, rowsInserted, after)
     } finally src.unpersist(): Unit
   }

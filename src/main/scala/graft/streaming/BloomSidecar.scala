@@ -22,8 +22,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * [[BloomSidecar.merge]] all probe identically via `mightContain`.
   *
   * The file lives INSIDE the corpus directory as `_bloom`: Spark's file
-  * index ignores underscore-prefixed entries, so `spark.read.parquet(corpus)`
-  * is unaffected.
+  * index, and [[graft.sources.ParquetRead]]'s listing with it, ignores
+  * underscore-prefixed entries, so a corpus read is unaffected.
   */
 final case class BloomSidecar(
     expectedItems: Long,

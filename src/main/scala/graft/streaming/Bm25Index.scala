@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.Sizing
 import graft.operators.{Retrieval, TextAnalysis}
+import graft.sources.ParquetRead
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -112,8 +113,9 @@ object Bm25Index {
       schema: Option[String], maxDirs: Int)(validate: DataFrame => Unit): Unit = {
     val dirs = completeDirs(fs, parent)
     if (dirs.length <= maxDirs) return
-    val reader = schema.fold(spark.read)(s => spark.read.schema(s))
-    val raw = reader.parquet(dirs.map(_.toString).toIndexedSeq: _*)
+    val paths = dirs.map(_.toString).toIndexedSeq
+    val raw = schema.fold(ParquetRead(spark, paths: _*))(s =>
+      spark.read.schema(s).parquet(paths: _*))
     validate(raw)
     val name = s"c${System.currentTimeMillis()}-${
       java.util.UUID.randomUUID().toString.take(8)}"
@@ -181,7 +183,7 @@ object Bm25Index {
     val dirs = completeDirs(fs, statsDir(dir)).map(_.toString)
     if (dirs.isEmpty) None
     else {
-      val df = spark.read.parquet(dirs.toIndexedSeq: _*)
+      val df = ParquetRead(spark, dirs.toIndexedSeq: _*)
       if (!df.columns.contains("__b"))
         throw new graft.GraftDataError(
           s"stats sidecar at ${statsDir(dir)} predates the __b batch stamp — " +
@@ -648,23 +650,20 @@ object Bm25Index {
       .withColumn("doc_id", lit(null).cast("long"))
       .withColumn("rank", lit(null).cast("long"))
       .withColumn("score", lit(null).cast("double"))
-    // rows are __b-stamped: compaction-fold crash residue duplicates them
-    // bitwise, and the distinct restores one row per committed batch
     val statsDfOpt = readStampedStats(spark, fs, dir, "querying")
     if (statsDfOpt.isEmpty) return emptyResult
-    val statsAgg = statsDfOpt.get.distinct()
-      .agg(coalesce(sum(col("n_docs")), lit(0L)).as("__nd"),
-        coalesce(sum(col("total_dl")), lit(0L)).as("__tdl"))
     // ONE driver action for everything planning needs AND scoring reuses:
-    // the corpus constants (a 1-row aggregate), the (query_id, term, shard)
-    // rows and the (doc_id, dl) purge tombstones ride a single tagged-union
-    // collect. Queries are SMALL by the same contract as bm25TopK and the
-    // tombstones are ids-sized (vacuum collects them too), so scoring reads
-    // both back as local relations instead of evaluating the tokenizer and
-    // the tombstone read a second time. The term list drives planning-time
+    // the raw stamped stats rows, the (query_id, term, shard) rows and the
+    // (doc_id, dl) purge tombstones ride a single tagged-union collect. The
+    // stats sidecar is batches-sized by contract, queries are SMALL by the
+    // same contract as bm25TopK and the tombstones are ids-sized (vacuum
+    // collects them too), so scoring reads the queries and tombstones back
+    // as local relations instead of evaluating the tokenizer and the
+    // tombstone read a second time. The term list drives planning-time
     // pruning: the shard set prunes whole directories, the IN list pushes
     // to parquet.
-    val cLeg = statsAgg.select(lit(0).as("__src"), col("__nd"), col("__tdl"))
+    val cLeg = statsDfOpt.get.select(lit(0).as("__src"), col("n_docs"), col("total_dl"),
+      col("__b"))
     val tLeg = queries.select(lit(1).as("__src"), col("query_id"),
         explode(TextAnalysis.tokens(col("qtext"))).as("term"))
       .withColumn("s", pmod(xxhash64(col("term")), lit(mod.toLong)).cast("int"))
@@ -673,11 +672,14 @@ object Bm25Index {
     val legs = cLeg.unionByName(tLeg, allowMissingColumns = true)
       .unionByName(dLeg, allowMissingColumns = true)
       .collect().groupBy(_.getAs[Int]("__src"))
-    // by NAME, not ordinal: the union appends each leg's columns, and a
-    // future reorder must not silently swap a correction into a constant
-    val cRow = legs.get(0).flatMap(_.headOption).getOrElse(
-      throw new graft.GraftDataError(
-        s"BM25 index at $indexDir: the constants aggregate returned no row"))
+    // the corpus constants are exact long sums over the DISTINCT stats
+    // rows: each is __b-stamped, so compaction-fold crash residue repeats a
+    // row bitwise and counts once. By NAME, not ordinal: the union appends
+    // each leg's columns, and a future reorder must not silently swap a
+    // correction into a constant.
+    val stats = legs.getOrElse(0, Array.empty)
+      .map(r => (r.getAs[Long]("n_docs"), r.getAs[Long]("total_dl"), r.getAs[Long]("__b")))
+      .distinct
     // purge tombstones mask the postings AND correct the corpus constants
     // from the same rows — exact long sums over the DISTINCT (doc_id, dl)
     // pairs (fold residue may repeat one; each tombstone counts once), so
@@ -688,9 +690,9 @@ object Bm25Index {
     // postings-landed/stats-pending crash window, driving the corrected
     // count below zero until the batch redelivers — degrade empty, never
     // feed a negative nDocs/avgdl into the scoring formula
-    val nDocs = cRow.getAs[Long]("__nd") - tombstones.length
+    val nDocs = stats.map(_._1).sum - tombstones.length
     if (nDocs <= 0L) return emptyResult
-    val avgdl = (cRow.getAs[Long]("__tdl") - tombstones.map(_._2).sum).toDouble / nDocs
+    val avgdl = (stats.map(_._2).sum - tombstones.map(_._2).sum).toDouble / nDocs
     val termRows = legs.getOrElse(1, Array.empty)
     val terms = termRows.map(_.getAs[String]("term")).distinct.sorted.toIndexedSeq
     if (terms.isEmpty) return emptyResult
@@ -765,7 +767,7 @@ object Bm25Index {
     // shape (distinct-then-project), only the action count changes.
     val postLeg =
       if (shardDataFiles(fs, postingsDir(dir)).isEmpty) None
-      else Some(spark.read.parquet(postingsDir(dir).toString)
+      else Some(ParquetRead(spark, postingsDir(dir).toString)
         .select(col("__b")).distinct()
         .select(lit(0).as("__src"), col("__b"), lit(0L).as("__n")))
     val statsLeg = readStampedStats(spark, fs, dir, "running fsck")

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.sources.ParquetRead
+
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -68,7 +70,7 @@ object CorpusCompaction {
       val staging = stagingDir(corpusDir)
       fs.delete(staging, true)
       val dataDir = new Path(staging, "data")
-      spark.read.parquet(smalls.map(_.getPath.toString).toIndexedSeq: _*)
+      ParquetRead(spark, smalls.map(_.getPath.toString).toIndexedSeq: _*)
         .coalesce(1)
         .write.mode("overwrite").parquet(dataDir.toString)
       val man = fs.create(manifestPath(corpusDir), true)
@@ -109,7 +111,7 @@ object CorpusCompaction {
       val staging = stagingDir(corpusDir)
       fs.delete(staging, true)
       val dataDir = new Path(staging, "data")
-      transform(spark.read.parquet(files.map(_.getPath.toString).toIndexedSeq: _*))
+      transform(ParquetRead(spark, files.map(_.getPath.toString).toIndexedSeq: _*))
         .write.mode("overwrite").parquet(dataDir.toString)
       val man = fs.create(manifestPath(corpusDir), true)
       try man.write(files.map(_.getPath.getName).mkString("\n")

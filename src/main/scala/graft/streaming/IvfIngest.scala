@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.operators.{Ops, Similarity}
 import graft.functions.VectorExpressions
+import graft.sources.ParquetRead
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -355,7 +356,7 @@ object IvfIngest {
       throw new graft.GraftDataError(s"no codebook sidecar under $indexDir"))
     val pq = readPqCodebook(fs, dir).getOrElse(
       throw new graft.GraftDataError(s"no PQ codebook sidecar under $indexDir"))
-    Similarity.ivfPqTopK(spark.read.parquet(indexDir), ivf, pq, idCol,
+    Similarity.ivfPqTopK(ParquetRead(spark, indexDir), ivf, pq, idCol,
       query, kTop, nprobe)
   }
 
@@ -430,7 +431,7 @@ object IvfIngest {
     recoverRefresh(fs, dir)
     readCodebookInfo(fs, dir).map { info =>
       val now =
-        if (assignedDataExists(fs, dir)) spark.read.parquet(indexDir).count() else 0L
+        if (assignedDataExists(fs, dir)) ParquetRead(spark, indexDir).count() else 0L
       val stale = info.rowsAtTraining < 0 ||
         now > growthRatio * info.rowsAtTraining
       IndexStaleness(info.rowsAtTraining, now, stale)
@@ -503,7 +504,7 @@ object IvfIngest {
     * count aggregation.
     */
   def listSizes(spark: org.apache.spark.sql.SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(indexDir)
+    ParquetRead(spark, indexDir)
       .groupBy(col("centroid_id")).agg(count(lit(1)).as("n"))
 
   /** Retrain the codebook over the ACCUMULATED index and rewrite the layout
@@ -534,7 +535,7 @@ object IvfIngest {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverRefresh(fs, dir) // an interrupted predecessor finishes (or clears) first
     val staging = stagingPath(dir)
-    val current = spark.read.parquet(indexDir).select(col(idCol), col(vecCol))
+    val current = ParquetRead(spark, indexDir).select(col(idCol), col(vecCol))
     val init = current.orderBy(col(idCol)).limit(nlist)
       .select(col(vecCol)).collect().map(_.getSeq[Float](0).toArray)
     val model = Similarity.IvfModel(
@@ -664,7 +665,7 @@ object IvfIngest {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverRefresh(fs, dir) // finishes a crashed refresh AND a crashed purge
     val ids = tombstones.select(col(idCol)).na.drop().distinct()
-    val index = spark.read.parquet(indexDir)
+    val index = ParquetRead(spark, indexDir)
     // partition discovery may infer centroid_id as INT — keep the native
     // values for the isin filter (a cast around the partition column would
     // defeat the pruning this operator exists for). ONE discovery pass

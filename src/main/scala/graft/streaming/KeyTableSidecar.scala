@@ -174,6 +174,8 @@ object KeyTableSidecar {
     appendKeys(keys, corpusDir, nShards, name, subSplits = 8)
   }
 
+  private val KeySchema = "__k BIGINT, __shard INT"
+
   /** The persisted table as a DataFrame (`__shard` recovered as a
     * partition column, so an `isin` filter on it prunes whole shard
     * directories at planning time). The schema is EXPLICIT, not inferred:
@@ -182,7 +184,7 @@ object KeyTableSidecar {
     * infer schema") on what is a perfectly valid — empty — gate state.
     */
   def load(spark: SparkSession, corpusDir: Path, name: String = BandName): DataFrame =
-    spark.read.schema("__k BIGINT, __shard INT")
+    spark.read.schema(KeySchema)
       .parquet(dir(corpusDir, name).toString)
 
   /** Remove `keys` (one BIGINT column `__k`) from the table, rewriting
@@ -317,7 +319,7 @@ object KeyTableSidecar {
       }
     val splitsLookup = map(splitsByShard.toSeq.flatMap { case (shard, n) =>
       Seq(lit(shard), lit(n)) }: _*)
-    val merged = spark.read.option("basePath", d.toString)
+    val merged = spark.read.schema(KeySchema).option("basePath", d.toString)
       .parquet(parsed.map(_.getPath.toString): _*)
     clusterByShard(merged, element_at(splitsLookup, col("__shard").cast("int")))
       .write.mode("append").partitionBy("__shard").parquet(d.toString)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Checkpointing
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -265,7 +266,7 @@ object Streaming {
             val nonNull = affected.filter(_ != null)
             val prune = (if (nonNull.nonEmpty) Some(col(pcol).isin(nonNull: _*)) else None) ++
               (if (affected.contains(null)) Some(col(pcol).isNull) else None)
-            val slice = spark.read.parquet(targetDir).filter(prune.reduce(_ || _))
+            val slice = ParquetRead(spark, targetDir).filter(prune.reduce(_ || _))
             val merged = graft.sinks.Sinks.upsert(slice, batch, keys, action)
             // dynamic overwrite replaces exactly the partitions present in
             // `merged` (= the affected ones); all other dirs are untouched.
@@ -319,7 +320,7 @@ object Streaming {
     }
     if (fs.exists(old)) fs.delete(old, true)
     val result = compute(
-      if (fs.exists(target)) Some(spark.read.parquet(targetDir)) else None)
+      if (fs.exists(target)) Some(ParquetRead(spark, targetDir)) else None)
     result.write.mode("overwrite").parquet(staging.toString)
     // swap: never delete the only complete copy
     if (fs.exists(target)) fs.rename(target, old)
@@ -521,7 +522,7 @@ object Streaming {
             case None =>
               // neither sidecar is fresh: ONE corpus scan rebuilds
               // whichever form fits the byte budget
-              val corpus = spark.read.parquet(corpusDir)
+              val corpus = ParquetRead(spark, corpusDir)
               val keyCnt = corpusKeyCount(corpus)
               if (overBudget(keyCnt)) tableBatch(rebuildTable(corpus, keyCnt), true, 1)
               else {
@@ -580,7 +581,7 @@ object Streaming {
         scans += 1 // exact confirmation reads the corpus digests once
         val digest = Dedup.contentDigest(contentCols)
         val confirmed = candidates.withColumn("__digest", digest)
-          .join(spark.read.parquet(corpusDir).select(digest.as("__digest")),
+          .join(ParquetRead(spark, corpusDir).select(digest.as("__digest")),
             Seq("__digest"), "left_anti")
           .drop("__digest")
         definitelyNew.unionByName(confirmed)
@@ -610,7 +611,7 @@ object Streaming {
         scans += 1 // exact confirmation reads the corpus digests once
         val digest = Dedup.contentDigest(contentCols)
         val confirmed = candidates.withColumn("__digest", digest)
-          .join(spark.read.parquet(corpusDir).select(digest.as("__digest")),
+          .join(ParquetRead(spark, corpusDir).select(digest.as("__digest")),
             Seq("__digest"), "left_anti")
           .drop("__digest")
         definitelyNew.unionByName(confirmed)
@@ -623,14 +624,14 @@ object Streaming {
         if (mergedCount > sidecar.expectedItems && gate.overBudget(mergedCount)) {
           saturated = true; scans += 1
           CorpusCompaction.compact(spark, fs, target, maxSmallFiles, minFileBytes)
-          gate.rebuildTable(spark.read.parquet(corpusDir), mergedCount)
+          gate.rebuildTable(ParquetRead(spark, corpusDir), mergedCount)
         } else {
           val (capacity, bloomBytes) =
             if (mergedCount > sidecar.expectedItems) {
               // capacity outgrown: rebuild at double size from the corpus
               // (which now includes this batch) -- amortized O(log corpus)
               saturated = true; scans += 1
-              val corpus = spark.read.parquet(corpusDir)
+              val corpus = ParquetRead(spark, corpusDir)
               val cap = math.max(2 * mergedCount, expectedCorpusItems)
               (cap, corpus.agg(
                 graft.functions.SketchFunctions.bloomFilterAgg(bloomKey, cap))
@@ -743,7 +744,7 @@ object Streaming {
     // consumer where they would (the flagging left join below) dedups there
     val ids = tombstones.select(col(idCol)).na.drop()
       .transform(Checkpointing.materialize)
-    val corpus = spark.read.parquet(corpusDir)
+    val corpus = ParquetRead(spark, corpusDir)
     // No-op probe AND the rowsRemoved stat in ONE id-column-only scan: the
     // count prunes the content columns at the parquet scan (ReadSchema is
     // the id alone), so the idempotent-replay path (tombstoned ids absent)
@@ -904,7 +905,7 @@ object Streaming {
       else {
         scans += 1 // the confirm join reads the corpus once
         kept.join(
-          Dedup.nearDupRejects(spark.read.parquet(corpusDir), candidates,
+          Dedup.nearDupRejects(ParquetRead(spark, corpusDir), candidates,
             idCol, textCol, n, threshold, numHashes, bands, seed),
           Seq(idCol), "left_anti")
       }).transform(Checkpointing.materialize)
@@ -935,7 +936,7 @@ object Streaming {
       else {
         scans += 1 // the confirm join reads the corpus once
         flagged.join(
-          Dedup.nearDupRejects(spark.read.parquet(corpusDir), candidates,
+          Dedup.nearDupRejects(ParquetRead(spark, corpusDir), candidates,
             idCol, textCol, n, threshold, numHashes, bands, seed),
           Seq(idCol), "left_anti")
       }).drop("__cand").transform(Checkpointing.materialize)
@@ -949,14 +950,14 @@ object Streaming {
           // budget: switch to the table sidecar from the post-append corpus
           saturated = true; scans += 1
           CorpusCompaction.compact(spark, fs, target, maxSmallFiles, minFileBytes)
-          gate.rebuildTable(spark.read.parquet(corpusDir), mergedCount)
+          gate.rebuildTable(ParquetRead(spark, corpusDir), mergedCount)
         } else {
           val (capacity, bloomBytes) =
             if (mergedCount > sidecar.expectedItems) {
               // capacity outgrown: rebuild at double size from the corpus
               // (which now includes this batch) -- amortized O(log corpus)
               saturated = true; scans += 1
-              val corpus = spark.read.parquet(corpusDir)
+              val corpus = ParquetRead(spark, corpusDir)
               val cap = math.max(2 * mergedCount, expectedCorpusBandKeys)
               (cap, bloomOver(corpus, cap))
             } else
@@ -1122,7 +1123,7 @@ object Streaming {
     val admitted =
       if (!fs.exists(path)) kept
       else {
-        val corpusFps = spark.read.parquet(sidecarDir).select(col(fpCol))
+        val corpusFps = ParquetRead(spark, sidecarDir).select(col(fpCol))
         kept.join(
           graft.operators.Dedup.hammingRejects(
             corpusFps, kept, idCol, fpCol, maxHamming, bands),

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.sources.ParquetRead
+
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -106,9 +108,9 @@ object TombstoneLog {
     val (fs, dir) = fileSystem(spark, corpusDir)
     val entries = completeEntries(fs, dir)
     if (entries.isEmpty)
-      spark.read.parquet(corpusDir).select(col(idCol)).limit(0)
+      ParquetRead(spark, corpusDir).select(col(idCol)).limit(0)
     else
-      spark.read.parquet(entries.map(_.toString): _*)
+      ParquetRead(spark, entries.map(_.toString): _*)
         .select(col(idCol)).distinct()
   }
 
@@ -117,7 +119,7 @@ object TombstoneLog {
     * The pending side is ids-sized (broadcastable at any corpus scale).
     */
   def readCompliant(spark: SparkSession, corpusDir: String, idCol: String): DataFrame =
-    spark.read.parquet(corpusDir)
+    ParquetRead(spark, corpusDir)
       .join(broadcast(pending(spark, corpusDir, idCol)), Seq(idCol), "left_anti")
 
   /** Flush the log: ONE [[Streaming.purgeCorpus]] for every pending
@@ -169,7 +171,7 @@ object TombstoneLog {
     // (below-threshold) probe paid both only to discard the frame; a held
     // probe is now one job, and a due flush hands the purge a LocalRelation
     // whose downstream broadcast costs no recompute of the log read.
-    val pendingDf = spark.read.parquet(entries.map(_.toString): _*)
+    val pendingDf = ParquetRead(spark, entries.map(_.toString): _*)
       .select(col(idCol)).distinct()
     val idRows = pendingDf.collect()
     val n = idRows.length.toLong

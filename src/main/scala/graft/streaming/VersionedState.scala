@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.sources.ParquetRead
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -42,7 +44,7 @@ object VersionedState {
   /** The live state frame, or None before the first commit. */
   def read(spark: SparkSession, stateDir: String): Option[DataFrame] = {
     val (fs, dir) = fileSystem(spark, stateDir)
-    liveVersion(fs, dir).map(v => spark.read.parquet(new Path(dir, v).toString))
+    liveVersion(fs, dir).map(v => ParquetRead(spark, new Path(dir, v).toString))
   }
 
   /** Has `batchId` already committed? (Its version is the live one.) */
@@ -189,6 +191,6 @@ object VersionedState {
     fs.listStatus(dir).map(_.getPath.getName)
       .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit) && !keep(n))
       .foreach(v => fs.delete(new Path(dir, v), true))
-    spark.read.parquet(vPath.toString)
+    ParquetRead(spark, vPath.toString)
   }
 }

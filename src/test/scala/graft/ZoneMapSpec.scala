@@ -1514,6 +1514,32 @@ class ZoneMapSpec extends SparkTestBase {
     assert(updJobs <= 4, s"updateWhere ran $updJobs jobs")
   }
 
+  test("a non-null UPDATE on a non-nullable epoch publishes no schema record") {
+    import graft.sources.v2.{GraftParquetWrite, GraftTableOptimize}
+    val dir = slabTable("graft-zm-updnonnull")
+    def epoch = GraftParquetWrite.latestSchemaAt(fsOf(dir), new Path(dir), None).get
+    assert(epoch.fields.map(f => f.name -> f.nullable).toSeq == Seq("id" -> false, "name" -> false))
+    val schemaRecords = GraftTableOptimize.fsck(spark, dir).schemaRecords
+    val upd = GraftTableOptimize.updateWhere(spark, dir, col("id") >= 40L,
+      Seq("name" -> concat(lit("upd-"), col("name"))))
+    assert(upd.rowsUpdated == 60L, s"$upd")
+    // the rewrite's parquet read reports every column nullable; only what
+    // the assignment writes may widen the epoch
+    assert(GraftTableOptimize.fsck(spark, dir).schemaRecords == schemaRecords)
+    assert(epoch.fields.forall(!_.nullable), epoch.simpleString)
+  }
+
+  test("an UPDATE assigning lit(null) widens exactly the assigned column") {
+    import graft.sources.v2.{GraftParquetWrite, GraftTableOptimize}
+    val dir = slabTable("graft-zm-updnull")
+    val schemaRecords = GraftTableOptimize.fsck(spark, dir).schemaRecords
+    GraftTableOptimize.updateWhere(spark, dir, col("id") < 10L, Seq("name" -> lit(null))): Unit
+    assert(GraftTableOptimize.fsck(spark, dir).schemaRecords == schemaRecords + 1)
+    val epoch = GraftParquetWrite.latestSchemaAt(fsOf(dir), new Path(dir), None).get
+    assert(epoch.fields.map(f => f.name -> f.nullable).toSeq == Seq("id" -> false, "name" -> true))
+    assert(spark.read.format("graft-parquet").load(dir).filter(col("name").isNull).count() == 10)
+  }
+
   test("retention fold keeps a base snapshot plus the newest records; seqs stay resolvable") {
     import graft.sources.v2.{GraftParquetWrite, GraftTableOptimize}
     val dir = freshTable("graft-zm-retfold")
