@@ -3,7 +3,7 @@ package graft
 import graft.functions.{Registry, VectorExpressions}
 import graft.operators.{Dedup, EntityResolution, Multimodal, Ops, Sampling, Similarity, TextAnalysis}
 import graft.sinks.Sinks
-import graft.sources.{ParquetRead, Sources}
+import graft.sources.{FsPublish, ParquetRead, Sources}
 import graft.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -727,9 +727,7 @@ object SparkEntry {
         val base = graft.sources.v2.GraftParquetWrite.logRecordFiles(fs, outPath)
           .map(_.getPath.getName).filter(_.contains("logbase-"))
         base.length == 1 && {
-          val in = fs.open(new org.apache.hadoop.fs.Path(logDir, base.head))
-          val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-          val lines = text.split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
+          val lines = FsPublish.lines(fs, new org.apache.hadoop.fs.Path(logDir, base.head))
           lines.nonEmpty && lines.forall(_.startsWith(">"))
         }
       }

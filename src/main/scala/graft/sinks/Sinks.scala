@@ -2,7 +2,7 @@ package graft.sinks
 
 import graft.types._
 import graft.functions.Registry
-import graft.sources.ParquetRead
+import graft.sources.{FsPublish, ParquetRead}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -162,127 +162,85 @@ object Sinks {
       val spark = df.sparkSession
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // Commit protocol: executors write into a staging sibling; the
-      // finished staging tree swaps in with TWO METADATA RENAMES (old
-      // corpus aside, staging in) — never a delete in the publish path, so
-      // no crash point destroys the published corpus before its
-      // replacement is live (a crash between the renames leaves BOTH trees
-      // intact under their sibling names; a concurrent reader in that
-      // instant sees a missing path, the honest signal for a swap in
-      // flight). The O(files) recursive delete of the old tree happens
-      // only AFTER the new corpus is published. Stale leftovers of a
-      // crashed run (staging, the set-aside old tree) are cleaned here, at
-      // the start of the next run.
+      // Commit protocol: executors write into a staging sibling that
+      // FsPublish.swapDir swaps in with TWO METADATA RENAMES (old corpus
+      // aside, staging in), after rolling a crashed swap forward or back —
+      // never a delete in the publish path (a concurrent reader between
+      // the renames sees a missing path, the honest signal for a swap in
+      // flight). The O(files) delete of the old tree happens only AFTER
+      // the new corpus is published.
       val staging = new org.apache.hadoop.fs.Path(
         root.getParent, root.getName + ".__staging__")
       val retired = new org.apache.hadoop.fs.Path(
         root.getParent, root.getName + ".__old__")
-      // crash RECOVERY before any cleanup: a prior run that died between
-      // the two publish renames left root MISSING while the replacement
-      // and/or the set-aside old corpus survive under the sibling names —
-      // those are the ONLY copies, so roll the swap forward (staging
-      // carries _SUCCESS: it is a complete corpus) or back (it does not:
-      // restore the old one) rather than deleting them.
-      if (!fs.exists(root)) {
-        // a FAILED recovery rename must throw, never fall through: the
-        // cleanup deletes right below would destroy the sole surviving
-        // copy the recovery just failed to restore
-        if (fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))) {
-          if (!fs.rename(staging, root))
-            throw new graft.GraftDataError(
-              s"writeTextCorpus: roll-forward rename $staging -> $root failed")
-        } else if (fs.exists(retired)) {
-          if (!fs.rename(retired, root))
-            throw new graft.GraftDataError(
-              s"writeTextCorpus: roll-back rename $retired -> $root failed")
-        }
-      }
-      if (fs.exists(staging)) fs.delete(staging, true)
-      if (fs.exists(retired)) fs.delete(retired, true)
-      fs.mkdirs(staging) // empty input still publishes an empty corpus
       val stagingStr = staging.toString
       val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-      checked
-        .select(col("value"), col(idCol).cast("string").as("__id"),
-          pmod(xxhash64(col(idCol).cast("string")), lit(nShards.toLong)).as("__shard"))
-        .repartition(nShards, col("__shard"))
-        // a shard's rows land in ONE task; sorting them makes duplicate ids
-        // adjacent so the writer rejects them in O(1) memory (the flat
-        // layout surfaced duplicates as two part files; deterministic
-        // per-id file names would silently clobber instead)
-        .sortWithinPartitions(col("__id"))
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          if (rows.hasNext) {
-            // Path is not Serializable — rebuild from the string inside
-            val taskRoot = new org.apache.hadoop.fs.Path(stagingStr)
-            val fs = taskRoot.getFileSystem(conf.value)
-            val attempt = org.apache.spark.TaskContext.get() match {
-              case null => "driver" // direct calls in local tests
-              case tc => tc.taskAttemptId().toString
-            }
-            var prevId: String = null
-            rows.foreach { r =>
-              val id = r.getString(1)
-              if (id == prevId)
-                throw new graft.GraftDataError(
-                  s"writeTextCorpus: duplicate document id '$id' — one file " +
-                    "per id cannot hold two documents; dedup before writing")
-              prevId = id
-              val name = TextCorpusLayout.fileName(id)
-              val dst = new org.apache.hadoop.fs.Path(taskRoot, s"shard=${r.getLong(2)}/$name")
-              // Attempt isolation: write a dot-prefixed attempt-unique temp
-              // (hidden from readers), then rename into place — the final
-              // name is never opened for write, so a zombie or speculative
-              // attempt can never leave it truncated. Every attempt of a
-              // task produces identical bytes (deterministic input order),
-              // so whichever attempt's rename lands, the file is complete
-              // and correct; a failed rename onto an existing identical
-              // file (HDFS semantics) is success.
-              val tmp = new org.apache.hadoop.fs.Path(
-                taskRoot, s"shard=${r.getLong(2)}/.$name.$attempt.tmp")
-              val out = fs.create(tmp, true)
-              try {
-                out.write(r.getString(0).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-                out.write('\n') // the text-source line terminator ("" stays one row)
-              } finally out.close()
-              if (!fs.rename(tmp, dst)) {
-                if (!fs.exists(dst))
+      FsPublish.swapDir(fs, root, staging, retired) {
+        fs.mkdirs(staging) // empty input still publishes an empty corpus
+        checked
+          .select(col("value"), col(idCol).cast("string").as("__id"),
+            pmod(xxhash64(col(idCol).cast("string")), lit(nShards.toLong)).as("__shard"))
+          .repartition(nShards, col("__shard"))
+          // a shard's rows land in ONE task; sorting them makes duplicate ids
+          // adjacent so the writer rejects them in O(1) memory (the flat
+          // layout surfaced duplicates as two part files; deterministic
+          // per-id file names would silently clobber instead)
+          .sortWithinPartitions(col("__id"))
+          .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+            if (rows.hasNext) {
+              // Path is not Serializable — rebuild from the string inside
+              val taskRoot = new org.apache.hadoop.fs.Path(stagingStr)
+              val fs = taskRoot.getFileSystem(conf.value)
+              val attempt = org.apache.spark.TaskContext.get() match {
+                case null => "driver" // direct calls in local tests
+                case tc => tc.taskAttemptId().toString
+              }
+              var prevId: String = null
+              rows.foreach { r =>
+                val id = r.getString(1)
+                if (id == prevId)
                   throw new graft.GraftDataError(
-                    s"writeTextCorpus: publishing rename $tmp -> $dst failed")
-                fs.delete(tmp, false) // another attempt already published it
+                    s"writeTextCorpus: duplicate document id '$id' — one file " +
+                      "per id cannot hold two documents; dedup before writing")
+                prevId = id
+                val name = TextCorpusLayout.fileName(id)
+                val dst = new org.apache.hadoop.fs.Path(taskRoot, s"shard=${r.getLong(2)}/$name")
+                // Attempt isolation: write a dot-prefixed attempt-unique temp
+                // (hidden from readers), then rename into place — the final
+                // name is never opened for write, so a zombie or speculative
+                // attempt can never leave it truncated. Every attempt of a
+                // task produces identical bytes (deterministic input order),
+                // so whichever attempt's rename lands, the file is complete
+                // and correct; a failed rename onto an existing identical
+                // file (HDFS semantics) is success.
+                val tmp = new org.apache.hadoop.fs.Path(
+                  taskRoot, s"shard=${r.getLong(2)}/.$name.$attempt.tmp")
+                FsPublish.publish(fs, tmp, dst) { out =>
+                  out.write(r.getString(0).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+                  out.write('\n') // the text-source line terminator ("" stays one row)
+                }
               }
             }
           }
-        }
-      // sweep orphaned attempt temps before the completeness marker: a
-      // lost executor or killed speculative attempt dies between create
-      // and rename, and its dot-file — invisible to Spark's reader but NOT
-      // to the external `cat shard=N/*` tools this layout exists for —
-      // would otherwise be published into the live corpus forever. One
-      // task per shard keeps the O(files) listing off the driver.
-      spark.sparkContext.parallelize(0 until nShards, math.min(nShards, 32))
-        .foreach { shard =>
-          val shardDir = new org.apache.hadoop.fs.Path(stagingStr, s"shard=$shard")
-          val fs = shardDir.getFileSystem(conf.value)
-          if (fs.exists(shardDir))
-            fs.listStatus(shardDir).foreach { st =>
-              val n = st.getPath.getName
-              if (n.startsWith(".") && n.endsWith(".tmp")) fs.delete(st.getPath, false)
-            }
-        }
-      // job succeeded: mark completeness (Spark's FileIndex hides _SUCCESS
-      // from readers; external tools get a marker), then the two-rename
-      // swap — the previous corpus goes ASIDE, not away, until the new one
-      // is live
-      fs.create(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"), true).close()
-      if (fs.exists(root) && !fs.rename(root, retired))
-        throw new graft.GraftDataError(
-          s"writeTextCorpus: set-aside rename $root -> $retired failed")
-      if (!fs.rename(staging, root)) {
-        // restore the old corpus before surfacing the failure
-        if (fs.exists(retired)) fs.rename(retired, root)
-        throw new graft.GraftDataError(
-          s"writeTextCorpus: publishing rename $staging -> $root failed")
+        // sweep orphaned attempt temps before the completeness marker: a
+        // lost executor or killed speculative attempt dies between create
+        // and rename, and its dot-file — invisible to Spark's reader but NOT
+        // to the external `cat shard=N/*` tools this layout exists for —
+        // would otherwise be published into the live corpus forever. One
+        // task per shard keeps the O(files) listing off the driver.
+        spark.sparkContext.parallelize(0 until nShards, math.min(nShards, 32))
+          .foreach { shard =>
+            val shardDir = new org.apache.hadoop.fs.Path(stagingStr, s"shard=$shard")
+            val fs = shardDir.getFileSystem(conf.value)
+            if (fs.exists(shardDir))
+              fs.listStatus(shardDir).foreach { st =>
+                val n = st.getPath.getName
+                if (n.startsWith(".") && n.endsWith(".tmp")) fs.delete(st.getPath, false)
+              }
+          }
+        // job succeeded: mark completeness (Spark's FileIndex hides _SUCCESS
+        // from readers; external tools get a marker) before the swap
+        fs.create(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"), true).close()
       }
       // the retired tree's delete is the only O(files) step and it runs
       // post-publish (readers are already on the new corpus) — but a
@@ -385,8 +343,16 @@ object Sinks {
     val runPath = s"$baseDir/$runId"
     df.write.mode(SaveMode.ErrorIfExists).parquet(runPath)
     () => {
-      val latest = s"$baseDir/latest"
-      ParquetRead(df.sparkSession, runPath).write.mode(SaveMode.Overwrite).parquet(latest)
+      // the copy lands beside `latest` and swaps in whole: readers see the
+      // previous alias or the new one, never a partial or missing one
+      val latest = new org.apache.hadoop.fs.Path(s"$baseDir/latest")
+      val staging = s"$latest.__staging__"
+      val retired = new org.apache.hadoop.fs.Path(s"$latest.__old__")
+      val fs = latest.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      FsPublish.swapDir(fs, latest, new org.apache.hadoop.fs.Path(staging), retired) {
+        ParquetRead(df.sparkSession, runPath).write.parquet(staging)
+      }
+      fs.delete(retired, true): Unit
     }
   }
 

@@ -2,6 +2,7 @@ package graft.sources.v2
 
 import java.nio.charset.StandardCharsets
 
+import graft.sources.FsPublish
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -156,11 +157,8 @@ object GraftParquetWrite {
     // files in while deleting only some sources (duplicate rows forever).
     // A crash mid-write leaves manifest.tmp, which recover() treats as
     // no-commit-point: staging is discarded whole.
-    val tmp = new Path(staging, "manifest.tmp")
-    val man = fs.create(tmp, true)
-    try man.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    finally man.close()
-    require(fs.rename(tmp, manifestPath(staging)), s"manifest publish failed in $staging")
+    FsPublish.publish(fs, new Path(staging, "manifest.tmp"), manifestPath(staging))(
+      _.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8)))
     commit(fs, table, staging)
   }
 
@@ -174,13 +172,10 @@ object GraftParquetWrite {
     // own existence proves nothing): success, not failure — failing the
     // write job here would push an application into a duplicate retry of
     // rows that actually landed.
-    val in =
-      try fs.open(manifestPath(staging))
-      catch { case _: java.io.FileNotFoundException => return }
-    val lines =
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        .split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
-      finally in.close()
+    val lines = FsPublish.read(fs, manifestPath(staging))(FsPublish.linesOf) match {
+      case Some(ls) => ls
+      case None => return
+    }
     val (markerLines, rest0) = lines.partition(_.startsWith("!"))
     val (schemaLines, rest) = rest0.partition(_.startsWith("@"))
     val (removalLines, addLines) = rest.partition(_.startsWith("~"))
@@ -402,7 +397,7 @@ object GraftParquetWrite {
             // which the caller's bounded retry absorbs (the new base
             // carries equivalent membership).
             val shard = new Path(logDir(table), line.substring(1))
-            fold(shard, recordLines(fs, shard))
+            fold(shard, FsPublish.lines(fs, shard))
           } else {
             val cut = line.indexOf('\t')
             // the record was published by an atomic rename, so a malformed
@@ -412,15 +407,9 @@ object GraftParquetWrite {
             adds.put(line.substring(0, cut), line.substring(cut + 1).trim.toLong)
           }
         }
-      recs.foreach(st => fold(st.getPath, recordLines(fs, st.getPath)))
+      recs.foreach(st => fold(st.getPath, FsPublish.lines(fs, st.getPath)))
       Some(adds.filterNot { case (n, _) => removed(n) }.toMap)
     }
-  }
-
-  private[v2] def recordLines(fs: FileSystem, p: Path): Seq[String] = {
-    val in = fs.open(p)
-    val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-    text.split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
   /** Every file name some RETAINED log record still references as an add —
@@ -439,7 +428,7 @@ object GraftParquetWrite {
   def logReferencedFiles(fs: FileSystem, table: Path,
       records: Seq[org.apache.hadoop.fs.FileStatus]): Set[String] =
     records.iterator.flatMap(st =>
-      expandAddNames(fs, table, recordLines(fs, st.getPath))).toSet
+      expandAddNames(fs, table, FsPublish.lines(fs, st.getPath))).toSet
 
   /** The ADD file names of a record's lines, with sharded-base pointer
     * lines (`>shard`) resolved — every reachability question must see
@@ -451,7 +440,7 @@ object GraftParquetWrite {
       if (line.startsWith("~")) Iterator.empty
       else if (line.startsWith(">"))
         expandAddNames(fs, table,
-          recordLines(fs, new Path(logDir(table), line.substring(1))))
+          FsPublish.lines(fs, new Path(logDir(table), line.substring(1))))
       else {
         val cut = line.indexOf('\t')
         Iterator.single(if (cut < 0) line else line.substring(0, cut))
@@ -569,16 +558,12 @@ object GraftParquetWrite {
           fs.mkdirs(logDir(table))
           raceInjection()
           // temp + rename: the record's appearance is atomic; tmp lives in
-          // the staging dir, which the roll-forward deletes anyway
-          val tmp = new Path(staging, s"logrec-${System.nanoTime()}.tmp")
-          val out = fs.create(tmp, true)
-          try out.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-          finally out.close()
+          // the staging dir, which the roll-forward deletes anyway (a
+          // concurrent heal of the same published commit can win the rename)
           val name = f"c-$seq%012d-$commitId"
           val target = new Path(logDir(table), name)
-          if (!fs.rename(tmp, target))
-            // a concurrent heal of the same published commit can win the rename
-            require(fs.exists(target), s"log record publish failed for $target")
+          FsPublish.publish(fs, new Path(staging, s"logrec-${System.nanoTime()}.tmp"), target)(
+            _.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8)))
           // CAS verification: re-list and arbitrate. Winner keeps the seq;
           // loser retracts and re-sequences on the next lap.
           if (winsAt(logRecordFiles(fs, table).map(_.getPath.getName), seq, name))
@@ -669,7 +654,7 @@ object GraftParquetWrite {
       // ties on seq (a replay racing a heal) carry identical JSON by
       // commitId-idempotence; name order makes the pick deterministic
       val best = eligible.maxBy(st => (schemaSeqOf(st.getPath.getName), st.getPath.getName))
-      val json = recordLines(fs, best.getPath).mkString("\n")
+      val json = FsPublish.lines(fs, best.getPath).mkString("\n")
       DataType.fromJson(json) match {
         case st: StructType => Some(st)
         case other => throw new graft.GraftDataError(
@@ -717,13 +702,9 @@ object GraftParquetWrite {
       })
     }
     if (prev.contains(epoch)) return // same epoch
-    val tmp = new Path(staging, s"schemarec-${System.nanoTime()}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(epoch.json.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val target = new Path(logDir(table), f"m-$seq%012d-$commitId")
-    if (!fs.rename(tmp, target))
-      require(fs.exists(target), s"schema record publish failed for $target")
+    FsPublish.publish(fs, new Path(staging, s"schemarec-${System.nanoTime()}.tmp"),
+      new Path(logDir(table), f"m-$seq%012d-$commitId"))(
+      _.write(epoch.json.getBytes(StandardCharsets.UTF_8)))
   }
 
   /** Raw directory listing of data files — the LEGACY membership (tables

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import graft.sources.ParquetRead
+import graft.sources.{FsPublish, ParquetRead}
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -819,13 +819,10 @@ object GraftTableOptimize {
     if (names.nonEmpty) {
       val d = GraftParquetWrite.logDir(table)
       fs.mkdirs(d)
-      val tmp = new Path(d, s"retire-${System.nanoTime()}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(names.toSeq.sorted.map(n => s"$n\t$nowMs").mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      val target = new Path(d, s"r-$nowMs-${maintenanceId("stamp").split('-').last}")
-      require(fs.rename(tmp, target), s"retirement stamp publish failed in $d")
+      FsPublish.publish(fs, new Path(d, s"retire-${System.nanoTime()}.tmp"),
+        new Path(d, s"r-$nowMs-${maintenanceId("stamp").split('-').last}"))(
+        _.write(names.toSeq.sorted.map(n => s"$n\t$nowMs").mkString("\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     }
 
   private[graft] def retirementRecordFiles(fs: FileSystem, table: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
@@ -837,7 +834,7 @@ object GraftTableOptimize {
   /** fileName → newest durable retirement stamp. */
   private def retirementTimes(fs: FileSystem, table: Path): Map[String, Long] =
     retirementRecordFiles(fs, table).foldLeft(Map.empty[String, Long]) { (acc, st) =>
-      GraftParquetWrite.recordLines(fs, st.getPath).foldLeft(acc) { (m, line) =>
+      FsPublish.lines(fs, st.getPath).foldLeft(acc) { (m, line) =>
         val cut = line.indexOf('\t')
         if (cut <= 0) m
         else {
@@ -900,7 +897,7 @@ object GraftTableOptimize {
     // of whose files has left the disk can never influence a grace again
     val remaining = listed.map(_.getPath.getName).toSet -- dead.map(_.getPath.getName)
     retirementRecordFiles(fs, table).foreach { st =>
-      val names = GraftParquetWrite.recordLines(fs, st.getPath)
+      val names = FsPublish.lines(fs, st.getPath)
         .flatMap { l => val cut = l.indexOf('\t'); if (cut <= 0) None else Some(l.substring(0, cut)) }
       if (names.forall(n => !remaining.contains(n))) fs.delete(st.getPath, false)
     }
@@ -943,15 +940,11 @@ object GraftTableOptimize {
     val recs = GraftParquetWrite.logRecordFiles(fs, table)
       .sortBy(st => (GraftParquetWrite.logSeqOf(st.getPath.getName), st.getPath.getName))
     val d = GraftParquetWrite.logDir(table)
-    def publish(lines: Seq[String], name: String): Unit = {
-      // temp + rename inside _log (a name outside the `c-` record namespace
-      // is invisible to readers): the snapshot's appearance is atomic
-      val tmp = new Path(d, s"fold-${System.nanoTime()}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      require(fs.rename(tmp, new Path(d, name)), s"log fold publish failed in $d")
-    }
+    // temp + rename inside _log (a name outside the `c-` record namespace
+    // is invisible to readers): the snapshot's appearance is atomic
+    def publish(lines: Seq[String], name: String): Unit =
+      FsPublish.publish(fs, new Path(d, s"fold-${System.nanoTime()}.tmp"), new Path(d, name))(
+        _.write(lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     def memberLines(asOf: Option[Long]): Seq[String] =
       GraftParquetWrite.logMembership(fs, table, asOf).getOrElse(Map.empty)
         .toSeq.sortBy(_._1).map { case (n, len) => s"$n\t$len" }
@@ -994,7 +987,7 @@ object GraftTableOptimize {
     def sweepOrphanShards(): Unit = {
       val survivors = GraftParquetWrite.logRecordFiles(fs, table)
       val referenced = survivors.iterator.flatMap(st =>
-        GraftParquetWrite.recordLines(fs, st.getPath).iterator
+        FsPublish.lines(fs, st.getPath).iterator
           .collect { case l if l.startsWith(">") => l.substring(1) }).toSet
       fs.listStatus(d).iterator
         .filter(st => st.isFile && st.getPath.getName.startsWith("s-") &&
@@ -1035,13 +1028,13 @@ object GraftTableOptimize {
     def stampUnreferenced(folded: Seq[org.apache.hadoop.fs.FileStatus],
         snapshotLines: Seq[String],
         retained: Seq[org.apache.hadoop.fs.FileStatus]): Unit = {
-      val dropped = folded.flatMap(st => GraftParquetWrite.recordLines(fs, st.getPath)
+      val dropped = folded.flatMap(st => FsPublish.lines(fs, st.getPath)
         .collect { case l if l.startsWith("~") => l.substring(1) }).toSet
       if (dropped.nonEmpty) {
         val referencedAfter =
           (GraftParquetWrite.expandAddNames(fs, table, snapshotLines) ++
             retained.iterator.flatMap(st => GraftParquetWrite.expandAddNames(fs, table,
-              GraftParquetWrite.recordLines(fs, st.getPath)))).toSet
+              FsPublish.lines(fs, st.getPath)))).toSet
         val now = System.currentTimeMillis()
         val retiring = dropped.filterNot(referencedAfter)
           .filter(n => fs.exists(new Path(table, n)))

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
+import graft.sources.FsPublish
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The persisted corpus-bloom sidecar for continuous dedup ingestion
@@ -67,41 +68,32 @@ object BloomSidecar {
     * a rebuild, never a failed batch).
     */
   def read(fs: FileSystem, corpusDir: Path, name: String = ContentName): Option[BloomSidecar] = {
-    val p = path(corpusDir, name)
-    if (!fs.exists(p)) None
-    else
-      try {
-        val in = new java.io.DataInputStream(fs.open(p))
-        try {
-          require(in.readInt() == Magic, "bad sidecar magic")
-          val expected = in.readLong()
-          val inserted = in.readLong()
-          val stamp = in.readUTF()
-          val len = in.readInt()
-          val bytes = new Array[Byte](len)
-          in.readFully(bytes)
-          Some(BloomSidecar(expected, inserted, stamp, bytes))
-        } finally in.close()
-      } catch { case scala.util.control.NonFatal(_) => None }
+    try
+      FsPublish.read(fs, path(corpusDir, name)) { in =>
+        require(in.readInt() == Magic, "bad sidecar magic")
+        val expected = in.readLong()
+        val inserted = in.readLong()
+        val stamp = in.readUTF()
+        val len = in.readInt()
+        val bytes = new Array[Byte](len)
+        in.readFully(bytes)
+        BloomSidecar(expected, inserted, stamp, bytes)
+      }
+    catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Staging write + rename swap: a reader never sees a torn sidecar; a
-    * crash mid-swap leaves it absent, which the loader treats as a rebuild.
+  /** Published by [[FsPublish.replace]]: a reader never sees a torn sidecar;
+    * a crash mid-swap leaves it absent, which the loader treats as a rebuild.
     */
   def write(fs: FileSystem, corpusDir: Path, sc: BloomSidecar, name: String = ContentName): Unit = {
-    val p = path(corpusDir, name)
-    val staging = new Path(corpusDir, name + ".staging")
-    val out = new java.io.DataOutputStream(fs.create(staging, true))
-    try {
+    FsPublish.replace(fs, path(corpusDir, name)) { out =>
       out.writeInt(Magic)
       out.writeLong(sc.expectedItems)
       out.writeLong(sc.insertedCount)
       out.writeUTF(sc.filesStamp)
       out.writeInt(sc.bloom.length)
       out.write(sc.bloom)
-    } finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(staging, p)
+    }
   }
 
   /** Bloom union: bitwise OR, valid because both sides were sized with the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.Sizing
 import graft.operators.{Retrieval, TextAnalysis}
-import graft.sources.ParquetRead
+import graft.sources.{FsPublish, ParquetRead}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -224,27 +224,15 @@ object Bm25Index {
     (dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
   }
 
-  private def readMeta(fs: FileSystem, dir: Path): Option[Int] = {
-    val p = metaPath(dir)
-    if (!fs.exists(p)) None
-    else {
-      val in = new java.io.DataInputStream(fs.open(p))
-      try {
-        if (in.readInt() != Magic)
-          throw new graft.GraftDataError(s"$p is not a BM25 index meta")
-        Some(in.readInt())
-      } finally in.close()
+  private def readMeta(fs: FileSystem, dir: Path): Option[Int] =
+    FsPublish.read(fs, metaPath(dir)) { in =>
+      if (in.readInt() != Magic)
+        throw new graft.GraftDataError(s"${metaPath(dir)} is not a BM25 index meta")
+      in.readInt()
     }
-  }
 
-  private def writeMeta(fs: FileSystem, dir: Path, nShards: Int): Unit = {
-    val staging = new Path(dir, "_meta.staging")
-    val out = new java.io.DataOutputStream(fs.create(staging, true))
-    try { out.writeInt(Magic); out.writeInt(nShards) } finally out.close()
-    val p = metaPath(dir)
-    if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(staging, p)
-  }
+  private def writeMeta(fs: FileSystem, dir: Path, nShards: Int): Unit =
+    FsPublish.replace(fs, metaPath(dir)) { out => out.writeInt(Magic); out.writeInt(nShards) }
 
   /** Ingest one batch of `(idCol, textCol)` documents. A committed
     * batchId skips (marker); a crash-torn or redelivered append is
@@ -613,27 +601,12 @@ object Bm25Index {
 
   private def vacuumMarkPath(dir: Path) = new Path(deletedDir(dir), "_vacuumed")
 
-  private def readVacuumMark(fs: FileSystem, dir: Path): Long = {
-    val p = vacuumMarkPath(dir)
-    if (!fs.exists(p)) return 0L
-    val in = fs.open(p)
-    val bytes = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-      buf.toByteArray
-    } finally in.close()
-    scala.util.Try(new String(bytes, "UTF-8").trim.toLong).getOrElse(0L)
-  }
+  private def readVacuumMark(fs: FileSystem, dir: Path): Long =
+    FsPublish.read(fs, vacuumMarkPath(dir))(FsPublish.utf8)
+      .flatMap(s => scala.util.Try(s.trim.toLong).toOption).getOrElse(0L)
 
-  private def writeVacuumMark(fs: FileSystem, dir: Path, n: Long): Unit = {
-    val staging = new Path(deletedDir(dir), "_vacuumed.staging")
-    val out = fs.create(staging, true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-    val p = vacuumMarkPath(dir)
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(staging, p))
-      throw new graft.GraftDataError(s"vacuum mark swap failed under $dir")
-  }
+  private def writeVacuumMark(fs: FileSystem, dir: Path, n: Long): Unit =
+    FsPublish.replace(fs, vacuumMarkPath(dir))(_.write(n.toString.getBytes("UTF-8")))
 
   /** BM25 top-k per query against the persisted index: bitwise-equal to
     * [[Retrieval.bm25TopK]] over the ingested corpus, but the plan reads

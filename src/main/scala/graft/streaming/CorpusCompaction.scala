@@ -1,11 +1,11 @@
 package graft.streaming
 
-import graft.sources.ParquetRead
+import graft.sources.{FsPublish, ParquetRead}
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Threshold-triggered small-file compaction for append-only corpora
   * ([[Streaming.ingestBatch]] appends one file set per micro-batch, which
@@ -22,8 +22,9 @@ import org.apache.spark.sql.SparkSession
   *
   *  1. compacted data is written to `_compact/data/` (invisible to readers:
   *     underscore-prefixed);
-  *  2. `_compact/manifest` — the list of small files to retire — is written
-  *     AFTER the data completes; its existence is the commit point;
+  *  2. `_compact/manifest` — the list of small files to retire — is
+  *     published AFTER the data completes ([[FsPublish.publish]]: a torn
+  *     write never takes the name); its existence is the commit point;
   *  3. commit: delete the manifest's files, move the compacted files in
   *     under fresh names, drop the staging dir.
   *
@@ -45,10 +46,11 @@ object CorpusCompaction {
     */
   def recover(fs: FileSystem, corpusDir: Path): Unit = {
     val staging = stagingDir(corpusDir)
-    if (fs.exists(staging)) {
-      if (fs.exists(manifestPath(corpusDir))) commit(fs, corpusDir)
-      else fs.delete(staging, true)
-    }
+    if (fs.exists(staging))
+      FsPublish.read(fs, manifestPath(corpusDir))(FsPublish.linesOf) match {
+        case Some(names) => commit(fs, corpusDir, names)
+        case None => fs.delete(staging, true)
+      }
   }
 
   /** Compact when more than `maxSmallFiles` data files are below
@@ -67,17 +69,8 @@ object CorpusCompaction {
     }
     if (smalls.length <= maxSmallFiles) false
     else {
-      val staging = stagingDir(corpusDir)
-      fs.delete(staging, true)
-      val dataDir = new Path(staging, "data")
-      ParquetRead(spark, smalls.map(_.getPath.toString).toIndexedSeq: _*)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(dataDir.toString)
-      val man = fs.create(manifestPath(corpusDir), true)
-      try man.write(smalls.map(_.getPath.getName).mkString("\n")
-        .getBytes(StandardCharsets.UTF_8))
-      finally man.close()
-      commit(fs, corpusDir)
+      stageAndCommit(fs, corpusDir, smalls)(
+        ParquetRead(spark, smalls.map(_.getPath.toString).toIndexedSeq: _*).coalesce(1))
       true
     }
   }
@@ -99,8 +92,7 @@ object CorpusCompaction {
   def rewrite(
       spark: SparkSession,
       fs: FileSystem,
-      corpusDir: Path)(transform: org.apache.spark.sql.DataFrame
-        => org.apache.spark.sql.DataFrame): Boolean = {
+      corpusDir: Path)(transform: DataFrame => DataFrame): Boolean = {
     recover(fs, corpusDir)
     val files = fs.listStatus(corpusDir).filter { st =>
       val n = st.getPath.getName
@@ -108,33 +100,35 @@ object CorpusCompaction {
     }
     if (files.isEmpty) false
     else {
-      val staging = stagingDir(corpusDir)
-      fs.delete(staging, true)
-      val dataDir = new Path(staging, "data")
-      transform(ParquetRead(spark, files.map(_.getPath.toString).toIndexedSeq: _*))
-        .write.mode("overwrite").parquet(dataDir.toString)
-      val man = fs.create(manifestPath(corpusDir), true)
-      try man.write(files.map(_.getPath.getName).mkString("\n")
-        .getBytes(StandardCharsets.UTF_8))
-      finally man.close()
-      commit(fs, corpusDir)
+      stageAndCommit(fs, corpusDir, files)(
+        transform(ParquetRead(spark, files.map(_.getPath.toString).toIndexedSeq: _*)))
       true
     }
   }
 
-  private def commit(fs: FileSystem, corpusDir: Path): Unit = {
+  /** Write `data` to staging, publish the manifest retiring `retire`
+    * (temp + rename: a torn manifest must never become a commit point,
+    * since replaying half a list deletes some originals and moves in the
+    * copy of all of them), then commit.
+    */
+  private def stageAndCommit(fs: FileSystem, corpusDir: Path, retire: Seq[FileStatus])(
+      data: DataFrame): Unit = {
     val staging = stagingDir(corpusDir)
-    val man = manifestPath(corpusDir)
-    val names = {
-      val in = fs.open(man)
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        .split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
-      finally in.close()
-    }
-    names.foreach { n =>
-      val p = new Path(corpusDir, n)
-      if (fs.exists(p)) fs.delete(p, false)
-    }
+    fs.delete(staging, true)
+    data.write.mode("overwrite").parquet(new Path(staging, "data").toString)
+    val names = retire.map(_.getPath.getName)
+    FsPublish.publish(fs, new Path(staging, "manifest.tmp"), manifestPath(corpusDir))(
+      _.write(names.mkString("\n").getBytes(StandardCharsets.UTF_8)))
+    commit(fs, corpusDir, names)
+  }
+
+  /** Retire the manifest's files, move every compacted file in, and only
+    * then drop staging: a failed move throws with the manifest still in
+    * place, so the next [[recover]] replays the rest.
+    */
+  private def commit(fs: FileSystem, corpusDir: Path, names: Seq[String]): Unit = {
+    val staging = stagingDir(corpusDir)
+    names.foreach(n => fs.delete(new Path(corpusDir, n), false))
     val dataDir = new Path(staging, "data")
     if (fs.exists(dataDir)) {
       fs.listStatus(dataDir).filter { st =>
@@ -144,7 +138,7 @@ object CorpusCompaction {
         // "compacted-" prefix: a name that can never collide with a pending
         // manifest entry from THIS commit (part names carry a write UUID,
         // so cross-commit collisions can't happen either)
-        fs.rename(st.getPath, new Path(corpusDir, "compacted-" + st.getPath.getName))
+        FsPublish.move(fs, st.getPath, new Path(corpusDir, "compacted-" + st.getPath.getName))
       }
     }
     fs.delete(staging, true)

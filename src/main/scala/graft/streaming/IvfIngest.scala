@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.{Ops, Similarity}
 import graft.functions.VectorExpressions
-import graft.sources.ParquetRead
+import graft.sources.{FsPublish, ParquetRead}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -58,44 +58,33 @@ object IvfIngest {
 
   /** Codebook + training census (see [[CodebookSidecar]]). */
   def readCodebookInfo(fs: FileSystem, indexDir: Path): Option[CodebookSidecar] = {
-    val p = codebookPath(indexDir)
-    if (!fs.exists(p)) None
-    else {
-      val in = new java.io.DataInputStream(fs.open(p))
-      try {
-        val magic = in.readInt()
-        require(magic == Magic || magic == MagicV2, "bad codebook magic")
-        val rows = if (magic == MagicV2) in.readLong() else -1L
-        val nlist = in.readInt(); val dim = in.readInt()
-        val cents = Array.fill(nlist) {
-          val v = new Array[Float](dim)
-          var i = 0
-          while (i < dim) { v(i) = java.lang.Float.intBitsToFloat(in.readInt()); i += 1 }
-          v
-        }
-        Some(CodebookSidecar(Similarity.IvfModel(cents), rows))
-      } finally in.close()
+    FsPublish.read(fs, codebookPath(indexDir)) { in =>
+      val magic = in.readInt()
+      require(magic == Magic || magic == MagicV2, "bad codebook magic")
+      val rows = if (magic == MagicV2) in.readLong() else -1L
+      val nlist = in.readInt(); val dim = in.readInt()
+      val cents = Array.fill(nlist) {
+        val v = new Array[Float](dim)
+        var i = 0
+        while (i < dim) { v(i) = java.lang.Float.intBitsToFloat(in.readInt()); i += 1 }
+        v
+      }
+      CodebookSidecar(Similarity.IvfModel(cents), rows)
     }
   }
 
-  /** Staging write + rename swap (see [[BloomSidecar.write]]): readers never
-    * see a torn codebook; a crash mid-swap leaves the previous one.
+  /** Published by [[FsPublish.replace]]: readers never see a torn codebook.
     * `rowsAtTraining` is the training census the staleness trigger reads.
     */
   def writeCodebook(fs: FileSystem, indexDir: Path, model: Similarity.IvfModel,
       rowsAtTraining: Long = -1L): Unit = {
-    val staging = new Path(indexDir, "_codebook.staging")
-    val out = new java.io.DataOutputStream(fs.create(staging, true))
-    try {
+    FsPublish.replace(fs, codebookPath(indexDir)) { out =>
       out.writeInt(MagicV2)
       out.writeLong(rowsAtTraining)
       out.writeInt(model.centroids.length)
       out.writeInt(model.centroids.headOption.map(_.length).getOrElse(0))
       model.centroids.foreach(_.foreach(x => out.writeInt(java.lang.Float.floatToIntBits(x))))
-    } finally out.close()
-    val p = codebookPath(indexDir)
-    if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(staging, p)
+    }
   }
 
   private val PqMagic = 0x47505142 // "GPQB"
@@ -104,39 +93,29 @@ object IvfIngest {
 
   /** Load the persisted PQ codebooks; None when absent (first batch trains). */
   def readPqCodebook(fs: FileSystem, indexDir: Path): Option[Similarity.PqModel] = {
-    val p = pqCodebookPath(indexDir)
-    if (!fs.exists(p)) None
-    else {
-      val in = new java.io.DataInputStream(fs.open(p))
-      try {
-        require(in.readInt() == PqMagic, "bad PQ codebook magic")
-        val m = in.readInt(); val k = in.readInt(); val subDim = in.readInt()
-        val books = Array.fill(m, k) {
-          val v = new Array[Float](subDim)
-          var i = 0
-          while (i < subDim) { v(i) = java.lang.Float.intBitsToFloat(in.readInt()); i += 1 }
-          v
-        }
-        Some(Similarity.PqModel(m, k, subDim, books))
-      } finally in.close()
+    FsPublish.read(fs, pqCodebookPath(indexDir)) { in =>
+      require(in.readInt() == PqMagic, "bad PQ codebook magic")
+      val m = in.readInt(); val k = in.readInt(); val subDim = in.readInt()
+      val books = Array.fill(m, k) {
+        val v = new Array[Float](subDim)
+        var i = 0
+        while (i < subDim) { v(i) = java.lang.Float.intBitsToFloat(in.readInt()); i += 1 }
+        v
+      }
+      Similarity.PqModel(m, k, subDim, books)
     }
   }
 
-  /** Staging write + rename swap, raw float bits (exact round-trip) — the
-    * PQ analog of [[writeCodebook]].
+  /** Published by [[FsPublish.replace]], raw float bits (exact
+    * round-trip) — the PQ analog of [[writeCodebook]].
     */
   def writePqCodebook(fs: FileSystem, indexDir: Path, model: Similarity.PqModel): Unit = {
-    val staging = new Path(indexDir, "_pq_codebook.staging")
-    val out = new java.io.DataOutputStream(fs.create(staging, true))
-    try {
+    FsPublish.replace(fs, pqCodebookPath(indexDir)) { out =>
       out.writeInt(PqMagic)
       out.writeInt(model.m); out.writeInt(model.k); out.writeInt(model.subDim)
       model.codebooks.foreach(_.foreach(_.foreach(x =>
         out.writeInt(java.lang.Float.floatToIntBits(x)))))
-    } finally out.close()
-    val p = pqCodebookPath(indexDir)
-    if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(staging, p)
+    }
   }
 
   /** Per-batch outcome so callers (and StreamingSpec) can assert the cost

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.FsPublish
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -94,33 +95,22 @@ object KeyTableSidecar {
     * never a failed batch).
     */
   def readMeta(fs: FileSystem, corpusDir: Path, name: String = BandName): Option[KeyTableMeta] = {
-    val p = metaPath(corpusDir, name)
-    if (!fs.exists(p)) None
-    else
-      try {
-        val in = new java.io.DataInputStream(fs.open(p))
-        try {
-          require(in.readInt() == Magic, "bad key-table meta magic")
-          Some(KeyTableMeta(in.readInt(), in.readLong(), in.readUTF()))
-        } finally in.close()
-      } catch { case scala.util.control.NonFatal(_) => None }
+    try
+      FsPublish.read(fs, metaPath(corpusDir, name)) { in =>
+        require(in.readInt() == Magic, "bad key-table meta magic")
+        KeyTableMeta(in.readInt(), in.readLong(), in.readUTF())
+      }
+    catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Staging write + rename swap (same torn-read protection as the bloom
-    * sidecar's writer).
-    */
+  /** Published by [[FsPublish.replace]], like the bloom sidecar. */
   def writeMeta(fs: FileSystem, corpusDir: Path, meta: KeyTableMeta, name: String = BandName): Unit = {
-    val p = metaPath(corpusDir, name)
-    val staging = new Path(corpusDir, name + ".meta.staging")
-    val out = new java.io.DataOutputStream(fs.create(staging, true))
-    try {
+    FsPublish.replace(fs, metaPath(corpusDir, name)) { out =>
       out.writeInt(Magic)
       out.writeInt(meta.nShards)
       out.writeLong(meta.keyCount)
       out.writeUTF(meta.filesStamp)
-    } finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    fs.rename(staging, p)
+    }
   }
 
   /** Cluster a (`__shard`, `__k`) frame so a partitioned write emits at

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Checkpointing
-import graft.sources.ParquetRead
+import graft.sources.{FsPublish, ParquetRead}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -295,11 +295,10 @@ object Streaming {
     }
   }
 
-  /** Crash-safe whole-table rewrite: recover an interrupted swap, hand the
-    * current table (None on first write) to `compute`, write the result to
-    * staging FIRST, then target→.old / staging→target / delete .old — the
-    * data always exists in at least one complete copy, and the next call
-    * recovers an interrupted swap before reading. Shared by the streaming
+  /** Crash-safe whole-table rewrite through [[FsPublish.swapDir]] (staging
+    * `<target>.staging`, set-aside `<target>.old`): the interrupted swap a
+    * crash left recovers first, then `compute` gets the current table
+    * (None on first write) and its result swaps in. Shared by the streaming
     * upsert and SCD2 sinks; only for dimension/history-sized targets — a
     * fact-sized table wants the partition-scoped path.
     */
@@ -307,25 +306,13 @@ object Streaming {
       compute: Option[DataFrame] => DataFrame): Unit = {
     val target = new org.apache.hadoop.fs.Path(targetDir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(targetDir + ".staging")
+    val staging = targetDir + ".staging"
     val old = new org.apache.hadoop.fs.Path(targetDir + ".old")
-    // recover a crash mid-swap: staging is only ever renamed in AFTER it
-    // was completely written (its _SUCCESS marker exists), so if target is
-    // missing, a complete staging — else the displaced .old — IS the data
-    val stagingComplete =
-      fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))
-    if (!fs.exists(target)) {
-      if (stagingComplete) fs.rename(staging, target)
-      else if (fs.exists(old)) fs.rename(old, target)
+    FsPublish.swapDir(fs, target, new org.apache.hadoop.fs.Path(staging), old) {
+      compute(if (fs.exists(target)) Some(ParquetRead(spark, targetDir)) else None)
+        .write.parquet(staging)
     }
-    if (fs.exists(old)) fs.delete(old, true)
-    val result = compute(
-      if (fs.exists(target)) Some(ParquetRead(spark, targetDir)) else None)
-    result.write.mode("overwrite").parquet(staging.toString)
-    // swap: never delete the only complete copy
-    if (fs.exists(target)) fs.rename(target, old)
-    fs.rename(staging, target)
-    if (fs.exists(old)) fs.delete(old, true)
+    fs.delete(old, true)
   }
 
   /** Streaming SCD Type-2 maintenance: each micro-batch of dimension

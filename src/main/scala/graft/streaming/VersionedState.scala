@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.ParquetRead
+import graft.sources.{FsPublish, ParquetRead}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -56,19 +56,8 @@ object VersionedState {
   def liveVersion(fs: FileSystem, dir: Path): Option[String] =
     currentVersion(fs, dir).orElse(latestCompleteVersion(fs, dir))
 
-  private def currentVersion(fs: FileSystem, dir: Path): Option[String] = {
-    val p = pointerPath(dir)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val bytes = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-        buf.toByteArray
-      } finally in.close()
-      Some(new String(bytes, "UTF-8").trim)
-    }
-  }
+  private def currentVersion(fs: FileSystem, dir: Path): Option[String] =
+    FsPublish.read(fs, pointerPath(dir))(FsPublish.utf8).map(_.trim)
 
   /** Crash recovery: the MOST RECENTLY WRITTEN `_SUCCESS`-complete version
     * (a dir mid-write at the crash has no `_SUCCESS` and is skipped).
@@ -107,19 +96,9 @@ object VersionedState {
 
   private def seqPath(vPath: Path) = new Path(vPath, "_seq")
 
-  private def readSeq(fs: FileSystem, vPath: Path): Option[Long] = {
-    val p = seqPath(vPath)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val bytes = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-        buf.toByteArray
-      } finally in.close()
-      scala.util.Try(new String(bytes, "UTF-8").trim.toLong).toOption
-    }
-  }
+  private def readSeq(fs: FileSystem, vPath: Path): Option[Long] =
+    FsPublish.read(fs, seqPath(vPath))(FsPublish.utf8)
+      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
 
   /** Fail fast when a foreachBatch stream's batchIds would RE-NUMBER from
     * 0 against state that already committed versions — the trap for every
@@ -178,15 +157,9 @@ object VersionedState {
       .flatMap(p => readSeq(fs, p)).foldLeft(0L)(math.max) + 1L
     val so = fs.create(seqPath(vPath), true)
     try so.write(nextSeq.toString.getBytes("UTF-8")) finally so.close()
-    val staging = new Path(dir, "current.staging")
-    val out = fs.create(staging, true)
-    try out.write(vName.getBytes("UTF-8")) finally out.close()
-    val p = pointerPath(dir)
-    // rename cannot overwrite -> delete first; a crash inside this window
-    // leaves no pointer and read() recovers via latestCompleteVersion
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(staging, p))
-      throw new graft.GraftDataError(s"versioned state: pointer swap failed under $dir")
+    // a crash between the replace's delete and rename leaves no pointer,
+    // and read() recovers via latestCompleteVersion
+    FsPublish.replace(fs, pointerPath(dir))(_.write(vName.getBytes("UTF-8")))
     val keep = Set(vName) ++ live
     fs.listStatus(dir).map(_.getPath.getName)
       .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit) && !keep(n))
