@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -23,6 +23,15 @@ object SketchFunctions {
     ColumnBridge.column(
       new BloomFilterAggregate(XxHash64(Seq(ColumnBridge.expression(key)), 42L), expectedItems)
         .toAggregateExpression())
+
+  /** The filter [[bloomFilterAgg]] would emit for `expectedItems` had it
+    * seen no row (the aggregate itself returns null then): the same sizing,
+    * so it merges with filters of that capacity and contains nothing.
+    */
+  def emptyBloom(expectedItems: Long): Array[Byte] = {
+    val agg = new BloomFilterAggregate(XxHash64(Seq(Literal(0L)), 42L), expectedItems)
+    agg.serialize(agg.createAggregationBuffer())
+  }
 
   /** Probe: may the key be in the filter? (false ⇒ definitely absent). */
   def mightContain(filter: Column, key: Column): Column =

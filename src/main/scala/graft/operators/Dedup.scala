@@ -1035,20 +1035,194 @@ object Dedup {
       .join(assigned.select(col(idCol), col("centroid_id")), Seq(idCol), "left")
   }
 
-  /** Incremental corpus dedup: admit only the rows of `batch` whose content
-    * does not already exist in `corpus` (after collapsing exact duplicates
-    * WITHIN the batch to their min-id representative). This is the streaming
-    * ingestion gate of a training-data pipeline — each day's crawl checks
-    * against the accumulated corpus without re-deduplicating it.
+  /** What a gate probes the batch's keys against: [[Bloom]], a filter over
+    * the corpus keys shipped as a plan literal, or [[KeyTable]], the
+    * persisted corpus key set for corpora whose bloom would not fit the
+    * driver. A probe only chooses which rows pay the corpus confirm; it
+    * never decides an admission by itself.
+    */
+  sealed trait Probe
+
+  /** Serialized `org.apache.spark.util.sketch.BloomFilter` over the corpus
+    * keys (see [[bloomOver]]). No false negatives, so an unflagged row has
+    * no duplicate in the corpus.
+    */
+  final case class Bloom(bytes: Array[Byte]) extends Probe
+
+  /** Exact corpus key TABLE: `keys` holds one row per corpus key (BIGINT
+    * `__k`, plus an int `__shard` = `pmod(__k, nShards)` partition column
+    * when persisted). The probe broadcasts the BATCH's keys into an
+    * equi-join against this table, pruned to the batch's shard set, so no
+    * key-set-sized object reaches the driver or a task binary and the
+    * corpus side is scanned, never shuffled. Unlike the bloom it flags only
+    * true key collisions.
+    */
+  final case class KeyTable(keys: DataFrame, nShards: Int) extends Probe
+
+  /** An incremental admission gate: which rows of a batch are new with
+    * respect to itself and to a corpus. A gate supplies four things;
+    * [[admit]] runs the one algorithm over them.
+    *  - `dedupBatch`: the within-batch dedup, as a narrow frame of `idCol`,
+    *    `__keys` and whatever `confirm` reads, one row per surviving row;
+    *  - `keys`: the per-row probe keys, `array<bigint>` over a raw row —
+    *    the unit of the corpus bloom and key table;
+    *  - `keysPerRow`: how many keys `keys` yields per row;
+    *  - `confirm`: the exact corpus check, the ids of the flagged
+    *    candidates that have no duplicate in the corpus.
+    */
+  sealed trait Gate {
+    def keys: Column
+    def keysPerRow: Int
+    private[graft] def dedupBatch(batch: DataFrame, idCol: String): DataFrame
+    private[graft] def confirm(corpus: DataFrame, candidates: DataFrame, idCol: String): DataFrame
+  }
+
+  /** Exact content dedup: identical `contentCols` (the null-safe JSON
+    * encoding of [[exact]]) keep the smallest id; one [[contentBloomKey]]
+    * per row; the confirm is an anti-join on [[contentDigest]].
+    */
+  final case class Exact(contentCols: Seq[String]) extends Gate {
+    def keys: Column = array(contentBloomKey(contentCols))
+    def keysPerRow: Int = 1
+    private[graft] def dedupBatch(batch: DataFrame, idCol: String): DataFrame =
+      minIdPerDigest(batch.select(col(idCol),
+        contentDigest(contentCols).as("__digest"), keys.as("__keys")), idCol)
+    private[graft] def confirm(corpus: DataFrame, candidates: DataFrame, idCol: String): DataFrame =
+      candidates.join(corpus.select(contentDigest(contentCols).as("__digest")),
+        Seq("__digest"), "left_anti").select(col(idCol))
+  }
+
+  /** Near-duplicate dedup, the [[ngramJaccard]] rule applied incrementally:
+    * a row is a duplicate when a smaller-id batch row or any corpus row
+    * shares an LSH band bucket with it AND their exact n-gram Jaccard over
+    * distinct gram hashes meets `threshold`. Identical text shares every
+    * band, so an exact clone is always caught. `bands` [[bandProbeKeys]]
+    * per row.
+    */
+  final case class NearDup(
+      textCol: String,
+      n: Int = 3,
+      threshold: Double = 0.8,
+      numHashes: Int = 64,
+      bands: Int = 16,
+      seed: Long = 42L) extends Gate {
+    require(numHashes % bands == 0, "numHashes must be divisible by bands")
+    def keys: Column = bandProbeKeys(col(textCol), n, numHashes, bands, seed)
+    def keysPerRow: Int = bands
+
+    /** ONE batch featurization pass — (digest, distinct gram hashes,
+      * minhash signature) per row, materialized — feeds the exact-collapse,
+      * the within-batch LSH self-join, the probe keys and the confirm.
+      */
+    private[graft] def dedupBatch(batch: DataFrame, idCol: String): DataFrame = {
+      val toks = TextAnalysis.tokens(col(textCol))
+      val feat = Ops.spreadText(batch.select(col(idCol), col(textCol)))
+        .select(
+          col(idCol),
+          md5(to_json(struct(col(textCol)))).as("__digest"),
+          array_distinct(graft.functions.HashExpressions.ngramHashes(toks, n)).as("__g_a"),
+          minhashSignatureFromTokens(toks, n, numHashes, seed).as("__sig_a"))
+        .transform(Checkpointing.materialize)
+      // identical text keeps the min id (bounds bucket blowup under an
+      // exact-dup flood), then the larger id of a verified pair drops
+      val reps = minIdPerDigest(feat, idCol).drop("__digest")
+      val banded = reps
+        .select(col(idCol), posexplode(bandKeys(col("__sig_a"), numHashes, bands)))
+        .withColumnsRenamed(Map("pos" -> "__band", "col" -> "__bucket"))
+      val grams = reps.select(col(idCol), col("__g_a"))
+      val jac = size(array_intersect(col("__ga"), col("__gb"))).cast("double") /
+        size(array_union(col("__ga"), col("__gb")))
+      val drops = banded.select(col("__band"), col("__bucket"), col(idCol).as("__ia"))
+        .join(banded.select(col("__band"), col("__bucket"), col(idCol).as("__ib")),
+          Seq("__band", "__bucket"))
+        .filter(col("__ia") < col("__ib"))
+        .select(col("__ia"), col("__ib")).distinct()
+        .join(grams.select(col(idCol).as("__ia"), col("__g_a").as("__ga")), Seq("__ia"))
+        .join(grams.select(col(idCol).as("__ib"), col("__g_a").as("__gb")), Seq("__ib"))
+        .filter(jac >= threshold)
+        .select(col("__ib").as(idCol)).distinct()
+      reps.join(drops, Seq(idCol), "left_anti")
+        .withColumn("__keys", bandProbeKeysFromSig(col("__sig_a"), numHashes, bands))
+    }
+
+    private[graft] def confirm(corpus: DataFrame, candidates: DataFrame, idCol: String): DataFrame =
+      candidates.select(col(idCol)).join(
+        nearDupRejectsFromFeats(
+          nearDupFeatures(corpus, idCol, textCol, n, numHashes, seed)
+            .transform(Checkpointing.materialize),
+          candidates.select(col(idCol).as("__ca"), col("__g_a"), col("__sig_a")),
+          idCol, threshold, numHashes, bands),
+        Seq(idCol), "left_anti")
+  }
+
+  /** One row per `__digest`, the one with the smallest id. */
+  private def minIdPerDigest(df: DataFrame, idCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    df.withColumn("__rn", row_number()
+        .over(Window.partitionBy(col("__digest")).orderBy(col(idCol))))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
+
+  /** The incremental admission gate, batch and streaming: the rows of
+    * `batch` that are duplicates neither of a smaller-id batch row nor of
+    * `corpus`, under `gate`'s rule.
     *
-    * Scale shape: the corpus is reduced to ONE aggregated bloom filter (a
-    * bounded binary, like a broadcast runtime filter — the only driver-side
-    * data), which prunes the batch in its scan stage: rows the filter rejects
-    * are DEFINITELY new (bloom has no false negatives) and skip the join
-    * entirely; only the (tiny, false-positive-inflated) candidate remainder
-    * anti-joins against the corpus digests for exact confirmation. At 100 TB
-    * the anti-join's corpus-side scan reads one digest column and its
-    * batch-side input is the candidate sliver, not the whole batch.
+    * The batch dedups internally first. Its keys then probe the corpus key
+    * set: a [[Bloom]] flags rows in the batch's own scan stage, a
+    * [[KeyTable]] by a broadcast-batch-keys equi-join. A row no key of
+    * which is flagged has no duplicate in the corpus and is admitted
+    * without reading it; only flagged candidates pay `gate`'s confirm
+    * against `corpus`, and the corpus is not read at all when nothing is
+    * flagged. `corpus` is by-name so it is not even opened then.
+    *
+    * Returns the admitted rows, resolved against `batch` so they keep every
+    * column (`idCol` identifies a row), and whether the corpus confirm ran.
+    */
+  def admit(
+      corpus: => DataFrame,
+      batch: DataFrame,
+      idCol: String,
+      gate: Gate,
+      probe: Probe): (DataFrame, Boolean) = {
+    val kept = gate.dedupBatch(batch, idCol)
+    val flagged = (probe match {
+      case Bloom(bf) =>
+        kept.withColumn("__cand", exists(col("__keys"),
+          k => graft.functions.SketchFunctions.mightContain(lit(bf), k)))
+      case table: KeyTable =>
+        // materialized first: the probe's shard collect and its join would
+        // otherwise each re-run the within-batch dedup
+        val probed = kept.transform(Checkpointing.materialize)
+        val hits = tableCandidateIds(
+          probed.select(col(idCol), explode(col("__keys")).as("__k")), idCol, table)
+          .withColumn("__cand", lit(true))
+        probed.join(broadcast(hits), Seq(idCol), "left")
+          .withColumn("__cand", coalesce(col("__cand"), lit(false)))
+    }).transform(Checkpointing.materialize)
+    val candidates = flagged.filter(col("__cand"))
+    val confirmRan = !candidates.isEmpty
+    val admittedIds =
+      if (!confirmRan) flagged.select(col(idCol))
+      else flagged.filter(!col("__cand")).select(col(idCol))
+        .unionByName(gate.confirm(corpus, candidates, idCol))
+    (batch.join(admittedIds, Seq(idCol), "left_semi"), confirmRan)
+  }
+
+  /** A [[Bloom]] over `keys` (an `array<bigint>` column, [[Gate.keys]]) of
+    * `rows`, sized for `expectedItems`. No rows give an empty filter of the
+    * same size, so it merges with any other filter of that capacity.
+    */
+  private[graft] def bloomOver(rows: DataFrame, keys: Column, expectedItems: Long): Array[Byte] =
+    Option(rows.select(explode(keys).as("__k"))
+      .agg(graft.functions.SketchFunctions.bloomFilterAgg(col("__k"), expectedItems))
+      .head().getAs[Array[Byte]](0))
+      .getOrElse(graft.functions.SketchFunctions.emptyBloom(expectedItems))
+
+  /** Incremental corpus dedup: admit only the rows of `batch` whose content
+    * does not already exist in `corpus`, after collapsing exact duplicates
+    * within the batch to their min-id row — the batch-job form of
+    * [[graft.streaming.Streaming.ingestBatch]]. One corpus pass builds the
+    * content-key bloom; see [[admit]] for the rest.
     */
   def incrementalExact(
       corpus: DataFrame,
@@ -1056,73 +1230,21 @@ object Dedup {
       idCol: String,
       contentCols: Seq[String],
       expectedCorpusItems: Long = 1000000L): DataFrame = {
-    val bfRow = corpus
-      .agg(graft.functions.SketchFunctions
-        .bloomFilterAgg(contentBloomKey(contentCols), expectedCorpusItems).as("bf"))
-      .head()
-    if (bfRow.isNullAt(0)) exact(batch, idCol, contentCols) // empty corpus
-    else incrementalExactPruned(corpus, batch, idCol, contentCols,
-      bfRow.getAs[Array[Byte]]("bf"))
+    val gate = Exact(contentCols)
+    admit(corpus, batch, idCol, gate,
+      Bloom(bloomOver(corpus, gate.keys, expectedCorpusItems)))._1
   }
 
-  /** [[incrementalExact]] with a PREBUILT corpus bloom — the continuous-
-    * ingestion form ([[graft.streaming.Streaming.ingestBatch]] persists the
-    * bloom as a sidecar and OR-merges each admitted batch's keys into it, so
-    * steady-state per-batch cost never pays a corpus-sized bloom rebuild).
-    * The bloom must have been built over [[contentBloomKey]] of the SAME
-    * content columns and must cover every corpus row (no false negatives);
-    * a bloom that additionally contains keys absent from the corpus is safe
-    * — those rows just take the exact confirm join.
-    */
-  def incrementalExactPruned(
-      corpus: DataFrame,
-      batch: DataFrame,
-      idCol: String,
-      contentCols: Seq[String],
-      bloom: Array[Byte]): DataFrame = {
-    val digest = contentDigest(contentCols)
-    val withinDeduped = exact(batch, idCol, contentCols)
-    val flagged = withinDeduped
-      .withColumn("__might", graft.functions.SketchFunctions
-        .mightContain(lit(bloom), contentBloomKey(contentCols)))
-    val definitelyNew = flagged.filter(!col("__might"))
-    val confirmed = flagged.filter(col("__might"))
-      .withColumn("__digest", digest)
-      .join(corpus.select(digest.as("__digest")), Seq("__digest"), "left_anti")
-      .drop("__digest")
-    definitelyNew.unionByName(confirmed).drop("__might")
-  }
-
-  /** [[incrementalExact]] with a PREBUILT corpus content-key TABLE — the
-    * past-driver-memory probe form of [[incrementalExactPruned]]: the
-    * batch's [[contentBloomKey]]s broadcast into a shard-pruned equi-join
-    * against the persisted key table ([[KeyTable]], one key per corpus
-    * row) instead of probing a plan-literal bloom. The probe is exact, so
-    * only true content-hash collisions pay the digest confirm anti-join;
-    * admissions are identical to the bloom form.
+  /** [[incrementalExact]] probing a prebuilt content-key [[KeyTable]]
+    * ([[corpusContentKeys]]) instead of a bloom. Admissions are identical.
     */
   def incrementalExactTable(
       corpus: DataFrame,
       batch: DataFrame,
       idCol: String,
       contentCols: Seq[String],
-      keyTable: KeyTable): DataFrame = {
-    val digest = contentDigest(contentCols)
-    val withinDeduped = exact(batch, idCol, contentCols)
-      .transform(Checkpointing.materialize)
-    // materialized: candIds feeds both the anti (definitely-new) and semi
-    // (confirm) splits; withinDeduped feeds those plus the key derivation
-    val candIds = tableCandidateIds(
-      withinDeduped.select(col(idCol), contentBloomKey(contentCols).as("__k")),
-      idCol, keyTable)
-      .transform(Checkpointing.materialize)
-    val definitelyNew = withinDeduped.join(broadcast(candIds), Seq(idCol), "left_anti")
-    val confirmed = withinDeduped.join(broadcast(candIds), Seq(idCol), "left_semi")
-      .withColumn("__digest", digest)
-      .join(corpus.select(digest.as("__digest")), Seq("__digest"), "left_anti")
-      .drop("__digest")
-    definitelyNew.unionByName(confirmed)
-  }
+      keyTable: KeyTable): DataFrame =
+    admit(corpus, batch, idCol, Exact(contentCols), keyTable)._1
 
   /** The corpus's content keys in [[KeyTable]] layout (`__shard`, `__k`) —
     * one key per row; callers persist via
@@ -1133,18 +1255,14 @@ object Dedup {
     corpus.select(contentBloomKey(contentCols).as("__k"))
       .select(pmod(col("__k"), lit(nShards.toLong)).cast("int").as("__shard"), col("__k"))
 
-  /** The 64-bit bloom key over the content columns — shared by the
-    * incremental gate and the ingest sidecar so filters built in either
-    * place probe identically.
+  /** The 64-bit bloom key over the content columns — the [[Exact]] gate's
+    * one key per row.
     */
   def contentBloomKey(contentCols: Seq[String]): Column =
     xxhash64(to_json(struct(contentCols.map(col): _*)))
 
   /** Per-document LSH band PROBE keys — each (band index, bucket hash) pair
-    * folded to one 64-bit key, the unit the near-dup ingestion gate's bloom
-    * sidecar stores and probes. Shared by [[incrementalMinhash]] and
-    * [[graft.streaming.Streaming.ingestNearDupBatch]] so filters built in
-    * either place probe identically.
+    * folded to one 64-bit key, the [[NearDup]] gate's `bands` keys per row.
     */
   def bandProbeKeys(
       textCol: Column, n: Int, numHashes: Int, bands: Int, seed: Long): Column =
@@ -1153,28 +1271,15 @@ object Dedup {
       numHashes, bands)
 
   /** [[bandProbeKeys]] over an already-computed signature column — the same
-    * (band index, bucket) → xxhash64 fold, exposed so a caller that has
-    * materialized per-doc signatures builds IDENTICAL probe keys without a
-    * second tokenize+minhash pass.
+    * (band index, bucket) → xxhash64 fold, so a caller that has per-doc
+    * signatures builds IDENTICAL probe keys without a second
+    * tokenize+minhash pass.
     */
   def bandProbeKeysFromSig(sig: Column, numHashes: Int, bands: Int): Column =
     transform(bandKeys(sig, numHashes, bands), (b, i) => xxhash64(i, b))
 
-  /** Exact corpus band-key probe TABLE for [[incrementalMinhash]] — the
-    * past-driver-memory form of the band bloom: `keys` holds one row per
-    * corpus [[bandProbeKeys]] key (BIGINT `__k`, plus an int `__shard` =
-    * `pmod(__k, nShards)` partition column when persisted). The probe
-    * broadcasts the BATCH's keys into an equi-join against this table —
-    * pruned to the batch's shard set — so no key-set-sized object ever
-    * reaches the driver or a task binary, and the corpus side is scanned,
-    * never shuffled. Unlike the bloom the probe is exact: the candidate
-    * set is the true band-collision set.
-    */
-  final case class KeyTable(keys: DataFrame, nShards: Int)
-
   /** The corpus's band probe keys in [[KeyTable]] layout (`__shard`,
-    * `__k`) — ONE corpus featurization pass; callers persist the result
-    * partitioned by `__shard` (see
+    * `__k`); callers persist the result partitioned by `__shard` (see
     * [[graft.streaming.KeyTableSidecar.appendKeys]]) or pass it in-memory.
     */
   def corpusBandKeys(
@@ -1184,25 +1289,9 @@ object Dedup {
       .select(explode(bandProbeKeys(col(textCol), n, numHashes, bands, seed)).as("__k"))
       .select(pmod(col("__k"), lit(nShards.toLong)).cast("int").as("__shard"), col("__k"))
 
-  /** Ids of `batchFeat` rows (schema `idCol`, `__sig_a`) having at least
-    * one band key present in `table` — the table-probe analog of the bloom
-    * `exists(mightContain)` filter. The batch keys BROADCAST; the table is
-    * scanned pruned to the batch's shard set (collected from the batch
-    * side — bounded by nShards) and never shuffled.
-    */
-  private[graft] def bandTableCandidateIds(
-      batchFeat: DataFrame, idCol: String,
-      numHashes: Int, bands: Int, table: KeyTable): DataFrame =
-    tableCandidateIds(
-      batchFeat.select(
-        col(idCol),
-        explode(bandProbeKeysFromSig(col("__sig_a"), numHashes, bands)).as("__k")),
-      idCol, table)
-
-  /** The generic key-table probe: ids of `batchKeys` rows (`idCol`, BIGINT
-    * `__k`) whose key exists in `table` — shard-pruned scan of the corpus
-    * key table, batch side broadcast, tiny distinct-id output. Shared by
-    * the band probe above and the exact content-key gate.
+  /** The key-table probe: ids of `batchKeys` rows (`idCol`, BIGINT `__k`)
+    * whose key exists in `table` — shard-pruned scan of the corpus key
+    * table, batch side broadcast, tiny distinct-id output.
     *
     * The broadcast is forced only while the batch's key count is under
     * `maxBroadcastKeys` (the designed micro-batch regime, where the corpus
@@ -1235,36 +1324,13 @@ object Dedup {
       .select(col(idCol)).distinct()
   }
 
-  /** Incremental NEAR-duplicate ingestion gate: admit only the batch rows
-    * that are neither near-duplicates of the accumulated corpus nor of an
-    * earlier-id row in the same batch — the MinHash analog of
-    * [[incrementalExact]], closing the re-crawl hole where a page with one
-    * changed byte sails through an exact-hash gate.
-    *
-    * Semantics (the [[ngramJaccard]] mirror, applied incrementally): a batch
-    * row is rejected when some corpus row (or surviving earlier batch row)
-    * shares an LSH band bucket AND the exact n-gram Jaccard over distinct
-    * gram hashes meets `threshold`. An exact clone of a corpus row is always
-    * rejected: identical text ⇒ identical signature ⇒ collides in every
-    * band, and the bloom has no false negatives.
-    *
-    * Scale shape: `bandBloom` (a filter over the corpus's
-    * [[bandProbeKeys]] — the persisted sidecar in the streaming form) prunes
-    * the batch inside its own scan stage; rows with NO flagged band key are
-    * admitted without touching the corpus. Only flagged candidates take the
-    * (band, bucket) equi-join against the corpus — shuffle volume is
-    * candidates × bands, never corpus-sized, and the whole join is skipped
-    * when nothing is flagged. When no prebuilt bloom is passed, one corpus
-    * pass builds it (the batch-job form; expect `corpusRows × bands` keys).
-    *
-    * `bandKeyTable` is the past-driver-memory probe: above the sidecar
-    * byte budget a useful-FPR bloom cannot ship as a plan literal, so the
-    * probe becomes a broadcast-batch-keys equi-join against the persisted
-    * sharded key table ([[KeyTable]]) -- same admissions (the table is
-    * exact where the bloom over-flags), no driver-side key state. Takes
-    * precedence over `bandBloom` when both are set.
-    *
-    * Returns the admitted batch rows with the caller's full columns.
+  /** Incremental NEAR-duplicate ingestion gate — the MinHash analog of
+    * [[incrementalExact]] (the [[NearDup]] rule), closing the re-crawl hole
+    * where a page with one changed byte sails through an exact-hash gate;
+    * the batch-job form of
+    * [[graft.streaming.Streaming.ingestNearDupBatch]]. Without
+    * `bandKeyTable`, one corpus pass builds the band-key bloom (expect
+    * `corpusRows × bands` keys); see [[admit]] for the rest.
     */
   def incrementalMinhash(
       corpus: DataFrame,
@@ -1276,129 +1342,14 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 16,
       seed: Long = 42L,
-      bandBloom: Option[Array[Byte]] = None,
-      expectedCorpusBandKeys: Long = 1000000L,
       bandKeyTable: Option[KeyTable] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    if (bandBloom.isEmpty && bandKeyTable.isEmpty && corpus.isEmpty)
-      return ngramJaccard(batch, idCol, textCol, n, threshold, numHashes, bands, seed)
-    // ONE batch featurization pass — (exact-dup digest, distinct gram
-    // hashes, minhash signature) per row, materialized. Previously the
-    // batch text was re-tokenized and re-minhashed by each consumer
-    // separately (the within-batch dedup, the bloom probe, and the
-    // candidate featurization): three regex+hash passes over every batch
-    // document, the dominant cost of the gate after the corpus pass.
-    val toks = TextAnalysis.tokens(col(textCol))
-    val batchFeat = Ops.spreadText(batch.select(col(idCol), col(textCol)))
-      .select(
-        col(idCol),
-        md5(to_json(struct(col(textCol)))).as("__digest"),
-        array_distinct(graft.functions.HashExpressions.ngramHashes(toks, n)).as("__g_a"),
-        minhashSignatureFromTokens(toks, n, numHashes, seed).as("__sig_a"))
-      .transform(Checkpointing.materialize)
-    // within-batch collapse, same semantics as [[ngramJaccard]] run on the
-    // batch: identical text keeps the min id (exact-collapse bounds bucket
-    // blowup under an exact-dup flood), then the larger id of any verified
-    // near-dup pair drops
-    val reps = batchFeat
-      .withColumn("__rn", row_number()
-        .over(Window.partitionBy(col("__digest")).orderBy(col(idCol))))
-      .filter(col("__rn") === 1).drop("__rn", "__digest")
-    val bandedB = reps
-      .select(col(idCol), posexplode(bandKeys(col("__sig_a"), numHashes, bands)))
-      .withColumnsRenamed(Map("pos" -> "__band", "col" -> "__bucket"))
-    val lB = bandedB.select(col("__band"), col("__bucket"), col(idCol).as("__ia"))
-    val rB = bandedB.select(col("__band"), col("__bucket"), col(idCol).as("__ib"))
-    val gramsOf = reps.select(col(idCol), col("__g_a"))
-    val jacB = size(array_intersect(col("__ga"), col("__gb"))).cast("double") /
-      size(array_union(col("__ga"), col("__gb")))
-    val withinDrops = lB.join(rB, Seq("__band", "__bucket"))
-      .filter(col("__ia") < col("__ib"))
-      .select(col("__ia"), col("__ib")).distinct()
-      .join(gramsOf.select(col(idCol).as("__ia"), col("__g_a").as("__ga")), Seq("__ia"))
-      .join(gramsOf.select(col(idCol).as("__ib"), col("__g_a").as("__gb")), Seq("__ib"))
-      .filter(jacB >= threshold)
-      .select(col("__ib").as(idCol)).distinct()
-    val batchKeptFeat = reps.join(withinDrops, Seq(idCol), "left_anti")
-    // With no prebuilt sidecar, the corpus pass happens HERE — once. The
-    // materialized (id, grams, signature) frame feeds BOTH the bloom build
-    // and the reject join below; without it the corpus would be tokenized +
-    // minhashed twice (the dominant cost of the batch-job form).
-    val corpFeat =
-      if (bandBloom.isDefined || bandKeyTable.isDefined) (null: DataFrame)
-      else nearDupFeatures(corpus, idCol, textCol, n, numHashes, seed)
-        .transform(Checkpointing.materialize)
-    // batch-sized materialization: the candidate split, the emptiness probe
-    // and the final anti-join all reuse it — and when the probe flags
-    // nothing, the corpus is NEVER touched (the steady-state cost model)
-    val flagged = bandKeyTable match {
-      case Some(table) =>
-        // table probe: the batch's keys broadcast into the sharded key
-        // table (pruned, never shuffled); the tiny hit-id set broadcasts
-        // back onto the batch — nothing key-set-sized in the driver.
-        // batchKeptFeat materializes FIRST: the probe's shard collect, key
-        // count and equi-join would otherwise each re-run the within-batch
-        // LSH self-join it sits on (the bloom path pays that join once)
-        val probeFeat = batchKeptFeat.transform(Checkpointing.materialize)
-        val candIds = bandTableCandidateIds(probeFeat, idCol, numHashes, bands, table)
-          .withColumn("__cand", lit(true))
-        probeFeat.join(broadcast(candIds), Seq(idCol), "left")
-          .withColumn("__cand", coalesce(col("__cand"), lit(false)))
-          .transform(Checkpointing.materialize)
-      case None =>
-        val bloom = bandBloom.getOrElse {
-          corpFeat.select(explode(
-            bandProbeKeysFromSig(col("__sig"), numHashes, bands)).as("__k"))
-            .agg(graft.functions.SketchFunctions.bloomFilterAgg(
-              col("__k"), expectedCorpusBandKeys).as("bf"))
-            .head().getAs[Array[Byte]]("bf")
-        }
-        batchKeptFeat.withColumn("__cand",
-          exists(bandProbeKeysFromSig(col("__sig_a"), numHashes, bands),
-            k => graft.functions.SketchFunctions.mightContain(lit(bloom), k)))
-          .transform(Checkpointing.materialize)
-    }
-    val candidates = flagged.filter(col("__cand"))
-      .select(col(idCol).as("__ca"), col("__g_a"), col("__sig_a"))
-    val admittedIds =
-      if (candidates.isEmpty) flagged.select(col(idCol))
-      else {
-        val feat = Option(corpFeat).getOrElse(
-          nearDupFeatures(corpus, idCol, textCol, n, numHashes, seed)
-            .transform(Checkpointing.materialize))
-        flagged.select(col(idCol)).join(
-          nearDupRejectsFromFeats(feat, candidates, idCol, threshold, numHashes, bands),
-          Seq(idCol), "left_anti")
-      }
-    // resolve against the caller's frame so admitted rows keep every column
-    batch.join(admittedIds, Seq(idCol), "left_semi")
+    val gate = NearDup(textCol, n, threshold, numHashes, bands, seed)
+    admit(corpus, batch, idCol, gate, bandKeyTable.getOrElse(
+      Bloom(bloomOver(corpus, gate.keys, 1000000L))))._1
   }
 
-  /** Ids of `candidates` rows with a VERIFIED near-duplicate in `corpus`:
-    * LSH band-bucket equi-join (shuffle volume = collisions, never the
-    * cross product) + exact gram-hash Jaccard confirm — the corpus-facing
-    * half of [[incrementalMinhash]], shared with the streaming ingest gate
-    * so batch and streaming forms reject identically.
-    */
-  private[graft] def nearDupRejects(
-      corpus: DataFrame,
-      candidates: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      threshold: Double,
-      numHashes: Int,
-      bands: Int,
-      seed: Long): DataFrame =
-    nearDupRejectsFeat(
-      nearDupFeatures(corpus, idCol, textCol, n, numHashes, seed)
-        .transform(Checkpointing.materialize),
-      candidates, idCol, textCol, n, threshold, numHashes, bands, seed)
-
-  /** One corpus feature pass for the near-dup gate: (renamed id, distinct
-    * gram hashes, minhash signature) per corpus row. Callers materialize the
-    * result ONCE and feed it to both the sidecar/bloom build and
-    * [[nearDupRejectsFeat]].
+  /** One corpus feature pass for the near-dup confirm: (renamed id,
+    * distinct gram hashes, minhash signature) per corpus row.
     */
   private[graft] def nearDupFeatures(
       corpus: DataFrame, idCol: String, textCol: String,
@@ -1413,36 +1364,13 @@ object Dedup {
       minhashSignatureFromTokens(TextAnalysis.tokens(col(textCol)), n, numHashes, seed)
         .as("__sig"))
 
-  /** [[nearDupRejects]] over a prepared corpus feature frame. The band join
-    * carries IDS ONLY — the distinct-gram arrays would otherwise ride the
-    * 16-way band explode through the shuffle (bands × |corpus| array copies,
-    * the dominant wire cost of the old formulation); instead the verified
-    * candidate pairs (a tiny frame — collisions only) join BACK to the two
-    * gram tables and the exact Jaccard confirms on one array copy per side.
-    */
-  private[graft] def nearDupRejectsFeat(
-      corpFeat: DataFrame,
-      candidates: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      threshold: Double,
-      numHashes: Int,
-      bands: Int,
-      seed: Long): DataFrame = {
-    val candFeat = candidates
-      .select(col(idCol).as("__ca"),
-        array_distinct(graft.functions.HashExpressions
-          .ngramHashes(TextAnalysis.tokens(col(textCol)), n)).as("__g_a"),
-        minhashSignatureFromTokens(TextAnalysis.tokens(col(textCol)), n, numHashes, seed)
-          .as("__sig_a"))
-      .transform(Checkpointing.materialize)
-    nearDupRejectsFromFeats(corpFeat, candFeat, idCol, threshold, numHashes, bands)
-  }
-
-  /** [[nearDupRejectsFeat]] when the candidate features are ALREADY built
-    * (`__ca`, `__g_a`, `__sig_a`) — [[incrementalMinhash]] reuses its one
-    * batch featurization pass here instead of re-tokenizing the candidates.
+  /** Ids of candidates (`__ca`, `__g_a`, `__sig_a`) with a VERIFIED
+    * near-duplicate among the corpus features: LSH band-bucket equi-join
+    * (shuffle volume = collisions, never the cross product) + exact
+    * gram-hash Jaccard. The band join carries IDS ONLY — the distinct-gram
+    * arrays would otherwise ride the `bands`-way explode through the
+    * shuffle; the verified pairs (collisions only) join BACK to the two
+    * gram tables instead.
     */
   private[graft] def nearDupRejectsFromFeats(
       corpFeat: DataFrame,

@@ -562,13 +562,23 @@ object GraftParquetWrite {
           // concurrent heal of the same published commit can win the rename)
           val name = f"c-$seq%012d-$commitId"
           val target = new Path(logDir(table), name)
-          FsPublish.publish(fs, new Path(staging, s"logrec-${System.nanoTime()}.tmp"), target)(
-            _.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8)))
+          val published =
+            try {
+              FsPublish.publish(fs, new Path(staging, s"logrec-${System.nanoTime()}.tmp"), target)(
+                _.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8)))
+              true
+            } catch {
+              // that heal finished first at another seq and swept the
+              // staging dir, temp included: the next lap lists its record
+              case _: java.io.FileNotFoundException if !fs.exists(staging) => false
+            }
           // CAS verification: re-list and arbitrate. Winner keeps the seq;
           // loser retracts and re-sequences on the next lap.
-          if (winsAt(logRecordFiles(fs, table).map(_.getPath.getName), seq, name))
-            return seq
-          fs.delete(target, false)
+          if (published) {
+            if (winsAt(logRecordFiles(fs, table).map(_.getPath.getName), seq, name))
+              return seq
+            fs.delete(target, false)
+          }
       }
     }
     throw new IllegalStateException(

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Checkpointing
+import graft.functions.SketchFunctions
 import graft.sources.{FsPublish, ParquetRead}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -398,130 +399,201 @@ object Streaming {
       rebuiltBloom: Boolean,
       saturatedRebuild: Boolean)
 
-  /** One ingestion micro-batch (the foreachBatch body, callable from batch
-    * jobs and tests): gate against the persisted corpus bloom, append the
-    * survivors, then OR-merge their keys into the bloom sidecar. An empty
-    * survivor set skips both writes so uneventful batches don't accrete
-    * files.
+  /** The continuous form of [[graft.operators.Dedup.admit]], shared by
+    * [[ingestBatch]] and [[ingestNearDupBatch]]: one gate, its corpus, and
+    * the persisted key set the gate probes — a bloom sidecar, or past the
+    * byte budget `budget` the sharded [[KeyTableSidecar]]. The sidecar
+    * names follow from the gate (content keys for
+    * [[graft.operators.Dedup.Exact]], band keys for
+    * [[graft.operators.Dedup.NearDup]]).
     *
-    * Cost model at 100 TB: the corpus is NEVER scanned in the steady state.
-    * The sidecar bloom prunes the batch inside its scan stage; only rows the
-    * bloom flags (true duplicates + the sized false-positive rate) take the
-    * exact anti-join against the corpus digests, and the whole join is
-    * skipped when no row is flagged. The bloom is rebuilt from the corpus in
-    * exactly two cases: the sidecar is missing/stale (first migration, or a
-    * crash landed between the corpus append and the sidecar swap — detected
-    * by the data-file-count stamp) and saturation (admitted keys outgrew the
-    * filter's capacity; it is rebuilt at double size, so rebuilds amortize
-    * to O(log corpus) over the corpus lifetime).
+    * Cost model: the corpus is NEVER scanned in the steady state — only
+    * probe-flagged rows pay the corpus confirm, and nothing is read when
+    * none is flagged. The sidecar is rebuilt from the corpus in exactly two
+    * cases: it is missing or stale (first migration, or a crash between the
+    * corpus append and the sidecar swap — detected by the data-file stamp),
+    * and bloom saturation (rebuilt at double capacity, so rebuilds amortize
+    * to O(log corpus); switched to the table when the doubled bloom would
+    * blow the budget).
     *
-    * Crash-safety ordering: survivors are appended BEFORE the sidecar swap.
-    * A crash in between leaves a sidecar missing the new keys — but also
-    * stale by file count, which forces a rebuild on the next batch. The
-    * bloom therefore never under-covers the corpus it gates (a false
-    * negative would admit a duplicate; a false positive only costs the
-    * confirm join).
-    *
-    * TWO sidecar forms under a byte budget (`sidecarMaxBytes`), exactly
-    * as in [[ingestNearDupBatch]]:
-    * past the budget the content-key bloom (a plan literal, one key per
-    * corpus row — driver-unshippable at extreme corpus sizes) becomes the
-    * persisted sharded [[KeyTableSidecar]] probed by broadcasting the
-    * batch's content keys into a shard-pruned equi-join. The table probe
-    * is exact, so only true 64-bit-hash collisions pay the digest confirm.
-    */
-  /** Shared sidecar plumbing for the continuous ingestion gates
-    * ([[ingestBatch]] content keys, [[ingestNearDupBatch]] band keys): the
-    * bloom-vs-table byte-budget policy, the table rebuild (with bloom
-    * retirement), the key-append + meta-swap tail, and the stale-stamp
-    * dispatch live HERE once, so the two gates cannot drift on the crash
-    * ordering or the mode rule. Each gate supplies only its key
-    * derivation, sizing, and batch bodies.
+    * Crash ordering: survivors append FIRST, then the corpus compacts, then
+    * the sidecar swaps in stamped with the post-compaction file set. A
+    * crash in between leaves a stale stamp, which forces a rebuild: the key
+    * set never under-covers the corpus it gates (a false negative would
+    * admit a duplicate; a false positive only costs the confirm).
     */
   private final case class SidecarGate(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path,
+      batch: DataFrame,
       corpusDir: String,
-      tableName: String,
-      bloomName: String,
-      nShards: graft.Sizing.Count,
-      budget: Long,
+      idCol: String,
+      gate: graft.operators.Dedup.Gate,
       minExpectedKeys: Long,
-      keysOver: DataFrame => DataFrame,
-      corpusKeyCount: DataFrame => Long,
-      buildBloomBytes: (DataFrame, Long) => Array[Byte]) {
+      maxSmallFiles: Int,
+      minFileBytes: Long,
+      nShards: graft.Sizing.Count,
+      budget: Long) {
+    private val Dedup = graft.operators.Dedup
+    private val spark = batch.sparkSession
+    private val target = new org.apache.hadoop.fs.Path(corpusDir)
+    private val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    private val (tableName, bloomName) = gate match {
+      case _: graft.operators.Dedup.Exact => (KeyTableSidecar.ContentName, BloomSidecar.ContentName)
+      case _: graft.operators.Dedup.NearDup => (KeyTableSidecar.BandName, BloomSidecar.BandName)
+    }
 
-    def overBudget(keyCount: Long): Boolean =
-      KeyTableSidecar.estimatedBloomBytes(
-        math.max(minExpectedKeys, 2 * keyCount)) > budget
+    private def keysOver(rows: DataFrame): DataFrame = rows.select(explode(gate.keys).as("__k"))
+    private def bloomOver(rows: DataFrame, expected: Long): Array[Byte] =
+      Dedup.bloomOver(rows, gate.keys, expected)
+    private def overBudget(keyCount: Long): Boolean =
+      KeyTableSidecar.estimatedBloomBytes(math.max(minExpectedKeys, 2 * keyCount)) > budget
+    private def stamp: String = BloomSidecar.filesStamp(fs, target)
+    private def compact(): Unit =
+      CorpusCompaction.compact(spark, fs, target, maxSmallFiles, minFileBytes)
 
-    /** The modulus a NEW table is created with: data-derived under
-      * [[graft.Sizing.Auto]] (the default), else the explicit constant.
-      * Existing tables keep their meta's modulus.
+    /** Gate the batch through `probe` and append what it admits: (the
+      * materialized survivors, their count, whether the corpus confirm ran).
       */
-    def newModulus(keyCount: Long): Int =
-      nShards.orElse(KeyTableSidecar.deriveShards(keyCount))
+    private def admitAndAppend(probe: graft.operators.Dedup.Probe): (DataFrame, Long, Boolean) = {
+      val (rows, confirmed) =
+        Dedup.admit(ParquetRead(spark, corpusDir), batch, idCol, gate, probe)
+      val survivors = rows.transform(Checkpointing.materialize)
+      val n = survivors.count()
+      if (n > 0) survivors.write.mode("append").parquet(corpusDir)
+      (survivors, n, confirmed)
+    }
 
-    /** Rebuild the table sidecar from the corpus (one corpus scan),
-      * retiring any bloom sidecar; meta swaps in LAST so a crash
+    /** A NEW table is created with a data-derived modulus under
+      * [[graft.Sizing.Auto]], else the explicit one; existing tables keep
+      * their meta's modulus.
+      */
+    private def writeTable(keys: DataFrame, keyCount: Long, rebuild: Boolean): KeyTableMeta = {
+      val mod = nShards.orElse(KeyTableSidecar.deriveShards(keyCount))
+      if (rebuild) KeyTableSidecar.rebuild(fs, keys, target, mod, tableName)
+      else KeyTableSidecar.appendKeys(keys, target, mod, tableName)
+      val meta = KeyTableMeta(mod, keyCount, stamp)
+      KeyTableSidecar.writeMeta(fs, target, meta, tableName)
+      meta
+    }
+
+    /** Rebuild the table sidecar from the corpus (one corpus scan), then
+      * retire any bloom sidecar. The meta swaps in last, so a crash
       * mid-rebuild leaves a stale stamp and the next batch rebuilds again.
       */
-    def rebuildTable(corpus: DataFrame, keyCount: Long): KeyTableMeta = {
-      val mod = newModulus(keyCount)
-      KeyTableSidecar.rebuild(fs, keysOver(corpus), target, mod, tableName)
-      val meta = KeyTableMeta(mod, keyCount, BloomSidecar.filesStamp(fs, target))
-      KeyTableSidecar.writeMeta(fs, target, meta, tableName)
+    private def rebuildTable(corpus: DataFrame, keyCount: Long): KeyTableMeta = {
+      val meta = writeTable(keysOver(corpus), keyCount, rebuild = true)
       val bloomPath = BloomSidecar.path(target, bloomName)
       if (fs.exists(bloomPath)) fs.delete(bloomPath, false)
       meta
     }
 
-    /** The table-mode append tail (post-corpus-append, post-corpus-
-      * compaction): append the admitted keys, bound the table's per-shard
-      * file count (add-then-delete — a crash can only duplicate keys,
-      * never lose one), then swap the meta with the post-compaction stamp.
+    private def writeBloom(expected: Long, keyCount: Long, bloom: Array[Byte]): Unit =
+      BloomSidecar.write(fs, target, BloomSidecar(expected, keyCount, stamp, bloom), bloomName)
+
+    def ingest(): IngestStats =
+      if (!fs.exists(target)) firstBatch()
+      else {
+        // finish any compaction commit a crash interrupted BEFORE trusting
+        // the corpus: mid-commit, retired rows exist only in the staging dir
+        CorpusCompaction.recover(fs, target)
+        val now = stamp
+        KeyTableSidecar.readMeta(fs, target, tableName).filter(_.filesStamp == now) match {
+          case Some(meta) => tableBatch(meta, rebuilt = false, scans0 = 0)
+          case None =>
+            BloomSidecar.read(fs, target, bloomName).filter(_.filesStamp == now) match {
+              case Some(sidecar) => bloomBatch(sidecar, rebuilt = false, scans0 = 0)
+              case None =>
+                // neither sidecar is fresh: ONE corpus scan rebuilds
+                // whichever form fits the byte budget
+                val corpus = ParquetRead(spark, corpusDir)
+                val keyCount = corpus.count() * gate.keysPerRow
+                if (overBudget(keyCount))
+                  tableBatch(rebuildTable(corpus, keyCount), rebuilt = true, scans0 = 1)
+                else {
+                  val expected = math.max(minExpectedKeys, 2 * keyCount)
+                  bloomBatch(BloomSidecar(expected, keyCount, now, bloomOver(corpus, expected)),
+                    rebuilt = true, scans0 = 1)
+                }
+            }
+        }
+      }
+
+    /** No corpus yet: the within-batch dedup alone admits, and the sidecar
+      * is created over the survivors in whichever form fits the budget.
       */
-    def appendTableKeys(survivors: DataFrame, meta: KeyTableMeta, newKeys: Long,
-        maxSmallFiles: Int): Unit = {
-      KeyTableSidecar.appendKeys(keysOver(survivors), target, meta.nShards, tableName)
-      KeyTableSidecar.compact(spark, fs, target, tableName, maxSmallFiles)
-      KeyTableSidecar.writeMeta(fs, target,
-        KeyTableMeta(meta.nShards, meta.keyCount + newKeys,
-          BloomSidecar.filesStamp(fs, target)), tableName)
+    private def firstBatch(): IngestStats = {
+      val (survivors, n, _) = admitAndAppend(Dedup.Bloom(SketchFunctions.emptyBloom(1L)))
+      if (n > 0) {
+        val keyCount = n * gate.keysPerRow
+        if (overBudget(keyCount)) writeTable(keysOver(survivors), keyCount, rebuild = false)
+        else {
+          val expected = math.max(minExpectedKeys, 2 * keyCount)
+          writeBloom(expected, keyCount, bloomOver(survivors, expected))
+        }
+      }
+      IngestStats(n, corpusScans = 0, rebuiltBloom = false, saturatedRebuild = false)
     }
 
-    /** Stale-stamp dispatch: a fresh table sidecar beats a fresh bloom
-      * beats a one-corpus-scan rebuild of whichever form fits the budget.
+    /** Gate through the key table, then append the admitted keys, bound the
+      * table's per-shard file count (add-then-delete — a crash can only
+      * duplicate keys, never lose one) and swap the meta.
       */
-    def dispatch(
-        tableBatch: (KeyTableMeta, Boolean, Int) => IngestStats,
-        bloomBatch: (BloomSidecar, Boolean, Int) => IngestStats): IngestStats = {
-      // finish any compaction commit a crash interrupted BEFORE trusting
-      // the corpus: mid-commit, retired rows exist only in the staging dir
-      CorpusCompaction.recover(fs, target)
-      val stamp = BloomSidecar.filesStamp(fs, target)
-      KeyTableSidecar.readMeta(fs, target, tableName).filter(_.filesStamp == stamp) match {
-        case Some(meta) => tableBatch(meta, false, 0)
-        case None =>
-          BloomSidecar.read(fs, target, bloomName).filter(_.filesStamp == stamp) match {
-            case Some(sidecar) => bloomBatch(sidecar, false, 0)
-            case None =>
-              // neither sidecar is fresh: ONE corpus scan rebuilds
-              // whichever form fits the byte budget
-              val corpus = ParquetRead(spark, corpusDir)
-              val keyCnt = corpusKeyCount(corpus)
-              if (overBudget(keyCnt)) tableBatch(rebuildTable(corpus, keyCnt), true, 1)
-              else {
-                val expected = math.max(minExpectedKeys, 2 * keyCnt)
-                bloomBatch(BloomSidecar(expected, keyCnt, stamp,
-                  buildBloomBytes(corpus, expected)), true, 1)
-              }
-          }
+    private def tableBatch(meta: KeyTableMeta, rebuilt: Boolean, scans0: Int): IngestStats = {
+      val (survivors, n, confirmed) = admitAndAppend(
+        Dedup.KeyTable(KeyTableSidecar.load(spark, target, tableName), meta.nShards))
+      if (n > 0) {
+        compact()
+        KeyTableSidecar.appendKeys(keysOver(survivors), target, meta.nShards, tableName)
+        KeyTableSidecar.compact(spark, fs, target, tableName, maxSmallFiles)
+        KeyTableSidecar.writeMeta(fs, target,
+          KeyTableMeta(meta.nShards, meta.keyCount + n * gate.keysPerRow, stamp), tableName)
       }
+      IngestStats(n, scans0 + (if (confirmed) 1 else 0),
+        rebuiltBloom = rebuilt, saturatedRebuild = false)
+    }
+
+    /** Gate through the bloom, then OR-merge the admitted keys into it — or,
+      * past its capacity, rebuild it at double size from the corpus, or
+      * switch to the table when the doubled bloom would blow the budget.
+      */
+    private def bloomBatch(sidecar: BloomSidecar, rebuilt: Boolean, scans0: Int): IngestStats = {
+      val (survivors, n, confirmed) = admitAndAppend(Dedup.Bloom(sidecar.bloom))
+      var scans = scans0 + (if (confirmed) 1 else 0)
+      val merged = sidecar.insertedCount + n * gate.keysPerRow
+      val saturated = n > 0 && merged > sidecar.expectedItems
+      if (saturated) scans += 1
+      if (n > 0) {
+        if (saturated && overBudget(merged)) {
+          compact()
+          rebuildTable(ParquetRead(spark, corpusDir), merged)
+        } else {
+          val (capacity, bloom) =
+            if (saturated) {
+              val cap = math.max(2 * merged, minExpectedKeys)
+              (cap, bloomOver(ParquetRead(spark, corpusDir), cap))
+            } else (sidecar.expectedItems,
+              BloomSidecar.merge(sidecar.bloom, bloomOver(survivors, sidecar.expectedItems)))
+          compact()
+          writeBloom(capacity, merged, bloom)
+        }
+      }
+      IngestStats(n, scans, rebuiltBloom = rebuilt, saturatedRebuild = saturated)
     }
   }
 
+  /** One exact-dedup ingestion micro-batch (the foreachBatch body of
+    * [[ingestDedupStream]], callable from batch jobs and tests): admit the
+    * batch rows whose `contentCols` are new to the batch and to the corpus
+    * at `corpusDir`, append them, and add their keys to the corpus's
+    * content-key sidecar. An empty survivor set writes nothing. See
+    * [[SidecarGate]] for the cost model and crash ordering.
+    *
+    * The sidecar is a bloom over one key per corpus row, sized for
+    * `expectedCorpusItems` and doubled on saturation; past
+    * `sidecarMaxBytes` (`0` forces it) it is the sharded content-key table
+    * instead (`nShards` sets its modulus), whose exact probe leaves only
+    * 64-bit-hash collisions to the digest confirm. The corpus compacts to
+    * at most `maxSmallFiles` files under `minFileBytes` after every append.
+    */
   def ingestBatch(
       batch: DataFrame,
       corpusDir: String,
@@ -531,143 +603,9 @@ object Streaming {
       maxSmallFiles: Int = 8,
       minFileBytes: Long = 32L * 1024 * 1024,
       nShards: graft.Sizing.Count = graft.Sizing.Auto,
-      sidecarMaxBytes: Long = KeyTableSidecar.DefaultMaxBytes): IngestStats = {
-    val spark = batch.sparkSession
-    val target = new org.apache.hadoop.fs.Path(corpusDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val Dedup = graft.operators.Dedup
-    val bloomKey = Dedup.contentBloomKey(contentCols)
-    val TableName = KeyTableSidecar.ContentName
-    val gate = SidecarGate(spark, fs, target, corpusDir,
-      tableName = TableName, bloomName = BloomSidecar.ContentName,
-      nShards = nShards, budget = sidecarMaxBytes, minExpectedKeys = expectedCorpusItems,
-      keysOver = df => df.select(bloomKey.as("__k")),
-      corpusKeyCount = _.count(),
-      buildBloomBytes = (corpus, expected) => corpus
-        .agg(graft.functions.SketchFunctions.bloomFilterAgg(bloomKey, expected))
-        .head().getAs[Array[Byte]](0))
-
-    // gate through the TABLE sidecar (the past-driver-memory form): the
-    // batch's content keys broadcast into the shard-pruned key table; only
-    // true hash collisions pay the digest confirm anti-join
-    def tableBatch(meta: KeyTableMeta, rebuilt: Boolean, scans0: Int): IngestStats = {
-      var scans = scans0
-      val kept = Dedup.exact(batch, idCol, contentCols)
-        .transform(Checkpointing.materialize)
-      // materialized: the tiny hit-id set feeds the semi and anti splits
-      // AND the emptiness probe — without this the shard-pruned key-table
-      // join re-executes once per consumer
-      val candIds = Dedup.tableCandidateIds(
-        kept.select(col(idCol), bloomKey.as("__k")), idCol,
-        Dedup.KeyTable(KeyTableSidecar.load(spark, target, TableName), meta.nShards))
-        .transform(Checkpointing.materialize)
-      val candidates = kept.join(broadcast(candIds), Seq(idCol), "left_semi")
-      val definitelyNew = kept.join(broadcast(candIds), Seq(idCol), "left_anti")
-      val survivors = (if (candidates.isEmpty) kept
-      else {
-        scans += 1 // exact confirmation reads the corpus digests once
-        val digest = Dedup.contentDigest(contentCols)
-        val confirmed = candidates.withColumn("__digest", digest)
-          .join(ParquetRead(spark, corpusDir).select(digest.as("__digest")),
-            Seq("__digest"), "left_anti")
-          .drop("__digest")
-        definitelyNew.unionByName(confirmed)
-      }).transform(Checkpointing.materialize)
-      val n = survivors.count()
-      if (n > 0) {
-        survivors.write.mode("append").parquet(corpusDir)
-        CorpusCompaction.compact(spark, fs, target, maxSmallFiles, minFileBytes)
-        gate.appendTableKeys(survivors, meta, newKeys = n, maxSmallFiles)
-      }
-      IngestStats(n, scans, rebuiltBloom = rebuilt, saturatedRebuild = false)
-    }
-
-    // gate through the BLOOM sidecar (the small-corpus fast path); a
-    // saturation rebuild whose doubled capacity would blow the byte budget
-    // switches to the table sidecar instead
-    def bloomBatch(sidecar: BloomSidecar, rebuilt: Boolean, scans0: Int): IngestStats = {
-      var scans = scans0
-      val flagged = Dedup.exact(batch, idCol, contentCols)
-        .withColumn("__might", graft.functions.SketchFunctions
-          .mightContain(lit(sidecar.bloom), bloomKey))
-        .transform(Checkpointing.materialize)
-      val definitelyNew = flagged.filter(!col("__might")).drop("__might")
-      val candidates = flagged.filter(col("__might")).drop("__might")
-      val survivors = (if (candidates.isEmpty) definitelyNew
-      else {
-        scans += 1 // exact confirmation reads the corpus digests once
-        val digest = Dedup.contentDigest(contentCols)
-        val confirmed = candidates.withColumn("__digest", digest)
-          .join(ParquetRead(spark, corpusDir).select(digest.as("__digest")),
-            Seq("__digest"), "left_anti")
-          .drop("__digest")
-        definitelyNew.unionByName(confirmed)
-      }).transform(Checkpointing.materialize)
-      val n = survivors.count()
-      var saturated = false
-      if (n > 0) {
-        survivors.write.mode("append").parquet(corpusDir)
-        val mergedCount = sidecar.insertedCount + n
-        if (mergedCount > sidecar.expectedItems && gate.overBudget(mergedCount)) {
-          saturated = true; scans += 1
-          CorpusCompaction.compact(spark, fs, target, maxSmallFiles, minFileBytes)
-          gate.rebuildTable(ParquetRead(spark, corpusDir), mergedCount)
-        } else {
-          val (capacity, bloomBytes) =
-            if (mergedCount > sidecar.expectedItems) {
-              // capacity outgrown: rebuild at double size from the corpus
-              // (which now includes this batch) -- amortized O(log corpus)
-              saturated = true; scans += 1
-              val corpus = ParquetRead(spark, corpusDir)
-              val cap = math.max(2 * mergedCount, expectedCorpusItems)
-              (cap, corpus.agg(
-                graft.functions.SketchFunctions.bloomFilterAgg(bloomKey, cap))
-                .head().getAs[Array[Byte]](0))
-            } else {
-              val batchBf = survivors.agg(
-                graft.functions.SketchFunctions
-                  .bloomFilterAgg(bloomKey, sidecar.expectedItems))
-                .head().getAs[Array[Byte]](0)
-              (sidecar.expectedItems, BloomSidecar.merge(sidecar.bloom, batchBf))
-            }
-          // bound the file count BEFORE stamping the sidecar: the stamp must
-          // record the post-compaction count or the next batch would read it
-          // as a crash and pay a needless rebuild. Compaction preserves
-          // content, so the bloom itself is untouched.
-          CorpusCompaction.compact(spark, fs, target, maxSmallFiles, minFileBytes)
-          BloomSidecar.write(fs, target,
-            BloomSidecar(capacity, mergedCount,
-              BloomSidecar.filesStamp(fs, target), bloomBytes))
-        }
-      }
-      IngestStats(n, scans, rebuiltBloom = rebuilt, saturatedRebuild = saturated)
-    }
-
-    if (!fs.exists(target)) {
-      val survivors = Dedup.exact(batch, idCol, contentCols)
-        .transform(Checkpointing.materialize)
-      val n = survivors.count()
-      if (n > 0) {
-        survivors.write.mode("append").parquet(corpusDir)
-        if (gate.overBudget(n)) {
-          val mod = gate.newModulus(n)
-          KeyTableSidecar.appendKeys(gate.keysOver(survivors), target, mod, TableName)
-          KeyTableSidecar.writeMeta(fs, target,
-            KeyTableMeta(mod, n, BloomSidecar.filesStamp(fs, target)), TableName)
-        } else {
-          val expected = math.max(expectedCorpusItems, 2 * n)
-          val bf = survivors.agg(
-            graft.functions.SketchFunctions.bloomFilterAgg(bloomKey, expected))
-            .head().getAs[Array[Byte]](0)
-          BloomSidecar.write(fs, target,
-            BloomSidecar(expected, n, BloomSidecar.filesStamp(fs, target), bf))
-        }
-      }
-      IngestStats(n, corpusScans = 0, rebuiltBloom = false, saturatedRebuild = false)
-    } else {
-      gate.dispatch(tableBatch, bloomBatch)
-    }
-  }
+      sidecarMaxBytes: Long = KeyTableSidecar.DefaultMaxBytes): IngestStats =
+    SidecarGate(batch, corpusDir, idCol, graft.operators.Dedup.Exact(contentCols),
+      expectedCorpusItems, maxSmallFiles, minFileBytes, nShards, sidecarMaxBytes).ingest()
 
   /** What [[purgeCorpus]] did, for callers and specs: corpus rows removed,
     * content keys deleted from the table sidecar (0 when the gate runs in
@@ -811,32 +749,14 @@ object Streaming {
       }
       .start()
 
-  /** One near-dup ingestion micro-batch — [[ingestBatch]]'s cost model with
-    * LSH band keys as the sidecar unit: the persisted bloom holds the
-    * corpus's [[graft.operators.Dedup.bandProbeKeys]] (bands keys per doc);
-    * a batch row NONE of whose band keys hit the bloom provably shares no
-    * band bucket with any corpus row and is admitted inside the batch's own
-    * scan stage. Only flagged candidates pay the (band, bucket) equi-join +
-    * exact-Jaccard confirm against the corpus, and the join is skipped
-    * entirely when nothing is flagged — the corpus is never scanned in the
-    * steady state. Rebuild triggers (stale stamp, saturation) and the
-    * crash-safety ordering (append BEFORE sidecar swap; a crash in the
-    * window leaves the stamp stale, forcing a rebuild — the bloom never
-    * under-covers the corpus) are identical to the exact gate's.
-    *
-    * TWO sidecar forms, chosen by a byte budget (`sidecarMaxBytes`,
-    * default [[KeyTableSidecar.DefaultMaxBytes]], 64 MB):
-    * the bloom is a plan literal — it lives whole in the driver and ships
-    * with every task binary, so past the budget (corpusRows × bands keys at
-    * a useful FPR) the gate uses the [[KeyTableSidecar]] instead: a
-    * hash-sharded persisted key table probed by BROADCASTING the batch's
-    * band keys into a shard-pruned equi-join — exact (strictly fewer
-    * candidates than a saturating bloom), with no key-set-sized state
-    * anywhere. The switch happens at first build, at a stale-stamp rebuild,
-    * or when a saturation rebuild's doubled capacity would blow the budget;
-    * a fresh table sidecar always wins over a fresh bloom. Admissions are
-    * identical through either form (the probe only selects WHICH rows pay
-    * the exact confirm join).
+  /** One near-dup ingestion micro-batch (the foreachBatch body of
+    * [[ingestNearDupStream]]): [[ingestBatch]] with the
+    * [[graft.operators.Dedup.NearDup]] rule — a row is rejected when an
+    * earlier-id batch row or a corpus row shares an LSH band bucket with it
+    * and their n-gram Jaccard meets `threshold`. The sidecar holds `bands`
+    * [[graft.operators.Dedup.bandProbeKeys]] per corpus row: a bloom sized
+    * for `expectedCorpusBandKeys`, or past `sidecarMaxBytes` the sharded
+    * band-key table. Admissions are identical through either form.
     */
   def ingestNearDupBatch(
       batch: DataFrame,
@@ -852,140 +772,10 @@ object Streaming {
       maxSmallFiles: Int = 8,
       minFileBytes: Long = 32L * 1024 * 1024,
       nShards: graft.Sizing.Count = graft.Sizing.Auto,
-      sidecarMaxBytes: Long = KeyTableSidecar.DefaultMaxBytes): IngestStats = {
-    val spark = batch.sparkSession
-    val target = new org.apache.hadoop.fs.Path(corpusDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val Dedup = graft.operators.Dedup
-    val probeKeys = Dedup.bandProbeKeys(col(textCol), n, numHashes, bands, seed)
-    def bloomOver(df: DataFrame, expected: Long): Array[Byte] =
-      df.select(explode(probeKeys).as("__k"))
-        .agg(graft.functions.SketchFunctions.bloomFilterAgg(col("__k"), expected))
-        .head().getAs[Array[Byte]](0)
-    def keysOver(df: DataFrame): DataFrame =
-      df.select(explode(probeKeys).as("__k"))
-    val gate = SidecarGate(spark, fs, target, corpusDir,
-      tableName = KeyTableSidecar.BandName, bloomName = BloomSidecar.BandName,
-      nShards = nShards, budget = sidecarMaxBytes, minExpectedKeys = expectedCorpusBandKeys,
-      keysOver = keysOver,
-      corpusKeyCount = _.count() * bands,
-      buildBloomBytes = (corpus, expected) => bloomOver(corpus, expected))
-
-    // gate the within-batch-deduped survivors against the corpus via the
-    // TABLE sidecar: batch keys broadcast into the shard-pruned key table,
-    // the (tiny) hit-id set selects candidates, only candidates pay the
-    // banded corpus confirm. `scans0`/`rebuilt` carry the cost of a
-    // sidecar rebuild that already happened in the caller.
-    def tableBatch(meta: KeyTableMeta, rebuilt: Boolean, scans0: Int): IngestStats = {
-      var scans = scans0
-      val kept = Dedup
-        .ngramJaccard(batch, idCol, textCol, n, threshold, numHashes, bands, seed)
-        .transform(Checkpointing.materialize)
-      // materialized: the semi-join split, the emptiness probe and the
-      // anti-join resolution all reuse the tiny hit-id set
-      val candIds = Dedup.tableCandidateIds(
-        kept.select(col(idCol), explode(probeKeys).as("__k")), idCol,
-        Dedup.KeyTable(KeyTableSidecar.load(spark, target), meta.nShards))
-        .transform(Checkpointing.materialize)
-      val candidates = kept.join(broadcast(candIds), Seq(idCol), "left_semi")
-      val survivors = (if (candidates.isEmpty) kept
-      else {
-        scans += 1 // the confirm join reads the corpus once
-        kept.join(
-          Dedup.nearDupRejects(ParquetRead(spark, corpusDir), candidates,
-            idCol, textCol, n, threshold, numHashes, bands, seed),
-          Seq(idCol), "left_anti")
-      }).transform(Checkpointing.materialize)
-      val cnt = survivors.count()
-      if (cnt > 0) {
-        survivors.write.mode("append").parquet(corpusDir)
-        // compact BEFORE stamping (stamp must record post-compaction names);
-        // compaction preserves content, so the key table is untouched
-        CorpusCompaction.compact(spark, fs, target, maxSmallFiles, minFileBytes)
-        gate.appendTableKeys(survivors, meta, newKeys = cnt * bands, maxSmallFiles)
-      }
-      IngestStats(cnt, scans, rebuiltBloom = rebuilt, saturatedRebuild = false)
-    }
-
-    // gate via the BLOOM sidecar (the small-corpus fast path); on
-    // saturation the capacity doubles — unless the doubled filter would
-    // outgrow the byte budget, in which case the gate SWITCHES to the table
-    // sidecar (the bloom cannot ship as a plan literal past that size)
-    def bloomBatch(sidecar: BloomSidecar, rebuilt: Boolean, scans0: Int): IngestStats = {
-      var scans = scans0
-      val flagged = Dedup
-        .ngramJaccard(batch, idCol, textCol, n, threshold, numHashes, bands, seed)
-        .withColumn("__cand", exists(probeKeys,
-          k => graft.functions.SketchFunctions.mightContain(lit(sidecar.bloom), k)))
-        .transform(Checkpointing.materialize)
-      val candidates = flagged.filter(col("__cand"))
-      val survivors = (if (candidates.isEmpty) flagged
-      else {
-        scans += 1 // the confirm join reads the corpus once
-        flagged.join(
-          Dedup.nearDupRejects(ParquetRead(spark, corpusDir), candidates,
-            idCol, textCol, n, threshold, numHashes, bands, seed),
-          Seq(idCol), "left_anti")
-      }).drop("__cand").transform(Checkpointing.materialize)
-      val cnt = survivors.count()
-      var saturated = false
-      if (cnt > 0) {
-        survivors.write.mode("append").parquet(corpusDir)
-        val mergedCount = sidecar.insertedCount + cnt * bands
-        if (mergedCount > sidecar.expectedItems && gate.overBudget(mergedCount)) {
-          // capacity outgrown AND the doubled bloom would blow the byte
-          // budget: switch to the table sidecar from the post-append corpus
-          saturated = true; scans += 1
-          CorpusCompaction.compact(spark, fs, target, maxSmallFiles, minFileBytes)
-          gate.rebuildTable(ParquetRead(spark, corpusDir), mergedCount)
-        } else {
-          val (capacity, bloomBytes) =
-            if (mergedCount > sidecar.expectedItems) {
-              // capacity outgrown: rebuild at double size from the corpus
-              // (which now includes this batch) -- amortized O(log corpus)
-              saturated = true; scans += 1
-              val corpus = ParquetRead(spark, corpusDir)
-              val cap = math.max(2 * mergedCount, expectedCorpusBandKeys)
-              (cap, bloomOver(corpus, cap))
-            } else
-              (sidecar.expectedItems, BloomSidecar.merge(sidecar.bloom,
-                bloomOver(survivors, sidecar.expectedItems)))
-          CorpusCompaction.compact(spark, fs, target, maxSmallFiles, minFileBytes)
-          BloomSidecar.write(fs, target,
-            BloomSidecar(capacity, mergedCount,
-              BloomSidecar.filesStamp(fs, target), bloomBytes),
-            BloomSidecar.BandName)
-        }
-      }
-      IngestStats(cnt, scans, rebuiltBloom = rebuilt, saturatedRebuild = saturated)
-    }
-
-    if (!fs.exists(target)) {
-      val survivors = Dedup
-        .ngramJaccard(batch, idCol, textCol, n, threshold, numHashes, bands, seed)
-        .transform(Checkpointing.materialize)
-      val cnt = survivors.count()
-      if (cnt > 0) {
-        survivors.write.mode("append").parquet(corpusDir)
-        val keyCnt = cnt * bands
-        if (gate.overBudget(keyCnt)) {
-          val mod = gate.newModulus(keyCnt)
-          KeyTableSidecar.appendKeys(gate.keysOver(survivors), target, mod)
-          KeyTableSidecar.writeMeta(fs, target,
-            KeyTableMeta(mod, keyCnt, BloomSidecar.filesStamp(fs, target)))
-        } else {
-          val expected = math.max(expectedCorpusBandKeys, 2 * keyCnt)
-          BloomSidecar.write(fs, target,
-            BloomSidecar(expected, keyCnt,
-              BloomSidecar.filesStamp(fs, target), bloomOver(survivors, expected)),
-            BloomSidecar.BandName)
-        }
-      }
-      IngestStats(cnt, corpusScans = 0, rebuiltBloom = false, saturatedRebuild = false)
-    } else {
-      gate.dispatch(tableBatch, bloomBatch)
-    }
-  }
+      sidecarMaxBytes: Long = KeyTableSidecar.DefaultMaxBytes): IngestStats =
+    SidecarGate(batch, corpusDir, idCol,
+      graft.operators.Dedup.NearDup(textCol, n, threshold, numHashes, bands, seed),
+      expectedCorpusBandKeys, maxSmallFiles, minFileBytes, nShards, sidecarMaxBytes).ingest()
 
   /** Stream-static enrichment join: each micro-batch joins against the
     * static dimension, broadcast so the stream side never shuffles — the
