@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.ParquetRead
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, prints one JSON line with per-query wall seconds.
@@ -9,11 +10,16 @@ import graft.sources.ParquetRead
   * one-time whole-stage-codegen (janino) compilation and JIT warmup that a
   * long-lived cluster amortizes across thousands of runs; then the whole
   * suite is measured TWICE, round-robin, and each query reports the min of
-  * its two passes. Round-robin matters: the rig shows multi-minute slow
-  * windows, and back-to-back samples of one query share the window while
-  * suite-separated samples give each query one clean shot — per-query min
-  * recovers the honest floor. Scans are warmed once up front (file listing
-  * + parquet footer cache).
+  * its two passes. The warm pass pays all the compilation only because the
+  * session's generated-class cache holds every class of the suite
+  * ([[GraftSession.codegenCache]]); at Spark's 100-entry default each pass
+  * recompiled most of them. The detail JSON's `codegen_compiles` records
+  * the Janino compiles of the warm pass and of each measured pass, so a
+  * measured pass that compiles shows in the artifact. Round-robin matters:
+  * the rig shows multi-minute slow windows, and back-to-back samples of one
+  * query share the window while suite-separated samples give each query one
+  * clean shot — per-query min recovers the honest floor. Scans are warmed
+  * once up front (file listing + parquet footer cache).
   *
   * Rig calibration: a fixed CPU-bound probe (no IO, no shuffle) runs at
   * start, middle, and end; its three timings land in the JSON
@@ -66,17 +72,23 @@ object Bench {
     val calStart = calibrate()
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    // Janino compiles in this JVM so far, and those `body` adds
+    def compiling[A](body: => A): (A, Long) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val a = body
+      (a, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    }
     // warm pass: codegen compile + JIT for every plan
-    qs.foreach { case (name, fn) => once(name, fn) }
+    val (_, warmCompiles) = compiling(qs.foreach { case (name, fn) => once(name, fn) })
     // two full INTERLEAVED measured passes, round-robin across the suite,
     // min per query across passes. Back-to-back samples of the same query
     // share any multi-minute rig-slow window (r10 recorded the whole suite
     // ~16% slow that way); separating the samples by a full suite pass
     // makes a slow window cost each query at most ONE of its two samples,
     // so the per-query min recovers the honest floor.
-    val passA = qs.map { case (name, fn) => name -> once(name, fn) }
+    val (passA, compilesA) = compiling(qs.map { case (name, fn) => name -> once(name, fn) })
     val calMid = calibrate()
-    val passB = qs.map { case (name, fn) => name -> once(name, fn) }
+    val (passB, compilesB) = compiling(qs.map { case (name, fn) => name -> once(name, fn) })
     val firstPass = passA.zip(passB).map { case ((name, a), (_, b)) =>
       name -> combine(a, b)
     }
@@ -101,6 +113,7 @@ object Bench {
     val nFailed = results.size - ok.size
     val total = ok.map(_._2).sum
     val cal = s"""{"start":$calStart,"mid":$calMid,"end":$calEnd}"""
+    val compiles = s"""{"warm":$warmCompiles,"a":$compilesA,"b":$compilesB}"""
     // Full precision, every query → BENCH_DETAIL.json (committed artifact).
     // The harness keeps only the last ~2000 chars of stdout, which a
     // ~95-query map overflows, so the stdout line carries the suite total
@@ -110,7 +123,7 @@ object Bench {
       .mkString("{", ",", "}")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(detailFile),
-      s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${ok.size},"n_failed":$nFailed,"calibration":$cal,"queries":$detail,"sf":"$sfDir"}""".getBytes("UTF-8"))
+      s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${ok.size},"n_failed":$nFailed,"calibration":$cal,"codegen_compiles":$compiles,"queries":$detail,"sf":"$sfDir"}""".getBytes("UTF-8"))
     def fmt(v: Double): String =
       if (v < 0) "-1"
       else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))

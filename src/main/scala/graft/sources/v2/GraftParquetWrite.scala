@@ -193,7 +193,11 @@ object GraftParquetWrite {
     // maintenance contract's to exclude — see GraftTableOptimize)
     adds.foreach { case (n, _) =>
       val from = new Path(staging, n)
-      if (fs.exists(from)) fs.rename(from, new Path(table, n))
+      val to = new Path(table, n)
+      // the other replayer can win this rename between the check and the
+      // call: the file is then at its target, and the step is done
+      try { if (fs.exists(from)) fs.rename(from, to) }
+      catch { case _: java.io.FileNotFoundException if fs.exists(to) => () }
     }
     // membership record after the physical adds: a log-resolving reader in
     // either window sees a complete table (old membership before the record

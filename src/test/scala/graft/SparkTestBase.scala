@@ -26,8 +26,10 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // and the engine's file:// FileSystem, for the same reason
+      // and the engine's file:// FileSystem and generated-class cache size,
+      // for the same reason
       .config(GraftSession.localFs._1, GraftSession.localFs._2)
+      .config(GraftSession.codegenCache._1, GraftSession.codegenCache._2)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

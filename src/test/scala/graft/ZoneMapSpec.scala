@@ -922,6 +922,39 @@ class ZoneMapSpec extends SparkTestBase {
     assert(fs.exists(live), "reader-side healing must never sweep an unpublished stage")
   }
 
+  test("a replay that loses a staged file's rename to a concurrent replayer still completes the commit") {
+    import graft.sources.v2.GraftParquetWrite
+    import org.apache.hadoop.fs.FilterFileSystem
+    val dir = freshTable("graft-zm-renamerace")
+    val table = new Path(dir)
+    Seq((1L, "a"), (2L, "b")).toDF("id", "name")
+      .coalesce(1).write.format("graft-parquet").mode("append").save(dir)
+    val fs = fsOf(dir)
+    val staging = GraftParquetWrite.stagingDir(table, "raceq")
+    fs.mkdirs(staging)
+    Seq((3L, "c")).toDF("id", "name").coalesce(1).write.parquet(staging.toString + "/tmp")
+    val part = fs.listStatus(new Path(staging, "tmp"))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
+    fs.rename(part, new Path(staging, "part-raceq-0-0.parquet"))
+    fs.delete(new Path(staging, "tmp"), true)
+    val man = fs.create(new Path(staging, "manifest"), true)
+    try man.write("part-raceq-0-0.parquet".getBytes("UTF-8")) finally man.close()
+    // the writer's roll-forward and a reader's heal replay the same commit:
+    // the peer renames the staged file after this replay saw it exist
+    var raced = false
+    val racing = new FilterFileSystem(fs) {
+      override def rename(src: Path, dst: Path): Boolean = {
+        if (!raced && src.getName == "part-raceq-0-0.parquet") { raced = true; fs.rename(src, dst) }
+        super.rename(src, dst)
+      }
+    }
+    GraftParquetWrite.recover(racing, table)
+    assert(raced, "the race must have been injected")
+    assert(!fs.exists(staging), "the replay must complete the commit")
+    assert(spark.read.format("graft-parquet").load(dir)
+      .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
   test("recovery finds staging under table paths containing glob metacharacters") {
     import graft.sources.v2.GraftParquetWrite
     // a literal '[1]' and '*' in directory names must stay literal: the
