@@ -15,6 +15,13 @@ import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileSystem, 
   * [[graft.GraftDataError]] unless its target exists afterwards (another
   * attempt or a concurrent replay published it), in which case the temp
   * is deleted.
+  *
+  * Multi-file commits (the v2 commit, the IVF refresh and purge, the
+  * key-table shard purge) stage their files, make them durable with a
+  * marker or manifest, and then roll the moves forward with [[promote]].
+  * Its rule refuses a move whose source and target both exist: a Hadoop
+  * rename of a directory onto an existing directory does not fail, it
+  * nests the source inside the target.
   */
 object FsPublish {
 
@@ -48,6 +55,26 @@ object FsPublish {
       fs.delete(from, false)
     }
   }
+
+  /** Roll staged moves forward, idempotently, so a replay after any
+    * failure finishes the set. Per `(from, to)`: a target present with
+    * its source gone is done (an earlier attempt or a concurrent replay
+    * moved it); an absent target moves under [[move]]'s rule; both present
+    * or both gone throws and deletes nothing. One `exists` and one rename
+    * per move when nothing has moved yet.
+    */
+  def promote(fs: FileSystem, moves: Seq[(Path, Path)]): Unit =
+    moves.foreach { case (from, to) =>
+      if (!fs.exists(to))
+        try move(fs, from, to)
+        catch {
+          case e: FileNotFoundException if !fs.exists(from) =>
+            throw new graft.GraftDataError(s"promote $from -> $to: neither exists", e)
+        }
+      else if (fs.exists(from))
+        throw new graft.GraftDataError(
+          s"promote $from -> $to: the target already exists; renaming would nest or clobber it")
+    }
 
   /** Decode `p` with one open; None when it does not exist. */
   def read[A](fs: FileSystem, p: Path)(decode: FSDataInputStream => A): Option[A] = {

@@ -190,15 +190,9 @@ object GraftParquetWrite {
     }
     // adds before removals: a replayed swap must never pass through a state
     // with the rows missing (duplicates inside the crash window are the
-    // maintenance contract's to exclude — see GraftTableOptimize)
-    adds.foreach { case (n, _) =>
-      val from = new Path(staging, n)
-      val to = new Path(table, n)
-      // the other replayer can win this rename between the check and the
-      // call: the file is then at its target, and the step is done
-      try { if (fs.exists(from)) fs.rename(from, to) }
-      catch { case _: java.io.FileNotFoundException if fs.exists(to) => () }
-    }
+    // maintenance contract's to exclude — see GraftTableOptimize); a file
+    // the other replayer already moved counts as moved
+    FsPublish.promote(fs, adds.map { case (n, _) => new Path(staging, n) -> new Path(table, n) })
     // membership record after the physical adds: a log-resolving reader in
     // either window sees a complete table (old membership before the record
     // lands, new membership after) — never a reference to a missing file.

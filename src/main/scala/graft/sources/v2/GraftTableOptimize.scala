@@ -222,8 +222,7 @@ object GraftTableOptimize {
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .zipWithIndex.map { case (st, i) =>
         val finalName = s"part-$id-$i.parquet"
-        require(fs.rename(st.getPath, new Path(staging, finalName)),
-          s"stage move failed for ${st.getPath}")
+        FsPublish.move(fs, st.getPath, new Path(staging, finalName))
         (finalName, packedStats.get(st.getPath.getName))
       }.toSeq
     fs.delete(packedDir, true) // drop the mini-table scaffolding pre-commit

@@ -6,7 +6,6 @@ import graft.sources.{FsPublish, ParquetRead}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Streaming ANN-index maintenance: continuous embedding ingestion into the
   * partitioned IVF layout ([[Similarity.writeIvfIndex]] — one directory per
@@ -172,7 +171,7 @@ object IvfIngest {
     val spark = batch.sparkSession
     val dir = new Path(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRefresh(fs, dir) // finish an interrupted refresh before pairing codebook+lists
+    recover(fs, dir) // finish an interrupted refresh or purge before pairing codebook+lists
 
     // symmetric with ingestPqBatch's refusal of a plain-IVF index: a
     // `_pq_codebook` sidecar means the lists hold 12-byte pq_code rows —
@@ -252,7 +251,7 @@ object IvfIngest {
     val spark = batch.sparkSession
     val dir = new Path(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRefresh(fs, dir)
+    recover(fs, dir)
 
     // one source pass per micro-batch (see [[ingestBatch]]'s persist note)
     val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -295,28 +294,6 @@ object IvfIngest {
     } finally cached.unpersist(false)
   }
 
-  /** Continuous IVF-PQ form: every micro-batch of the embedding stream is
-    * PQ-encoded and landed in the partitioned code index.
-    */
-  def ingestPqStream(
-      embeddings: DataFrame,
-      indexDir: String,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      nlist: Int = 16,
-      iters: Int = 2,
-      m: Int = 8,
-      k: Int = 16,
-      minBootstrapRows: Long = -1L): StreamingQuery =
-    embeddings.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestPqBatch(batch, indexDir, idCol, vecCol, dim, nlist, iters, m, k,
-          minBootstrapRows): Unit
-      }
-      .start()
-
   /** Probe the ingested IVF-PQ index with the persisted models: partition
     * pruning to the nprobe nearest lists, ADC over the 8-byte codes inside
     * them — the probe reads nprobe/nlist of the files and never a float.
@@ -330,7 +307,7 @@ object IvfIngest {
       nprobe: Int): DataFrame = {
     val dir = new Path(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRefresh(fs, dir)
+    recover(fs, dir)
     val ivf = readCodebook(fs, dir).getOrElse(
       throw new graft.GraftDataError(s"no codebook sidecar under $indexDir"))
     val pq = readPqCodebook(fs, dir).getOrElse(
@@ -341,11 +318,9 @@ object IvfIngest {
 
   /** Retrain BOTH quantizers against the raw vectors (the index stores
     * lossy 8-byte codes, so codebook rot is fixed from the corpus store,
-    * not the index) and rewrite the code index under the new models — the
-    * same staged-swap marker discipline as [[refresh]]: everything builds
-    * under `_refresh`, the COMPLETE marker makes it the copy of record,
-    * and [[recoverRefresh]] rolls a crashed swap forward from any entry
-    * point. Both codebook sidecars travel with their lists.
+    * not the index) and rewrite the code index under the new models,
+    * through [[refresh]]'s staged swap ([[completeSwap]]). Both codebook
+    * sidecars travel with their lists.
     */
   def refreshPq(
       spark: org.apache.spark.sql.SparkSession,
@@ -360,7 +335,7 @@ object IvfIngest {
       k: Int = 16): Unit = {
     val dir = new Path(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRefresh(fs, dir)
+    recover(fs, dir)
     // format guard, symmetric with ingestBatch/ingestPqBatch: an EXISTING
     // index without the _pq_codebook sidecar is a plain-IVF index whose
     // lists hold float-vector rows — "refreshing" it would silently
@@ -372,7 +347,7 @@ object IvfIngest {
         s"$indexDir is a plain-IVF index (no _pq_codebook sidecar) — " +
           "refreshPq would rewrite its float-vector lists as pq_codes; " +
           "rebuild deliberately via ivfPqIndex + a new directory instead")
-    val staging = stagingPath(dir)
+    val staging = RefreshSwap.staging(dir)
     val (index, ivf, pq) = Similarity.ivfPqIndex(rawVectors, idCol, vecCol, dim,
       nlist, iters, m, k)
     index.write.mode("overwrite").partitionBy("centroid_id")
@@ -381,8 +356,7 @@ object IvfIngest {
     // "trained over everything the refresh saw"
     writeCodebook(fs, staging, ivf, rowsAtTraining = rawVectors.count())
     writePqCodebook(fs, staging, pq)
-    fs.create(new Path(staging, CompleteMarker), true).close()
-    completeRefresh(fs, dir)
+    commitSwap(fs, dir, RefreshSwap, Nil)
   }
 
   /** Growth-ratio staleness report for an ingested index: how far the live
@@ -407,7 +381,7 @@ object IvfIngest {
       growthRatio: Double = 4.0): Option[IndexStaleness] = {
     val dir = new Path(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRefresh(fs, dir)
+    recover(fs, dir)
     readCodebookInfo(fs, dir).map { info =>
       val now =
         if (assignedDataExists(fs, dir)) ParquetRead(spark, indexDir).count() else 0L
@@ -440,24 +414,6 @@ object IvfIngest {
     report
   }
 
-  /** Continuous form: every micro-batch of the embedding stream lands in
-    * the partitioned index under the persisted codebook.
-    */
-  def ingestStream(
-      embeddings: DataFrame,
-      indexDir: String,
-      idCol: String,
-      vecCol: String,
-      nlist: Int = 16,
-      minBootstrapRows: Long = -1L): StreamingQuery =
-    embeddings.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(batch, indexDir, idCol, vecCol, nlist,
-          minBootstrapRows = minBootstrapRows): Unit
-      }
-      .start()
-
   /** Probe the ingested index with the persisted codebook — partition
     * pruning to the nprobe nearest lists, then exact cosine inside them.
     */
@@ -471,7 +427,7 @@ object IvfIngest {
       nprobe: Int): DataFrame = {
     val dir = new Path(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRefresh(fs, dir) // finish an interrupted refresh before pairing codebook+lists
+    recover(fs, dir) // finish an interrupted refresh or purge before pairing codebook+lists
     val model = readCodebook(fs, dir).getOrElse(
       throw new graft.GraftDataError(s"no codebook sidecar under $indexDir"))
     Similarity.ivfTopKFromIndex(spark, indexDir, model, idCol, vecCol, query, k, nprobe)
@@ -489,19 +445,10 @@ object IvfIngest {
   /** Retrain the codebook over the ACCUMULATED index and rewrite the layout
     * under the new assignment — an explicit maintenance action (one full
     * index pass), not a per-batch cost. Single-maintainer discipline: one
-    * refresh at a time, like [[CorpusCompaction]].
-    *
-    * Crash safety is the [[graft.streaming.Streaming]] staged-swap marker
-    * discipline: the ENTIRE new state — reassigned lists under
-    * `_refresh/data` AND the retrained `_refresh/_codebook` — builds inside
-    * the staging directory, then a `_REFRESH_COMPLETE` marker makes it the
-    * durable copy of record, and only then does [[completeRefresh]] roll the
-    * swap forward in marker-tracked phases. A crash at ANY point leaves a
-    * recoverable state: before the marker, the old index is untouched and
-    * the partial staging is discarded; after it, the next entry point
-    * ([[refresh]], [[ingestBatch]] or [[probe]] via [[recoverRefresh]])
-    * finishes the swap — the new codebook can never be lost, and stale
-    * codebook + new lists can never pair up silently.
+    * refresh at a time, like [[CorpusCompaction]]. The reassigned lists and
+    * the retrained codebook build under `_refresh` and swap in through
+    * [[completeSwap]], so the new codebook can never be lost and a stale
+    * codebook never pairs with new lists.
     */
   def refresh(
       spark: org.apache.spark.sql.SparkSession,
@@ -512,8 +459,8 @@ object IvfIngest {
       iters: Int = 2): Unit = {
     val dir = new Path(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRefresh(fs, dir) // an interrupted predecessor finishes (or clears) first
-    val staging = stagingPath(dir)
+    recover(fs, dir) // an interrupted predecessor finishes (or clears) first
+    val staging = RefreshSwap.staging(dir)
     val current = ParquetRead(spark, indexDir).select(col(idCol), col(vecCol))
     val init = current.orderBy(col(idCol)).limit(nlist)
       .select(col(vecCol)).collect().map(_.getSeq[Float](0).toArray)
@@ -529,76 +476,96 @@ object IvfIngest {
     // the NEW quantizer travels WITH its lists; census = the full index it
     // retrained over, so the staleness clock restarts
     writeCodebook(fs, staging, model, rowsAtTraining = current.count())
-    fs.create(new Path(staging, CompleteMarker), true).close()
-    completeRefresh(fs, dir)
+    commitSwap(fs, dir, RefreshSwap, Nil)
   }
 
-  private val CompleteMarker = "_REFRESH_COMPLETE"
-  private val ClearedMarker = "_REFRESH_CLEARED"
-
-  private def stagingPath(dir: Path) = new Path(dir, "_refresh")
-
-  /** Recover an interrupted [[refresh]]: a staging directory carrying a
-    * completion marker IS the index (the old layout may already be partly
-    * cleared) — roll the swap forward; one without the marker is a dead
-    * partial build over a still-intact index — discard it. Idempotent and
-    * cheap (one existence probe) when no staging exists.
+  /** One staged swap of inverted lists, under `<index>/_<name>`. `clear`
+    * names what its CLEAR phase deletes, given the COMPLETE marker's lines.
     */
-  def recoverRefresh(fs: FileSystem, dir: Path): Unit = {
-    val staging = stagingPath(dir)
-    if (fs.exists(staging)) {
-      if (fs.exists(new Path(staging, CompleteMarker)) ||
-        fs.exists(new Path(staging, ClearedMarker))) completeRefresh(fs, dir)
-      else fs.delete(staging, true)
-    }
-    // every entry point that finishes a crashed refresh also finishes a
-    // crashed purge — single-maintainer discipline means at most one of
-    // the two stagings can exist
-    recoverPurge(fs, dir)
+  private final class Swap(name: String, val clear: (FileSystem, Path, Seq[String]) => Seq[Path]) {
+    def staging(dir: Path): Path = new Path(dir, s"_$name")
+    val complete = s"_${name.toUpperCase}_COMPLETE"
+    val cleared = s"_${name.toUpperCase}_CLEARED"
   }
 
-  /** Marker-tracked swap phases, each idempotent so a crash inside any of
-    * them re-runs safely:
-    *   1. CLEAR — delete the old list dirs/files. Runs only while the
-    *      COMPLETE marker is in place (no new dir has moved up yet, so
-    *      deleting every `centroid_id=` dir is safe); finishes by RENAMING
-    *      the marker to CLEARED — the atomic phase transition that stops a
-    *      re-entry from deleting already-promoted new lists.
-    *   2. PROMOTE — move `_refresh/data`'s list dirs up; re-entry skips the
-    *      ones already moved (they are no longer in staging).
-    *   3. CODEBOOK — swap `_codebook` last (old lists + old codebook stay
-    *      consistent for readers until the lists finish promoting). The
-    *      staged copy's presence decides idempotence: still there → the top
-    *      copy may be stale, redo the swap; gone → already swapped.
-    *   4. Drop staging (markers leave with it) — the refresh is finished.
+  /** A refresh replaces every list, and any loose data file beside them. */
+  private val RefreshSwap = new Swap("refresh", (fs, dir, _) =>
+    fs.listStatus(dir).toSeq.filter { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory) name.startsWith("centroid_id=")
+      else !name.startsWith("_") && !name.startsWith(".")
+    }.map(_.getPath))
+
+  /** A purge replaces the lists its marker's census names. */
+  private val PurgeSwap = new Swap("purge", (_, dir, census) =>
+    census.map(k => new Path(dir, s"centroid_id=${k.toLong}")))
+
+  /** Finish or discard an interrupted [[refresh]], [[refreshPq]] or
+    * [[purge]]; every entry point runs it first. A staging directory that
+    * holds its COMPLETE or CLEARED marker is the copy of record (the old
+    * lists may already be partly cleared) and rolls forward; one without
+    * is a dead partial build over an intact index and is discarded. One
+    * existence probe per swap kind when nothing is staged; single-maintainer
+    * discipline means at most one staging exists.
     */
-  private def completeRefresh(fs: FileSystem, dir: Path): Unit = {
-    val staging = stagingPath(dir)
-    val clearedM = new Path(staging, ClearedMarker)
-    if (!fs.exists(clearedM)) {
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory && name.startsWith("centroid_id=")) fs.delete(st.getPath, true)
-        else if (st.isFile && !name.startsWith("_") && !name.startsWith("."))
-          fs.delete(st.getPath, false)
+  def recover(fs: FileSystem, dir: Path): Unit =
+    Seq(RefreshSwap, PurgeSwap).foreach { swap =>
+      val staging = swap.staging(dir)
+      if (fs.exists(staging)) {
+        if (fs.exists(new Path(staging, swap.complete)) || fs.exists(new Path(staging, swap.cleared)))
+          completeSwap(fs, dir, swap)
+        else fs.delete(staging, true)
       }
-      fs.rename(new Path(staging, CompleteMarker), clearedM)
+    }
+
+  /** Make a fully staged swap the copy of record, then finish it. The
+    * COMPLETE marker, carrying `census`, is published whole through a
+    * temp: a crash mid-write leaves only the temp, and [[recover]]
+    * discards the staging over the untouched index.
+    */
+  private def commitSwap(fs: FileSystem, dir: Path, swap: Swap, census: Seq[Long]): Unit = {
+    val staging = swap.staging(dir)
+    FsPublish.publish(fs, new Path(staging, swap.complete + ".tmp"),
+      new Path(staging, swap.complete))(_.write(census.mkString("\n").getBytes("UTF-8")))
+    completeSwap(fs, dir, swap)
+  }
+
+  /** The staged swap behind [[refresh]], [[refreshPq]] and [[purge]]. The
+    * whole new state (lists under `data`, plus any retrained codebook)
+    * sits in the staging dir when the COMPLETE marker lands. Then these
+    * phases run, each idempotent, so a failure or crash inside any of them
+    * re-runs from the next entry point:
+    *   1. CLEAR deletes `swap.clear`: every list for a refresh, the
+    *      marker's census for a purge. A purged list with no survivors has
+    *      no staged copy, so the census is what deletes it. CLEAR runs only
+    *      while COMPLETE is in place; it ends by moving COMPLETE to
+    *      CLEARED, so a re-entry never deletes promoted lists.
+    *   2. PROMOTE moves the staged lists up, then each staged codebook
+    *      over its top copy, through [[FsPublish.promote]]. A staged
+    *      codebook still present means its top copy is stale, so that copy
+    *      goes first.
+    *   3. The staging dir, markers included, is dropped only after every
+    *      move has landed; a failed move throws and keeps it.
+    */
+  private def completeSwap(fs: FileSystem, dir: Path, swap: Swap): Unit = {
+    val staging = swap.staging(dir)
+    val completeM = new Path(staging, swap.complete)
+    val clearedM = new Path(staging, swap.cleared)
+    if (!fs.exists(clearedM)) {
+      val census = FsPublish.read(fs, completeM)(FsPublish.linesOf).getOrElse(
+        throw new graft.GraftDataError(s"$completeM vanished before its swap finished"))
+      swap.clear(fs, dir, census).foreach(fs.delete(_, true))
+      FsPublish.move(fs, completeM, clearedM)
     }
     val data = new Path(staging, "data")
-    if (fs.exists(data)) fs.listStatus(data).foreach { st =>
-      val name = st.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith("."))
-        fs.rename(st.getPath, new Path(dir, name))
-    }
-    // both codebook sidecars swap by the same staged-copy-presence rule
-    Seq(codebookPath _, pqCodebookPath _).foreach { pathOf =>
-      val staged = pathOf(staging)
-      if (fs.exists(staged)) {
-        val top = pathOf(dir)
-        if (fs.exists(top)) fs.delete(top, false)
-        fs.rename(staged, top)
-      }
-    }
+    val lists = if (!fs.exists(data)) Nil else fs.listStatus(data).toSeq
+      .map(_.getPath.getName).filterNot(n => n.startsWith("_") || n.startsWith("."))
+      .map(n => new Path(data, n) -> new Path(dir, n))
+    val codebooks = Seq(codebookPath _, pqCodebookPath _)
+      .map(pathOf => pathOf(staging) -> pathOf(dir))
+      .filter { case (staged, _) => fs.exists(staged) }
+    codebooks.foreach { case (_, top) => fs.delete(top, false) }
+    FsPublish.promote(fs, lists ++ codebooks)
     fs.delete(staging, true)
   }
 
@@ -624,16 +591,11 @@ object IvfIngest {
     *  2. the REWRITE scans only `centroid_id IN (affected)` — partition
     *     pruning bounds it to the lists actually holding tombstoned rows
     *     (nprobe-style: a purge of k ids touches ≤ k of nlist lists);
-    *  3. the swap is metadata: survivors build under `_purge/data`, a
-    *     marker carrying the affected-list census makes them durable, and
-    *     the promote replaces just those partition directories. A list
-    *     whose every row was tombstoned has NO staged dir — the marker's
-    *     census is what tells recovery to delete it anyway.
+    *  3. the swap is metadata: survivors build under `_purge/data` and
+    *     replace just the affected partition directories.
     *
-    * Crash safety follows [[refresh]]'s marker discipline exactly (crash
-    * before the marker: old index intact, staging discarded; after: any
-    * entry point rolls the swap forward via [[recoverPurge]]). Re-running
-    * a finished purge is a no-op (discovery finds no affected lists).
+    * Crash safety is [[completeSwap]]'s. Re-running a finished purge is a
+    * no-op (discovery finds no affected lists).
     */
   def purge(
       spark: org.apache.spark.sql.SparkSession,
@@ -641,8 +603,18 @@ object IvfIngest {
       tombstones: org.apache.spark.sql.DataFrame,
       idCol: String): PurgeReport = {
     val dir = new Path(indexDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRefresh(fs, dir) // finishes a crashed refresh AND a crashed purge
+    purge(spark, dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir, tombstones, idCol)
+  }
+
+  /** [[purge]] with its file-system calls made through `fs`. */
+  private[graft] def purge(
+      spark: org.apache.spark.sql.SparkSession,
+      fs: FileSystem,
+      dir: Path,
+      tombstones: org.apache.spark.sql.DataFrame,
+      idCol: String): PurgeReport = {
+    val indexDir = dir.toString
+    recover(fs, dir) // finishes a crashed refresh AND a crashed purge
     val ids = tombstones.select(col(idCol)).na.drop().distinct()
     val index = ParquetRead(spark, indexDir)
     // partition discovery may infer centroid_id as INT — keep the native
@@ -675,8 +647,7 @@ object IvfIngest {
     val scoped = index.filter(col("centroid_id").isin(affectedRaw: _*))
     val survivors = scoped.join(ids, Seq(idCol), "left_anti")
       .select(index.columns.map(col).toIndexedSeq: _*)
-    val staging = purgeStagingPath(dir)
-    fs.delete(staging, true) // a dead partial from a pre-marker crash
+    val staging = PurgeSwap.staging(dir)
     survivors.write.mode("overwrite").partitionBy("centroid_id")
       .parquet(new Path(staging, "data").toString)
     val emptied = {
@@ -695,65 +666,7 @@ object IvfIngest {
         .parquet(new Path(new Path(staging, "data"),
           s"centroid_id=${affected.head}").toString)
     }
-    val out = fs.create(new Path(staging, PurgeCompleteMarker), true)
-    out.write(affected.mkString("\n").getBytes("UTF-8"))
-    out.close()
-    completePurge(fs, dir)
+    commitSwap(fs, dir, PurgeSwap, affected)
     PurgeReport(affected, emptied, rowsRemoved)
-  }
-
-  private val PurgeCompleteMarker = "_PURGE_COMPLETE"
-  private val PurgeClearedMarker = "_PURGE_CLEARED"
-
-  private def purgeStagingPath(dir: Path) = new Path(dir, "_purge")
-
-  /** Recover an interrupted [[purge]]: marker present → the staged
-    * survivors are the copy of record, roll the partition swap forward;
-    * no marker → dead partial build over a still-intact index, discard.
-    */
-  def recoverPurge(fs: FileSystem, dir: Path): Unit = {
-    val staging = purgeStagingPath(dir)
-    if (!fs.exists(staging)) return
-    if (fs.exists(new Path(staging, PurgeCompleteMarker)) ||
-      fs.exists(new Path(staging, PurgeClearedMarker))) completePurge(fs, dir)
-    else fs.delete(staging, true)
-  }
-
-  /** [[completeRefresh]]'s phase discipline scoped to the marker's census:
-    * CLEAR deletes exactly the listed partition dirs (marker renames to
-    * CLEARED — the transition that stops a re-entry from deleting
-    * already-promoted lists), PROMOTE moves the staged dirs up (an emptied
-    * list has none — its delete in CLEAR was the whole operation), then
-    * staging drops.
-    */
-  private def completePurge(fs: FileSystem, dir: Path): Unit = {
-    val staging = purgeStagingPath(dir)
-    val completeM = new Path(staging, PurgeCompleteMarker)
-    val clearedM = new Path(staging, PurgeClearedMarker)
-    if (!fs.exists(clearedM)) {
-      val census = {
-        val in = fs.open(completeM)
-        val bytes = try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-          buf.toByteArray
-        } finally in.close()
-        new String(bytes, "UTF-8").split("\n").filter(_.nonEmpty).map(_.toLong)
-      }
-      census.foreach { k =>
-        fs.delete(new Path(dir, s"centroid_id=$k"), true)
-      }
-      if (!fs.rename(completeM, clearedM))
-        throw new graft.GraftDataError(s"purge recovery: marker rename failed under $staging")
-    }
-    val data = new Path(staging, "data")
-    if (fs.exists(data)) fs.listStatus(data).foreach { st =>
-      val name = st.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith("."))
-        if (!fs.rename(st.getPath, new Path(dir, name)))
-          throw new graft.GraftDataError(
-            s"purge recovery: promote of $name failed under $dir")
-    }
-    fs.delete(staging, true)
   }
 }

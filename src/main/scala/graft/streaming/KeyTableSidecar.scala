@@ -186,10 +186,12 @@ object KeyTableSidecar {
     *
     * Crash safety: the gate's meta is INVALIDATED (deleted) here, before
     * any shard directory is touched — so a crash at any point (including
-    * inside a shard's delete-then-promote window, which can momentarily
-    * drop that shard's surviving keys) leaves NO trusted stamp, and the
-    * next reader falls back to a one-scan rebuild rather than trusting a
-    * table that may under-cover. Callers that purge the corpus too
+    * between CLEARing the affected shards and promoting their staged
+    * survivors, which momentarily drops those shards' surviving keys)
+    * leaves NO trusted stamp, and the next reader falls back to a one-scan
+    * rebuild rather than trusting a table that may under-cover. A rerun
+    * first rolls a fully staged predecessor forward, then purges what is
+    * still left. Callers that purge the corpus too
     * ([[graft.streaming.Streaming.purgeCorpus]]) write a fresh meta AFTER
     * this returns, restoring the fast path; a standalone purgeKeys leaves
     * the gate in rebuild mode, which is correct, just slower, until the
@@ -205,6 +207,10 @@ object KeyTableSidecar {
       keys: DataFrame, nShards: Int, name: String = BandName): Long = {
     val d = dir(corpusDir, name)
     if (!fs.exists(d)) return 0L
+    val staging = new Path(d, "_purge_stage")
+    val staged = new Path(staging, "data")
+    // a predecessor that failed after staging its survivors rolls forward
+    if (fs.exists(new Path(staged, "_SUCCESS"))) swapShards(fs, d, staging, shardDirs(fs, staged))
     val wanted = keys.select(col("__k")).na.drop().distinct()
     val affected = wanted
       .select(pmod(col("__k"), lit(nShards.toLong)).cast("int").as("__shard"))
@@ -220,23 +226,28 @@ object KeyTableSidecar {
     // missing stamp turns every crash window below into a rebuild instead
     val mp = metaPath(corpusDir, name)
     if (fs.exists(mp)) fs.delete(mp, false)
-    val staging = new Path(d, "_purge_stage")
     fs.delete(staging, true)
     // same spread policy as a rebuild: a big shard rewrites across
     // several tasks, not one monolithic coalesce
     clusterByShard(scoped.join(wanted, Seq("__k"), "left_anti")
       .select(col("__shard"), col("__k")), subSplits = 8)
-      .write.partitionBy("__shard").parquet(new Path(staging, "data").toString)
-    present.foreach { s =>
-      val top = new Path(d, s"__shard=$s")
-      fs.delete(top, true)
-      val staged = new Path(new Path(staging, "data"), s"__shard=$s")
-      if (fs.exists(staged) && !fs.rename(staged, top))
-        throw new graft.GraftDataError(
-          s"key purge: promote of __shard=$s failed under $d")
-    }
-    fs.delete(staging, true)
+      .write.partitionBy("__shard").parquet(staged.toString)
+    // an emptied shard has no staged copy: its CLEAR is the whole purge
+    swapShards(fs, d, staging, present.map(s => s"__shard=$s"))
     removed
+  }
+
+  private def shardDirs(fs: FileSystem, p: Path): Seq[String] =
+    fs.listStatus(p).toSeq.map(_.getPath.getName).filter(_.startsWith("__shard="))
+
+  /** CLEAR the top shard dirs `clear`, promote every staged shard, and drop
+    * the staging only once every move has landed.
+    */
+  private def swapShards(fs: FileSystem, d: Path, staging: Path, clear: Seq[String]): Unit = {
+    clear.foreach(s => fs.delete(new Path(d, s), true))
+    val staged = new Path(staging, "data")
+    FsPublish.promote(fs, shardDirs(fs, staged).map(s => new Path(staged, s) -> new Path(d, s)))
+    fs.delete(staging, true)
   }
 
   /** Bound each shard's file count: a shard that accretes more than
